@@ -10,8 +10,6 @@ import json
 
 import pytest
 
-pytestmark = pytest.mark.slow  # replay suites run many micro-batches
-
 from udacity_dsnd_projects_spark.schemas import (
     STATION,
     TURNSTILE,
@@ -385,7 +383,7 @@ def test_session_window_stream_equals_batch_sessionize(spark, tmp_path_factory):
 
 
 def test_stateful_latest_per_key(spark, tmp_path_factory):
-    """T6 — applyInPandasWithState last-write-wins: per-key state
+    """T6 — streaming-aggregate last-write-wins: per-key state
     persists across micro-batches, and a row with a LOWER sequence
     arriving in a LATER micro-batch cannot overwrite the stored winner
     (the case plain per-batch max_by upserts get wrong)."""
@@ -415,6 +413,180 @@ def test_stateful_latest_per_key(spark, tmp_path_factory):
     for r in rows:
         final[r["k"]] = (r["seq"], r["val"])
     assert final == {k: (100 + k, f"new_{k}") for k in range(6)}
+
+
+LWW_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("val", T.StringType()),
+    ]
+)
+
+
+def _append_files(spark, path: str, batches, schema) -> None:
+    """One parquet file per batch, with strictly increasing mtimes so
+    a ``maxFilesPerTrigger=1`` stream reads them in list order."""
+    import glob
+    import os
+    import time
+
+    t0 = time.time() - len(batches)
+    seen: set[str] = set()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
+        for f in set(glob.glob(f"{path}/*.parquet")) - seen:
+            os.utime(f, (t0 + i, t0 + i))
+            seen.add(f)
+
+
+def _await(q) -> None:
+    """Wait for an ``availableNow`` query; a failed query raises, a hung
+    one is stopped and fails the test."""
+    try:
+        finished = q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert finished, "streaming query still running after 120 s"
+
+
+def _run_collect(df, ckpt: str) -> list:
+    """Drain ``df`` (update mode) from checkpoint ``ckpt``; return the
+    emitted rows in epoch order."""
+    out: list = []
+    q = (
+        df.writeStream.foreachBatch(lambda b, e: out.append((e, b.collect())))
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(q)
+    return [r for _, rows in sorted(out, key=lambda x: x[0]) for r in rows]
+
+
+def test_latest_per_key_tie_break_is_order_free(spark, tmp_path):
+    """Equal-sequence rows have ONE declared winner — the larger value
+    tuple — whether the tied rows arrive in one micro-batch or in two,
+    in either order. The stream state, the stored-table merge and both
+    batch faces agree on it."""
+    from udacity_dsnd_projects_spark.streaming.sinks import (
+        compacted_table_upsert,
+        latest_per_key,
+    )
+    from udacity_dsnd_projects_spark.streaming.stateful import latest_per_key_stateful
+
+    schema = T.StructType(
+        [
+            T.StructField("station_id", T.IntegerType()),
+            T.StructField("stop_id", T.IntegerType()),
+            T.StructField("station_name", T.StringType()),
+            T.StructField("order", T.IntegerType()),
+            T.StructField("line", T.StringType()),
+        ]
+    )
+    values = ("station_name", "order", "line")
+    a = [(1, 5, "alpha", 1, "red"), (2, 7, "same", 3, "blue"), (3, 2, "low", 1, "red")]
+    b = [(1, 5, "beta", 1, "red"), (2, 7, "same", 9, "blue"), (3, 1, "lower", 1, "red")]
+    want = {1: (5, "beta", 1, "red"), 2: (7, "same", 9, "blue"), 3: (2, "low", 1, "red")}
+
+    def as_table(rows):
+        return {r["station_id"]: (r["stop_id"], *(r[c] for c in values)) for r in rows}
+
+    everything = spark.createDataFrame(a + b, schema)
+    assert as_table(latest_per_key(everything, ["station_id"], "stop_id").collect()) == want
+    batch_face = station_table_latest(everything).collect()
+    assert {r["station_id"]: tuple(r[c] for c in values) for r in batch_face} == {
+        k: v[1:] for k, v in want.items()
+    }
+
+    for name, batches in {"one": [a + b], "ab": [a, b], "ba": [b, a]}.items():
+        src, table = str(tmp_path / name / "src"), str(tmp_path / name / "table")
+        _append_files(spark, src, batches, schema)
+        emitted = _run_collect(
+            latest_per_key_stateful(
+                file_stream(spark, src, schema), "station_id", "stop_id", values
+            ),
+            str(tmp_path / name / "ck_state"),
+        )
+        assert as_table(emitted) == want, name  # last emit per key wins
+
+        q = (
+            file_stream(spark, src, schema)
+            .writeStream.foreachBatch(compacted_table_upsert(table, ["station_id"], "stop_id"))
+            .option("checkpointLocation", str(tmp_path / name / "ck_sink"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        _await(q)
+        assert as_table(spark.read.parquet(table).collect()) == want, name
+
+
+def test_stateful_latest_per_key_restart_keeps_winners(spark, tmp_path):
+    """T2 + T6 — restarted from its checkpoint, the native table still
+    holds the stored winners: lower-sequence stale rows for old keys
+    re-emit the stored winner, and new keys land."""
+    from udacity_dsnd_projects_spark.streaming.stateful import latest_per_key_stateful
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
+
+    def run():
+        return _run_collect(
+            latest_per_key_stateful(file_stream(spark, src, LWW_SCHEMA), "k", "seq", ("val",)),
+            ckpt,
+        )
+
+    _append_files(spark, src, [[(k, 100 + k, f"new_{k}") for k in range(5)]], LWW_SCHEMA)
+    first = {r["k"]: (r["seq"], r["val"]) for r in run()}
+    assert first == {k: (100 + k, f"new_{k}") for k in range(5)}
+
+    stale_and_new = [(k, k, f"stale_{k}") for k in range(5)] + [(10, 1, "n10"), (11, 2, "n11")]
+    spark.createDataFrame(stale_and_new, LWW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    second = {r["k"]: (r["seq"], r["val"]) for r in run()}
+    assert second == {**first, 10: (1, "n10"), 11: (2, "n11")}
+
+
+def test_stateful_latest_per_key_refuses_pandas_state_checkpoint(spark, tmp_path):
+    """A checkpoint written by the earlier applyInPandasWithState form
+    of the table is refused loudly on restart — never misread as the
+    aggregate's state. The remedy (docstring) is to discard it."""
+    import pandas as pd
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from udacity_dsnd_projects_spark.streaming.stateful import latest_per_key_stateful
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
+
+    def keep_max(key, pdfs, state):
+        rows = [(int(r.seq), r.val) for pdf in pdfs for r in pdf.itertuples()]
+        if state.exists:
+            rows.append(tuple(state.get))
+        best = max(rows)
+        state.update(best)
+        yield pd.DataFrame([[key[0], *best]], columns=["k", "seq", "val"])
+
+    _append_files(spark, src, [[(1, 1, "a")]], LWW_SCHEMA)
+    pandas_table = (
+        file_stream(spark, src, LWW_SCHEMA)
+        .groupBy("k")
+        .applyInPandasWithState(
+            keep_max,
+            outputStructType=LWW_SCHEMA,
+            stateStructType="seq long, val string",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    assert len(_run_collect(pandas_table, ckpt)) == 1
+
+    spark.createDataFrame([(2, 1, "b")], LWW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    native = latest_per_key_stateful(file_stream(spark, src, LWW_SCHEMA), "k", "seq", ("val",))
+    with pytest.raises(
+        StreamingQueryException,
+        match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA",
+    ):
+        _run_collect(native, ckpt)
 
 
 def test_checkpoint_restart_processes_only_new_data(spark, tmp_path_factory):
@@ -592,6 +764,63 @@ def test_compacted_table_sink_crash_recovery(spark, tmp_path):
     got = {r["k"]: r["val"] for r in spark.read.parquet(table).collect()}
     assert got == {0: "old_0", 1: "old_1", 2: "old_2", 3: "old_3", 4: "old_4", 9: "only_9"}
     assert not os.path.exists(f"{table}.bak")
+
+
+def test_compacted_table_upsert_evaluates_each_batch_once(spark, tmp_path):
+    """The sink runs the batch plan once per epoch: a counting UDF
+    between the native table and the sink sees every row exactly once
+    (the emptiness test reuses the cached reduction), and the cache is
+    released each epoch, so persistent RDDs do not pile up.
+
+    The UDF sits after the table's shuffle, because a second action on
+    the batch reuses the shuffle files and reruns only the stages after
+    them. It counts with one marker file per call, not an accumulator:
+    a take-style job such as ``isEmpty`` stops its Python workers early
+    and their accumulator updates are dropped."""
+    from udacity_dsnd_projects_spark.streaming.sinks import compacted_table_upsert
+    from udacity_dsnd_projects_spark.streaming.stateful import latest_per_key_stateful
+
+    src, table = str(tmp_path / "src"), str(tmp_path / "table")
+    batches = [[(k, 10 * e + k, f"v{e}_{k}") for k in range(5)] for e in range(4)]
+    _append_files(spark, src, batches, LWW_SCHEMA)
+
+    sc = spark.sparkContext
+    marks = tmp_path / "calls"
+    marks.mkdir()
+
+    @F.udf("boolean")
+    def counted(v):
+        import os
+        import tempfile
+
+        os.close(tempfile.mkstemp(dir=str(marks))[0])
+        return True
+
+    upsert = compacted_table_upsert(table, ["k"], "seq")
+    persistent: list[int] = []
+
+    def sink(batch_df, epoch):
+        upsert(batch_df, epoch)
+        persistent.append(sc._jsc.getPersistentRDDs().size())
+
+    table_stream = latest_per_key_stateful(
+        file_stream(spark, src, LWW_SCHEMA), "k", "seq", ("val",)
+    )
+    q = (
+        table_stream.filter(counted("val"))  # a filter, so no action prunes it
+        .writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(q)
+
+    assert len(persistent) == len(batches)
+    assert len(list(marks.iterdir())) == sum(map(len, batches))  # a row per key per batch
+    assert len(set(persistent)) == 1, persistent
+    got = {r["k"]: (r["seq"], r["val"]) for r in spark.read.parquet(table).collect()}
+    assert got == {k: (30 + k, f"v3_{k}") for k in range(5)}
 
 
 def test_faust_station_table_stream_equals_batch(spark, tmp_path_factory):

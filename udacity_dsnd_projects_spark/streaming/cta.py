@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from udacity_dsnd_projects_spark.streaming.sinks import latest_per_key
+
 
 def faust_station_transform(
     stations: DataFrame, keep_cols: tuple[str, ...] = ()
@@ -35,15 +37,14 @@ def station_table_latest(transformed: DataFrame, seq_col: str = "stop_id") -> Da
     """§3.3 batch face — the Faust table upsert
     (``faust_stream.py:71``: ``table[station.station_id] = ...``) is
     last-write-wins per ``station_id``; with a monotonic sequence
-    column the batch answer is the max-seq row per key. Uses
-    ``max_by`` (one shuffle, partial+final agg) rather than a window
-    (shuffle + sort) — cheaper at scale."""
-    value = F.struct("station_name", "order", "line")
-    return (
-        transformed.groupBy("station_id")
-        .agg(F.max_by(value, F.col(seq_col)).alias("v"))
-        .select("station_id", "v.*")
-    )
+    column the batch answer is the max-seq row per key. Shares
+    :func:`.sinks.latest_per_key` (one shuffle, partial+final agg), so
+    ties on ``seq_col`` break the same way as in the streaming table
+    and the stored-table merge."""
+    values = ("station_name", "order", "line")
+    return latest_per_key(
+        transformed.select("station_id", seq_col, *values), ["station_id"], seq_col
+    ).select("station_id", *values)
 
 
 def turnstile_summary(turnstiles: DataFrame, ksql_compat_names: bool = False) -> DataFrame:

@@ -63,8 +63,8 @@ def daily_type_counts_stream(
     AFTER its day's state was evicted re-creates the key from scratch
     and re-emits a LOW count — the one emission that must not reach
     the dashboard — and the compacted sink suppresses it: counts are
-    monotone per key while live, so ``max_by(n_events)`` keeps the
-    previously published higher count (pinned by
+    monotone per key while live, so the max-``n_events`` merge keeps
+    the previously published higher count (pinned by
     ``test_daily_counts_rollup_suppresses_resurrected_counts``).
 
     Day bucketing is ``date_trunc('day', ts)`` — SESSION-TIMEZONE

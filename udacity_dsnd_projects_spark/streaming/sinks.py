@@ -6,8 +6,9 @@ compacted on ``station_id``) and the KSQL CTAS table
 (``consumers/ksql.py:27-31``). Both are key→latest-value views of a
 stream. The engine's equivalent is a foreachBatch upsert into a
 parquet-backed table: per micro-batch, reduce the batch to its latest
-row per key, merge with the stored table, keep the winner per key,
-atomically replace.
+row per key (evaluated once and cached, so an upstream stateful plan
+runs once per epoch), merge with the stored table, keep the winner per
+key, atomically replace.
 
 The merge is idempotent (T7: at-least-once delivery composes with
 last-write-wins by sequence into exactly-once table contents), which is
@@ -20,7 +21,7 @@ is fully written before the live path is touched, and a crash at any
 point leaves either the old table or the old table's `.bak` plus the
 complete staged table — never a half-written live path. (The staging
 write also means the merge reads the live files while writing
-elsewhere, so no localCheckpoint materialization is needed.)
+elsewhere, so the live table needs no materialization.)
 """
 
 from __future__ import annotations
@@ -30,13 +31,18 @@ from pyspark.sql import functions as F
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str], seq_col: str) -> DataFrame:
-    """max_by reduction to one row per key (highest seq wins)."""
-    others = [c for c in df.columns if c not in key_cols]
-    payload = F.struct(*others)
+    """Reduce to one row per key: the highest ``seq_col`` wins, and on
+    equal ``seq_col`` the larger tuple of the other columns (in column
+    order) wins. ``max(struct(seq, ...))`` makes that tie-break
+    independent of arrival order and partitioning — the same order as
+    the streaming table, :func:`.stateful.latest_per_key_stateful`.
+    Columns keep their order."""
+    others = [c for c in df.columns if c not in key_cols and c != seq_col]
+    v = F.col("__v")
     return (
         df.groupBy(*key_cols)
-        .agg(F.max_by(payload, F.col(seq_col)).alias("__v"))
-        .select(*key_cols, "__v.*")
+        .agg(F.max(F.struct(seq_col, *others)).alias("__v"))
+        .select(*[c if c in key_cols else v[c].alias(c) for c in df.columns])
     )
 
 
@@ -47,12 +53,15 @@ def compacted_table_upsert(table_path: str, key_cols: list[str], seq_col: str):
         stream.writeStream.foreachBatch(
             compacted_table_upsert(path, ["station_id"], "stop_id")
         ).outputMode("update").start()
+
+    The upstream plan must be cacheable: on Spark 4.1.2, caching the
+    output of an ``applyInPandasWithState`` operator fails with a
+    ``ClassCastException`` (``GenericInternalRow`` to ``UnsafeRow``).
+    Built-in streaming aggregates and projections are fine.
     """
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def merge_and_swap(fresh: DataFrame, epoch_id: int) -> None:
+        spark = fresh.sparkSession
         jvm = spark._jvm
         hadoop_path = jvm.org.apache.hadoop.fs.Path
         live = hadoop_path(table_path)
@@ -70,7 +79,6 @@ def compacted_table_upsert(table_path: str, key_cols: list[str], seq_col: str):
                     f"upsert recovery: restore {table_path}.bak -> live failed"
                 )
 
-        fresh = latest_per_key(batch_df, key_cols, seq_col)
         if fs.exists(live):
             current = spark.read.parquet(table_path)
             merged = latest_per_key(
@@ -97,5 +105,17 @@ def compacted_table_upsert(table_path: str, key_cols: list[str], seq_col: str):
                 fs.rename(backup, live)
             raise IOError(f"upsert swap: rename staged -> {table_path} failed")
         fs.delete(backup, True)
+
+    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        # Cache the reduction, not ``batch_df``: caching the batch plan
+        # of a streaming aggregate fails (NoSuchElementException), and
+        # ``localCheckpoint`` leaks one persistent RDD per epoch. The
+        # count doubles as the emptiness test.
+        fresh = latest_per_key(batch_df, key_cols, seq_col).persist()
+        try:
+            if fresh.count():
+                merge_and_swap(fresh, epoch_id)
+        finally:
+            fresh.unpersist()
 
     return upsert

@@ -3,19 +3,18 @@
 The reference keeps mutable per-key state in a Faust in-memory table
 (``kafka-streaming-pipeline/consumers/faust_stream.py:32,41-71``) and in
 the dashboard's per-station models
-(``consumers/models/station.py:26-43``). A streaming ``max_by``
-aggregation reproduces that only when a monotone sequence column
-exists AND arrival order can be trusted; the exact-ordering form —
-phase 3 hard part (2) — needs an explicit state store, which in Spark
-is ``applyInPandasWithState``: user-defined per-key state that
-persists across micro-batches in the executor state store, checkpoint
-included.
+(``consumers/models/station.py:26-43``). A streaming
+``max(struct(seq, ...))`` aggregation keeps that table exactly: its
+state store holds each key's winner across micro-batches, checkpoint
+included, so late and out-of-order rows compare against the stored
+winner. Faces that need per-key state a built-in aggregate cannot
+express (gap fill, transitions) use ``applyInPandasWithState``:
+user-defined per-key state in the same executor state store.
 
-Scale notes: state is partitioned by key across executors (same hash
-shuffle as a streaming agg), each micro-batch touches only keys
-present in the batch, and the Arrow batch interface keeps the Python
-hop vectorized. State size is O(distinct keys × payload), the same as
-the Faust table it replaces.
+Scale notes: state is partitioned by key across executors (hash
+shuffle), each micro-batch touches only keys present in the batch, and
+the Arrow batch interface keeps the Python hops vectorized. State size
+is O(distinct keys × payload), the same as the Faust table it replaces.
 """
 
 from __future__ import annotations
@@ -205,54 +204,28 @@ def latest_per_key_stateful(
     the key appears in a batch (update-mode semantics, like a Faust
     changelog emit on every table write).
 
-    Unlike ``groupBy(key).agg(max_by(...))`` in update mode, the state
-    here survives any micro-batch boundary placement and reordering:
-    a late row with a lower sequence can never overwrite a newer one,
-    because the comparison happens against the stored winner, not
-    within the batch.
+    A native streaming aggregate: ``max(struct(seq, *values))`` per
+    key. Its state store holds the winner across micro-batches and
+    restarts, so a late row with a lower sequence never overwrites a
+    newer one — the comparison is against the stored winner, not just
+    within the batch. Struct ordering declares the tie-break: on equal
+    ``seq`` the larger value tuple wins, whatever the arrival order,
+    batch boundaries or partitioning (the same order as
+    :func:`.sinks.latest_per_key`).
+
+    Migration: a checkpoint written by the earlier
+    ``applyInPandasWithState`` form of this table is refused at restart
+    (``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``).
+    Discard that checkpoint; the replay from the earliest offset
+    rebuilds the state, and the compacted-table sink's seq-ordered
+    merge keeps the stored table correct meanwhile.
     """
-    fields = [updates.schema[c] for c in (key_col, seq_col, *value_cols)]
-    out_schema = T.StructType(fields)
-    state_schema = T.StructType([updates.schema[c] for c in (seq_col, *value_cols)])
+    from pyspark.sql import functions as F
 
-    def update_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            best = list(state.get)
-        else:
-            best = None
-        # vectorized batch argmax (guide §4.2): idxmax keeps the FIRST
-        # row of the max sequence, matching the old per-row strict-``>``
-        # fold (an equal-seq later row never overwrites)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = (
-                chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            )
-            cand = batch.iloc[int(batch[seq_col].to_numpy().argmax())]
-            if best is None or cand[seq_col] > best[0]:
-                best = [cand[c] for c in (seq_col, *value_cols)]
-        state.update(tuple(best))
-        yield pd.DataFrame(
-            [[key[0], *best]], columns=[key_col, seq_col, *value_cols]
-        )
-
-    # prune to (key, seq, values) before the keyed shuffle — the
-    # opaque Python hop defeats Catalyst's column pruning, so any
-    # extra stream columns would ride shuffle + Arrow for nothing
     return (
-        updates.select(key_col, seq_col, *value_cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update_fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        updates.groupBy(key_col)
+        .agg(F.max(F.struct(seq_col, *value_cols)).alias("__v"))
+        .select(key_col, "__v.*")
     )
 
 
