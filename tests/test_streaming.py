@@ -626,6 +626,116 @@ def test_checkpoint_restart_processes_only_new_data(spark, tmp_path_factory):
     assert sorted(seen) == [0, 1, 2, 3, 4, 10, 11]  # first five not replayed
 
 
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+_FILE_CONTEXT_MANAGER = f"{_CHECKPOINTING}.FileContextBasedCheckpointFileManager"
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+SUM_SCHEMA = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
+
+
+def _checkpoint_manager(spark, directory):
+    """The checkpoint file manager that a streaming query of ``spark``
+    would use for ``directory``."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(directory.as_uri()),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def _sum_by_key(spark, src: str):
+    return (
+        file_stream(spark, src, SUM_SCHEMA)
+        .groupBy("k")
+        .agg(F.count("*").alias("n"), F.sum("v").alias("total"))
+    )
+
+
+def _totals(rows) -> dict:
+    out: dict = {}
+    for k, v in rows:
+        n, total = out.get(k, (0, 0))
+        out[k] = (n + 1, total + v)
+    return out
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Local sessions write checkpoints through Hadoop's FileSystem,
+    not the default FileContext manager, which forks shell processes
+    for every file without libhadoop. Fails loudly if Spark moves the
+    class."""
+    assert (
+        _checkpoint_manager(spark, tmp_path).getClass().getName()
+        == f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_manager_refuses_to_overwrite(spark, tmp_path):
+    """A non-overwriting atomic create onto an existing file raises
+    Hadoop's FileAlreadyExistsException, which HDFSMetadataLog reads as
+    a concurrent writer, and keeps the first content."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    manager = _checkpoint_manager(spark, tmp_path)
+    target = jvm.org.apache.hadoop.fs.Path((tmp_path / "0").as_uri())
+
+    first = manager.createAtomic(target, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = manager.createAtomic(target, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError) as err:
+        second.close()
+    already_exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert already_exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
+def test_stateful_checkpoint_keeps_crc_sidecars(spark, tmp_path):
+    """A stateful query's checkpoint holds Hadoop's ``.crc`` files and
+    Spark's ``N.delta.crc`` checksum sidecars beside each state delta."""
+    src, ckpt = tmp_path / "src", tmp_path / "ck"
+    _append_files(spark, str(src), [[(i % 3, i) for i in range(9)]], SUM_SCHEMA)
+    _run_collect(_sum_by_key(spark, str(src)), str(ckpt))
+
+    for log in ("offsets", "commits", "sources/0"):
+        assert {p.name for p in (ckpt / log).iterdir()} >= {"0", ".0.crc"}, log
+    deltas = list((ckpt / "state" / "0").glob("*/1.delta"))
+    assert deltas
+    for delta in deltas:
+        assert (delta.parent / ".1.delta.crc").is_file(), delta
+        assert (delta.parent / "1.delta.crc").is_file(), delta
+
+
+@pytest.mark.parametrize("first_on_file_context", [True, False])
+def test_checkpoint_resumes_across_checkpoint_managers(spark, tmp_path, first_on_file_context):
+    """A stateful checkpoint written under Spark's FileContext manager
+    resumes under the engine default with exact totals, and the
+    reverse: the managers leave the same checkpoint layout."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
+    rows = [(i % 4, i) for i in range(12)]
+    more = [(i % 6, 100 + i) for i in range(12)]
+
+    def run(on_file_context: bool) -> dict:
+        engine_default = spark.conf.get(_MANAGER_CONF)
+        if on_file_context:
+            spark.conf.set(_MANAGER_CONF, _FILE_CONTEXT_MANAGER)
+        try:
+            manager = _checkpoint_manager(spark, tmp_path).getClass().getName()
+            assert (manager == _FILE_CONTEXT_MANAGER) == on_file_context
+            emitted = _run_collect(_sum_by_key(spark, src), ckpt)
+        finally:
+            spark.conf.set(_MANAGER_CONF, engine_default)
+        return {r["k"]: (r["n"], r["total"]) for r in emitted}
+
+    _append_files(spark, src, [rows], SUM_SCHEMA)
+    assert run(first_on_file_context) == _totals(rows)
+
+    spark.createDataFrame(more, SUM_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    # only the new file is read, and its keys update the restored totals
+    assert run(not first_on_file_context) == _totals(rows + more)
+
+
 def test_envelope_decode_tolerates_corrupt_payloads(spark):
     """Robustness of the decode chain (P2/P5): malformed envelope JSON,
     non-base64 elements, and truncated customer JSON must yield null
