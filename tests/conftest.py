@@ -13,9 +13,9 @@ if str(REPO) not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 _FAST_PROFILE_NOTICE = (
-    'FAST DEV PROFILE (-m "not slow" from pytest.ini): the driver-parity '
+    'FAST DEV PROFILE (-m "not slow" from pytest.ini): the slow '
     "suites — the full-registry oracle replica, streaming replay, and "
-    "bench floor — were DESELECTED, not run. The full suite is: "
+    "batch benchmark gate — were DESELECTED, not run. The full suite is: "
     'python -m pytest tests/ -q -m "slow or not slow"'
 )
 

@@ -3,6 +3,8 @@ driver's t2 correctness gate."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from tests.oracle import assert_matches_oracle
@@ -46,24 +48,14 @@ def test_registry_consistency():
     assert len(qs) > 0
 
 
-def test_driver_window_holds_driver_unverified_queries():
-    """The driver's CORRECTNESS report truncates at the first 50
-    entries of queries() (observed rounds 1-5), so dict order is a
-    contract. Round-15 rotation: the 3 round-14 first-verdict
-    chunk-writer operators and the 47-query stale backlog (35 r10
-    leftovers — emptying the r10 cohort — + 12 stalest r11 greens)
-    must sit INSIDE the window, and every in-window query must be
-    oracle-backed (the no-oracle estimators live behind the window
-    under tolerance tests)."""
+def test_batch_benchmark_queries_have_oracles(monkeypatch):
+    """Every query ``perfbench --workload batch_analytics`` times is
+    registered and checked against a DuckDB oracle."""
     from udacity_dsnd_projects_spark import registry
 
-    names = list(registry.queries())
-    window = set(names[:50])
-    assert names[:50] == list(registry._ROUND15_WINDOW)
-    oracles = registry.oracle_sql()
-    no_oracle = {n for n in window if n not in oracles}
-    assert not no_oracle, sorted(no_oracle)
-    must_in = set(registry._ROUND15_NEEDS_VERDICT) | set(
-        registry._ROUND15_STALE_BACKLOG
-    )
-    assert must_in <= window, sorted(must_in - window)
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "perfbench"))
+    from batch import QUERIES
+
+    qs, oracles = registry.queries(), registry.oracle_sql()
+    assert [n for n in QUERIES if n not in qs] == []
+    assert [n for n in QUERIES if n not in oracles] == []

@@ -486,7 +486,7 @@ def test_changepoint_monitor_view_equals_batch(spark, sf_dir, tmp_path_factory):
     import pytest
 
     pytest.importorskip("pyspark")
-    from bench import _ts_chunk_edges, _write_chunks
+    from tests.replay import _ts_chunk_edges, _write_chunks
     from udacity_dsnd_projects_spark.operators.analytics import (
         cusum_changepoint_report,
     )

@@ -1,6 +1,5 @@
-"""Round-9 regression tests (VERDICT r8 tasks 1, 3, 5): the bench
-dual-total surface (legacy17 subtotal + widened headline), the stateful
-late-row contract (out-of-order replay), and the deterministic
+"""Round-9 regression tests (VERDICT r8 tasks 3, 5): the stateful
+late-row contract (out-of-order replay) and the deterministic
 stream-replay chunk writer."""
 
 from __future__ import annotations
@@ -16,61 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-# --- task 1: bench dual-total surface --------------------------------------
-
-
-def test_bench_headline_decomposes_into_legacy17_plus_additions():
-    """The widened headline must keep the ratchet lineage intact: the
-    LEGACY17 tuple is frozen (the exact 17 queries recorded every round
-    since r2), the round-9 additions are disjoint from it, and every
-    headline query resolves in the registry (a renamed registry entry
-    would silently shrink the bench)."""
-    import bench
-    from udacity_dsnd_projects_spark import registry
-
-    assert len(bench.LEGACY17) == 17
-    assert bench.LEGACY17[0] == "risk_join" and bench.LEGACY17[-1] == "passage_dedup"
-    assert set(bench.ROUND9_ADDITIONS) == {
-        "semantic_dedup",
-        "knn_graph",
-        "bm25_search",
-        "incremental_dedup",
-        "customer_rfm",
-        "market_basket_pairs",
-    }
-    assert set(bench.ROUND10_ADDITIONS) == {
-        "winnowing_overlap_pairs",
-        "quality_drift_report",
-        "semantic_contamination",
-    }
-    assert set(bench.ROUND11_ADDITIONS) == {
-        "boilerplate_strip",
-        "winnowing_strip",
-    }
-    assert set(bench.ROUND12_ADDITIONS) == {
-        "bpe_apply_merges",
-        "markup_strip",
-    }
-    assert set(bench.ROUND13_ADDITIONS) == {"bpe_encode_chunks"}
-    assert set(bench.ROUND14_ADDITIONS) == {"pack_deduped_chunks"}
-    assert set(bench.ROUND15_ADDITIONS) == {"curriculum_pack_order"}
-    adds = (
-        bench.ROUND9_ADDITIONS
-        + bench.ROUND10_ADDITIONS
-        + bench.ROUND11_ADDITIONS
-        + bench.ROUND12_ADDITIONS
-        + bench.ROUND13_ADDITIONS
-        + bench.ROUND14_ADDITIONS
-        + bench.ROUND15_ADDITIONS
-    )
-    assert not set(bench.LEGACY17) & set(adds)
-    assert len(set(adds)) == len(adds)
-    assert bench.HEADLINE == bench.LEGACY17 + adds
-    qs = registry.queries()
-    missing = [n for n in bench.HEADLINE if n not in qs]
-    assert not missing, f"headline queries absent from registry: {missing}"
-
-
 # --- task 5: deterministic replay chunk ordering ---------------------------
 
 
@@ -80,7 +24,7 @@ def test_write_chunks_orders_by_name_and_mtime(spark, sf_dir, tmp_path):
     AND strictly-increasing explicit mtimes (Spark's FileStreamSource
     sorts by (mtime, path) — both keys now agree), and the union of the
     chunks is exactly the input rows."""
-    from bench import _ts_chunk_edges, _write_chunks
+    from tests.replay import _ts_chunk_edges, _write_chunks
     from udacity_dsnd_projects_spark.sources.catalog import load_table
 
     ev = load_table(spark, "events", sf_dir)
@@ -255,7 +199,7 @@ def test_observed_batch_metrics_ride_the_action(spark, sf_dir):
 def test_observed_stream_metrics_per_micro_batch(spark, sf_dir, tmp_path_factory):
     """The streaming face surfaces the same metrics per micro-batch in
     the query progress — batch sums must equal the corpus totals."""
-    from bench import _ts_chunk_edges, _write_chunks
+    from tests.replay import _ts_chunk_edges, _write_chunks
     from udacity_dsnd_projects_spark.metrics import observed_stream
     from udacity_dsnd_projects_spark.sources.catalog import load_table
     from udacity_dsnd_projects_spark.streaming.sources import file_stream
@@ -789,7 +733,7 @@ def test_daily_type_anomaly_stream_equals_batch(spark, sf_dir, tmp_path_factory)
     replay of the events table through the watermarked daily-count
     stream + compacted-table upsert, scored by the SHARED scorer, must
     equal the batch daily_type_anomaly answer row-for-row."""
-    from bench import _ts_chunk_edges, _write_chunks
+    from tests.replay import _ts_chunk_edges, _write_chunks
     from udacity_dsnd_projects_spark.operators.analytics import daily_type_anomaly
     from udacity_dsnd_projects_spark.sources.catalog import load_table
     from udacity_dsnd_projects_spark.streaming.monitor import (

@@ -8,8 +8,7 @@ the real work) and surface:
 
 - batch: on the ``pyspark.sql.Observation`` handle after any action;
 - streaming: per micro-batch in ``StreamingQueryProgress
-  .observedMetrics`` — the same dictionary the bench's peak-state
-  metric reads, so a quality alarm rides the progress stream a
+  .observedMetrics``, so a quality alarm rides the progress stream a
   monitoring agent already consumes.
 
 This is the engine's answer to side-channel quality counters (Beam

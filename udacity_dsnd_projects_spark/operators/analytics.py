@@ -1,9 +1,10 @@
-"""Headline analytical queries — the bench workload.
+"""Headline analytical queries — the batch benchmark workload.
 
 TPC-H-shaped queries over the corpus exercising the §2 inventory
 end-to-end at scale: scan + pushed filter + broadcast dims + partial
-agg + shuffle agg + sort. These are what ``bench.py`` times at sf0.1
-and what a 1000-executor cluster would actually run.
+agg + shuffle agg + sort. ``perfbench/run.py --workload
+batch_analytics`` times the headline ones, and they are what a
+1000-executor cluster would actually run.
 """
 
 from __future__ import annotations

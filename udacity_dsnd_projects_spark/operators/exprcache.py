@@ -4,7 +4,7 @@ Building a large expression tree through the PySpark DSL costs one
 py4j round trip (~1 ms) per Column operation: a baked BPE replace
 chain is hundreds of calls, a K×dim centroid-distance argmin is
 500+ — real driver latency (0.4-0.8 s) paid on EVERY query
-construction, and the bench constructs every query twice (best-of-2).
+construction, and a benchmark constructs every query once per pass.
 The finished Column is an immutable unresolved expression over fixed
 input column names: one instance serves every plan in the session
 (the analyzer resolves lambda variables per plan occurrence; trees

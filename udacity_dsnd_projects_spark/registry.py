@@ -63,23 +63,6 @@ def oracle_sql() -> dict[str, str]:
     return {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
 
 
-# ==========================================================================
-# DRIVER-VERIFICATION WINDOW — the driver's CORRECTNESS report truncates
-# at the first 50 entries of ``queries()`` (confirmed empirically in
-# rounds 1-5), so dict ORDER is part of the contract. Since round 6 the
-# window is DECLARED as an explicit tuple at the bottom of this module
-# (``_ROUND6_WINDOW``) and ``_REGISTRY`` is reordered once after all
-# registrations — the register() blocks below are grouped by theme, not
-# by window membership. Rotation policy: every query whose
-# implementation changed this round, plus every query that has never
-# received a driver verdict, goes in the window; remaining slots
-# re-verify the STALEST prior greens. Everything behind the window stays
-# covered by the local oracle replica (tests/test_queries.py) running
-# under driver-identical session confs (session.get_spark pins the
-# timestamp confs — see round-3 postmortem in VERDICT.md).
-# ==========================================================================
-
-# --- ROUND-5 PRIORITY: changed this round / never driver-verified ----------
 # block-size cap added (impl + oracle mirror — VERDICT r4 item 1)
 register("fuzzy_name_pairs", _joins.fuzzy_name_pairs, _joins.ORACLE_FUZZY_NAME_PAIRS)
 # NEW: mixture plan materialized as a deterministic hash-threshold sample
@@ -506,9 +489,7 @@ register("url_dedup", _web.url_dedup, _web.ORACLE_URL_DEDUP)
 register(  # applyInPandas grouped-map face, asserted-identical -> same oracle
     "lang_zscore_pandas", _pipe.lang_zscore_pandas, _pipe.ORACLE_LANG_ZSCORE
 )
-# curation.py changed in r4 while this sat behind the window since r2
 register("corpus_curation", _cur.corpus_curation, _cur.ORACLE_CORPUS_CURATION)
-# broadcast-rank rewrite landed r4 — keep a fresh driver green on record
 register("trade_pagerank", _graph.trade_pagerank, _graph.ORACLE_TRADE_PAGERANK)
 # ranks.py offset join-back made null-safe this round — every
 # exact_group_rank / exact_group_cumsum caller re-verifies:
@@ -519,12 +500,9 @@ register(
 register("seq_pack_bins", _pipe.seq_pack_bins, _pipe.ORACLE_SEQ_PACK_BINS)
 register("seq_pack_concat", _pipe.seq_pack_concat, _pipe.ORACLE_SEQ_PACK_CONCAT)
 register("shard_assign", _pipe.shard_assign, _pipe.ORACLE_SHARD_ASSIGN)
-
-# --- Window filler: prior-round greens re-verified while slots exist -------
 register("lang_zscore", _pipe.lang_zscore, _pipe.ORACLE_LANG_ZSCORE)
 
-# --- TPC-H long-tail shapes + round-5 additions (rotated into the
-# round-6 window via _ROUND6_WINDOW; all driver-verified r6) ----------------
+# --- TPC-H long-tail shapes + round-5 additions ---------------------------
 register(
     "regional_supplier_volume",
     _rel2.regional_supplier_volume,
@@ -627,15 +605,7 @@ register("sessionize", _win.sessionize, _win.ORACLE_SESSIONIZE)
 register("funnel_conversion", _an.funnel_conversion, _an.ORACLE_FUNNEL_CONVERSION)
 register("weekly_retention", _an.weekly_retention, _an.ORACLE_WEEKLY_RETENTION)
 register("repetition_score", _pipe.repetition_score, _pipe.ORACLE_REPETITION_SCORE)
-# ==========================================================================
-# BEHIND THE 50-ENTRY WINDOW — every query below is driver-green from a
-# prior round (CORRECTNESS_r01..r04.json), a redundant face of a
-# verified query sharing the same oracle, or a no-oracle estimator
-# checked with tolerance tests in pytest. All remain registered and
-# covered by the local oracle replica every round.
-# ==========================================================================
 
-# rotated out this round (r4/r3 green, implementations untouched)
 register(
     "ngram_contamination",
     _pipe.ngram_contamination,
@@ -973,1161 +943,3 @@ register(
     _pipe.shard_balance_report,
     _pipe.ORACLE_SHARD_BALANCE_REPORT,
 )
-
-# ==========================================================================
-# DRIVER WINDOW (round 6) — the driver's CORRECTNESS report truncates at
-# the first 50 entries of ``queries()``, so dict order is a contract.
-# Instead of physically reordering the register() blocks each round, the
-# window is DECLARED below and ``_REGISTRY`` is reordered once after all
-# registrations: window entries first (in tuple order), everything else
-# behind in original registration order. Future rotations edit one tuple.
-# ==========================================================================
-
-#: Queries that must receive a driver verdict in round 6: the 21 round-5
-#: overflow queries (never driver-verified — VERDICT r5 item 1) plus
-#: everything added or semantically changed this round.
-_ROUND6_NEEDS_VERDICT = (
-    # --- round-5 overflow (local-replica green only, never in a window) ---
-    "regional_supplier_volume",
-    "forecast_revenue",
-    "national_market_share",
-    "product_profit",
-    "returned_item_customers",
-    "promo_revenue_share",
-    "part_supplier_diversity",
-    "large_volume_orders",
-    "bracket_revenue",
-    "min_cost_supplier",
-    "important_part_value",
-    "dominant_part_suppliers",
-    "sliding_window_chunks",
-    "curriculum_order",
-    "language_confusion_matrix",  # ADVICE r5: recall_share -> row_share
-    "skew_profile",
-    "corpus_datacard",
-    "unpivot_agg",  # ADVICE r5: max_balance now rounds in decimal
-    "rolling_distinct_users",
-    "exact_quantiles",
-    "grouping_sets_agg",  # ADVICE r5: parameterized sql(), no temp view
-    # --- brand-new in round 6 ---
-    "ivf_index_upsert",
-    "ivf_staleness_report",
-    "unpivot_agg_sql",
-    "grouping_sets_agg_df",
-    "knn_label_agreement",
-    "embedding_drift_by_source",
-    "bpe_pair_counts",
-    "split_leakage_report",
-    "char_bigram_lm",
-    "event_transition_matrix",
-    "minhash_calibration_report",
-    "ngram_novelty",
-    "tokenizer_fertility",
-    "market_basket_pairs",
-    "daily_type_anomaly",
-    "source_overlap_matrix",
-    "dup_cluster_histogram",
-    "near_dup_triangles",
-    "value_trend_by_type",
-    "session_path_topk",
-    "customer_rfm",
-    "quantization_error_report",
-    "ship_latency_quantiles",
-    "label_separation_report",
-    "dedup_method_agreement",
-    "nation_supplier_hhi",
-    "dow_seasonality",
-    "user_type_entropy",
-)
-
-#: Window fillers — stalest prior driver greens (last verdict r1, then
-#: r2, alphabetical within a round; estimators without oracles stay
-#: behind the window so every window entry carries a full hash check).
-_ROUND6_STALE_REVERIFY = (
-    # last driver verdict: round 1
-    "arithmetic_rounding",
-    "array_subscript",
-    "column_equality_filter",
-    "count_distinct",
-    "cube_agg",
-    "date_parts",
-    "distinct_values",
-    "join_anti",
-    "join_cross",
-    "join_full_outer",
-    "join_semi",
-    "json_get",
-    "json_map_explode",
-    "risk_join_sql",
-    "set_intersect",
-    "window_lag_lead",
-    # last driver verdict: round 2 (stalest first, alphabetical)
-    "array_explode",
-    "avg_per_group",
-    "base64_roundtrip",
-    "case_when_mapping",
-    "cast_projection",
-    "grouped_count",
-    "join_asof",
-    "join_broadcast_dim",
-    "join_enrichment_chain",
-    "join_left",
-    "json_parse_flatten",
-    "latest_per_key",
-    "null_reject_filter",
-)
-
-_WINDOW = 50
-_ROUND6_WINDOW = _ROUND6_NEEDS_VERDICT + _ROUND6_STALE_REVERIFY[
-    : _WINDOW - len(_ROUND6_NEEDS_VERDICT)
-]
-
-# ==========================================================================
-# DRIVER WINDOW (round 8) — round 7 was a null round (no builder commits,
-# driver re-verified the round-6 window verbatim), so the whole r1/r2
-# stale backlog — 44 queries whose newest driver verdict is 6–7 rounds
-# old (VERDICT r7 task 1) — now fits in one window alongside 5 round-3
-# fillers. Staleness derived by unioning CORRECTNESS_r{1..7}.json.
-# ==========================================================================
-
-#: The 44 r1/r2-stale queries (last driver verdict round 1 or 2; every
-#: one re-checked green by the local oracle replica each round since).
-#: Order: r1 cohort first (stalest), then r2, alphabetical within each.
-_ROUND8_STALE_BACKLOG = (
-    # last driver verdict: round 1 (15)
-    "array_subscript",
-    "column_equality_filter",
-    "count_distinct",
-    "cube_agg",
-    "date_parts",
-    "distinct_values",
-    "join_anti",
-    "join_cross",
-    "join_full_outer",
-    "join_semi",
-    "json_get",
-    "json_map_explode",
-    "risk_join_sql",
-    "set_intersect",
-    "window_lag_lead",
-    # last driver verdict: round 2 (29)
-    "array_explode",
-    "avg_per_group",
-    "base64_roundtrip",
-    "case_when_mapping",
-    "cast_projection",
-    "grouped_count",
-    "join_asof",
-    "join_broadcast_dim",
-    "join_enrichment_chain",
-    "join_left",
-    "json_parse_flatten",
-    "latest_per_key",
-    "null_reject_filter",
-    "pivot_agg",
-    "revenue_by_nation",
-    "rollup_agg",
-    "set_except",
-    "sort_limit",
-    "split_derive",
-    "stats_per_group",
-    "string_normalize",
-    "table_profile",
-    "top_k_per_group",
-    "top_unshipped_orders",
-    "topic_dispatch_filter",
-    "union_fan_in",
-    "value_routing",
-    "window_rank",
-    "window_running_sum",
-)
-
-#: Queries whose implementation changed in round 8 and therefore need a
-#: fresh driver verdict (rotation contract): customer_rfm gained
-#: localCheckpoints between its three exact_group_rank passes (VERDICT
-#: r7 task 3) — result-identical by design, but the driver should prove
-#: it.
-_ROUND8_NEEDS_VERDICT = ("customer_rfm",)
-
-#: Window fillers — the 5 stalest round-3 greens (alphabetical; the
-#: remaining 8 r3 queries head the round-9 reverify queue).
-_ROUND8_R3_FILLERS = (
-    "cosine_topk_bruteforce",
-    "cosine_topk_ivf",
-    "doc_fingerprint",
-    "embedding_lsh_buckets",
-    "embedding_near_dup",
-)
-
-_ROUND8_WINDOW = (
-    _ROUND8_NEEDS_VERDICT + _ROUND8_STALE_BACKLOG + _ROUND8_R3_FILLERS
-)
-
-#: Queries added AFTER the round-8 window filled. Round 9 MUST rotate
-#: these to the window front before re-verifying anything else — build
-#: the round-9 guard from this list, not hand-collected.
-_ROUND9_ROTATION_CANDIDATES: tuple[str, ...] = ()
-
-# --- Import-time guards (contract checks, not debug asserts: must
-# --- survive python -O) ----------------------------------------------------
-if len(_ROUND8_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-8 window holds {len(_ROUND8_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND8_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-8 window")
-for _q in _ROUND8_WINDOW + _ROUND9_ROTATION_CANDIDATES:
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND8_NEEDS_VERDICT + _ROUND8_STALE_BACKLOG:
-    if _q not in _ROUND8_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND9_ROTATION_CANDIDATES:
-    if _q in _ROUND8_WINDOW:
-        raise RuntimeError(
-            f"round-8 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-8 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 9) — the round-8 window cleared the r1/r2
-# backlog, leaving the 8 remaining round-3 greens and the 39 round-4
-# greens as the stalest verdicts (VERDICT r8 task 2; staleness derived
-# by unioning CORRECTNESS_r{1..8}.json). 3 round-9 needs-verdict
-# entries + all 47 r3/r4 stales saturate the window exactly (no
-# fillers — see _ROUND9_R5_FILLERS).
-# ==========================================================================
-
-#: Queries whose implementation changed (or that are NEW) in round 9
-#: and therefore need a fresh driver verdict (rotation contract):
-#: - simhash_calibration_report: NEW — hamming-side calibration
-#:   readout (VERDICT r8 task 9).
-#: - daily_type_anomaly: scoring half extracted into
-#:   score_daily_counts (shared with the new streaming monitor face) —
-#:   result-identical by design, but the driver should prove it.
-#: - customer_rfm: the three exact_group_rank passes fused into one
-#:   exact_multi_rank (one sketch scan, one grouping-sets count scan,
-#:   three windows in one plan) — bit-identical ranks by design,
-#:   ~40% faster measured; the driver should prove the identity.
-_ROUND9_NEEDS_VERDICT = (
-    "simhash_calibration_report",
-    "daily_type_anomaly",
-    "customer_rfm",
-)
-
-#: The 47 stale queries: the 8 r3-era greens first (stalest), then the
-#: 39 r4-era greens, alphabetical within each cohort.
-_ROUND9_STALE_BACKLOG = (
-    # last driver verdict: round 3 (8)
-    "exact_dedup",
-    "media_byte_stats",
-    "minhash_lsh_pairs",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "pricing_summary",
-    "simhash_fingerprints",
-    "simhash_near_dup_pairs",
-    # last driver verdict: round 4 (39)
-    "corr_panel",
-    "cosine_scores_pandas",
-    "decayed_user_score",
-    "embedding_centroids",
-    "embedding_quantize",
-    "frame_sample_stats",
-    "funnel_conversion",
-    "hash_split",
-    "hourly_event_rollup",
-    "interval_count_join",
-    "iqr_outliers",
-    "kmeans_assign",
-    "language_id",
-    "media_feature_pipeline",
-    "media_resize_stats",
-    "near_dup_components",
-    "ngram_contamination",
-    "passage_dedup",
-    "passage_source_matrix",
-    "perplexity_score",
-    "pii_scrub",
-    "price_histogram",
-    "quality_score",
-    "redis_envelope_decode",
-    "repetition_score",
-    "risk_join",
-    "rolling_avg_24h",
-    "salted_supplier_rollup",
-    "scd2_history",
-    "sessionize",
-    "simhash_fingerprints_pandas",
-    "source_mixture_weights",
-    "stratified_sample",
-    "substring_dedup",
-    "tfidf_top_terms",
-    "timestamp_convert",
-    "token_stats",
-    "weekly_retention",
-    "word_entropy",
-)
-
-#: No round-5 fillers: 3 needs-verdict + 47 stale saturate the window
-#: exactly; the 50 r5 greens head the round-10 reverify queue.
-_ROUND9_R5_FILLERS: tuple[str, ...] = ()
-
-_ROUND9_WINDOW = (
-    _ROUND9_NEEDS_VERDICT + _ROUND9_STALE_BACKLOG + _ROUND9_R5_FILLERS
-)
-
-#: Queries added or CHANGED after the round-9 window saturated (3
-#: needs-verdict + 47 stale = 50 exactly). Round 10 MUST rotate these
-#: to the window front before re-verifying anything else — build the
-#: round-10 guard from this list, not hand-collected. The first three
-#: are result-identical plan improvements (local oracle replica green
-#: at sf0.01 AND sf0.1) awaiting their driver verdict; every entry
-#: after them is a NEW operator needing a FIRST verdict, not an
-#: identity check:
-#: - quality_topk_filter: length+TTR rank passes fused into one
-#:   exact_multi_rank (grouped) — pass-1 window no longer re-executes
-#:   ~3x inside pass 2's scans.
-#: - curriculum_order: phase frame materialized before the position
-#:   pass (same 3x re-execution fix).
-#: - vocab_coverage: rank frame materialized before the cumsum pass
-#:   (same fix).
-#: - boilerplate_strip: NEW — CCNet/C4-style within-source boilerplate
-#:   removal with verified cleaned-text reconstruction.
-#: - k_anonymity_report: NEW — QI group-size release audit (the
-#:   structured-data privacy gate next to pii_scrub).
-#: - l_diversity_report: NEW — the homogeneity-attack companion gate
-#:   (distinct sensitive values per QI group, not group size).
-#: - decontaminate_corpus: NEW — the decontamination action face
-#:   (drop docs flagged by the ngram_contamination signal, per-lang
-#:   retention rollup).
-#: - t_closeness_report: NEW — the third privacy gate (normalized
-#:   1-D EMD of each QI group's sensitive distribution vs global).
-_ROUND10_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "quality_topk_filter",
-    "curriculum_order",
-    "vocab_coverage",
-    "boilerplate_strip",
-    "k_anonymity_report",
-    "l_diversity_report",
-    "decontaminate_corpus",
-    "t_closeness_report",
-)
-
-# --- Import-time guards (contract checks, not debug asserts: must
-# --- survive python -O) ----------------------------------------------------
-if len(_ROUND9_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-9 window holds {len(_ROUND9_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND9_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-9 window")
-for _q in _ROUND9_WINDOW + _ROUND10_ROTATION_CANDIDATES:
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND9_NEEDS_VERDICT + _ROUND9_STALE_BACKLOG:
-    if _q not in _ROUND9_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND10_ROTATION_CANDIDATES:
-    if _q in _ROUND9_WINDOW:
-        raise RuntimeError(
-            f"round-9 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-9 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 10) — the 8 _ROUND10_ROTATION_CANDIDATES lead
-# (3 result-identical perf changes + 5 NEW operators needing a FIRST
-# verdict; VERDICT r9 task 2), then the 42 stalest oracle-backed r5
-# greens (staleness derived by unioning CORRECTNESS_r{1..9}.json; the
-# r5 cohort is 48 candidates after quality_topk_filter/vocab_coverage
-# moved into the needs-verdict block, so 6 leftovers head round 11 —
-# see _ROUND11_R5_LEFTOVERS). The two r1-era estimators
-# (approx_count_distinct, quantile_sketch) stay OUT by design: every
-# in-window entry must be oracle-backed, and they are tolerance-tested
-# instead.
-# ==========================================================================
-
-#: t_closeness_report changed again IN round 10 (the EMD accumulation
-#: hardened to pre-rounded DECIMAL terms per the cross-engine float
-#: rule, VERDICT r9 task 3) — it was already a first-verdict rotation
-#: candidate, so it still needs exactly one verdict.
-_ROUND10_NEEDS_VERDICT = _ROUND10_ROTATION_CANDIDATES
-
-#: The 42 stalest oracle-backed queries: all r5-era greens,
-#: alphabetical (one flat cohort — every candidate shares the same
-#: last-verdict round).
-_ROUND10_STALE_BACKLOG = (
-    "ann_recall_report",
-    "bm25_search",
-    "ccnet_perplexity_bucket",
-    "cdc_merge",
-    "cluster_quality",
-    "corpus_curation",
-    "customer_order_distribution",
-    "decile_stats",
-    "dedup_priority",
-    "domain_quality_filter",
-    "domain_stats",
-    "dsir_importance_weights",
-    "fuzzy_name_pairs",
-    "gopher_quality_filter",
-    "hybrid_retrieval_fusion",
-    "idle_customer_balance",
-    "incremental_dedup",
-    "knn_graph",
-    "lang_zscore",
-    "lang_zscore_pandas",
-    "late_order_priorities",
-    "lone_late_supplier_orders",
-    "media_dedup",
-    "mixture_sample",
-    "mixture_sample_accounting",
-    "mixture_upsample",
-    "nation_trade_volume",
-    "near_dup_rate_by_source",
-    "nfc_normalize",
-    "pack_efficiency",
-    "quantized_cosine_topk",
-    "robust_scale",
-    "semantic_dedup",
-    "seq_pack_bins",
-    "seq_pack_concat",
-    "session_window_rollup",
-    "shard_assign",
-    "shingle_containment_pairs",
-    "small_quantity_revenue",
-    "snapshot_diff",
-    "timeseries_gap_fill",
-    "token_bigram_pmi",
-)
-
-#: The 6 r5 greens the 42 stale slots could not hold — they MUST head
-#: round 11's stale backlog (stalest remaining cohort).
-_ROUND11_R5_LEFTOVERS = (
-    "top_revenue_suppliers",
-    "trade_pagerank",
-    "url_dedup",
-    "url_normalize",
-    "vocab_oov_rate",
-    "weighted_reservoir_sample",
-)
-
-_ROUND10_WINDOW = _ROUND10_NEEDS_VERDICT + _ROUND10_STALE_BACKLOG
-
-#: Queries added or CHANGED after the round-10 window filled. Round 11
-#: MUST rotate these to the window front before re-verifying anything
-#: else — build the round-11 guard from this list, not hand-collected.
-#: Both are NEW round-10 operators needing a FIRST verdict:
-#: - quality_drift_report: per-(lang, source) quality-distribution EMD
-#:   gate (the t-closeness grid machinery over the document corpus).
-#: - guard_metrics_report: observe-API guard counters returned as a
-#:   one-row frame so the driver proves they equal direct aggregates.
-#: - semantic_contamination: embedding-space eval-leakage gate (top-1
-#:   cosine vs a broadcast benchmark set, scale-relative DECIMAL flag).
-#: - winnowing_fingerprints: MOSS winnowing fingerprint set — the
-#:   position-robust substring-matching fingerprint.
-#: - winnowing_overlap_pairs: the MOSS match stage over that index.
-#: - winnowing_density_report: the family's calibration readout
-#:   (observed fingerprint density vs the theoretical 2/(w+1)).
-#: - contamination_method_agreement: n-gram vs embedding gate overlap
-#:   statistics (the dedup_method_agreement pattern).
-#: - embedding_health_report: pre-index vector-sanity gate (null /
-#:   non-finite / zero-norm / ragged-dimension counts + norm stats,
-#:   per label via rollup — one scan, labels+1 rows).
-#: - shard_balance_report: per-shard token-mass straggler readout for
-#:   shard_assign (docs are balanced by construction; token mass is
-#:   what stragglers follow) — payload fused into the rank scan.
-#: - ngram_jaccard_pairs: CHANGED late in round 10 (the capped
-#:   inverted-index self-join factored into the shared
-#:   _capped_pair_counts substrate — result-identical by design, but
-#:   its last verdict predates the refactor; the containment /
-#:   winnowing co-users of the substrate are already in the r10
-#:   window or above).
-_ROUND11_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "quality_drift_report",
-    "guard_metrics_report",
-    "semantic_contamination",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "winnowing_density_report",
-    "contamination_method_agreement",
-    "embedding_health_report",
-    "shard_balance_report",
-    "ngram_jaccard_pairs",
-    # NEW late in round 10: PII prevalence triage gate (see the
-    # register() call for the rationale) — first verdict pending.
-    "pii_prevalence_report",
-    # CHANGED late in round 10: conversion denominator wrapped in
-    # NULLIF on both engine sides so an entrant-less funnel reports
-    # NULL instead of an ANSI divide-by-zero — result-identical on any
-    # corpus with signup events.
-    "funnel_conversion",
-    # CHANGED late in round 10: NULL media payloads now yield null
-    # features per the extract_features docstring contract instead of
-    # crashing the Arrow worker — result-identical on non-null
-    # corpora. (nfc_normalize got the same NULL-propagation fix but
-    # already sits in the round-10 window's stale backlog.)
-    "media_feature_pipeline",
-)
-
-# --- Import-time guards (contract checks, not debug asserts: must
-# --- survive python -O) ----------------------------------------------------
-if len(_ROUND10_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-10 window holds {len(_ROUND10_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND10_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-10 window")
-for _q in (
-    _ROUND10_WINDOW + _ROUND11_ROTATION_CANDIDATES + _ROUND11_R5_LEFTOVERS
-):
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND10_NEEDS_VERDICT + _ROUND10_STALE_BACKLOG:
-    if _q not in _ROUND10_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND11_ROTATION_CANDIDATES + _ROUND11_R5_LEFTOVERS:
-    if _q in _ROUND10_WINDOW:
-        raise RuntimeError(
-            f"round-10 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-10 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 11) — the 13 _ROUND11_ROTATION_CANDIDATES lead
-# (10 NEW round-10 operators needing a FIRST verdict + 3 changed
-# post-window: ngram_jaccard_pairs / funnel_conversion /
-# media_feature_pipeline; VERDICT r10 task 1), then the 6 r5 leftovers
-# (stalest cohort — declared at _ROUND11_R5_LEFTOVERS), then the 31
-# alphabetically-first of the 47 r7-era greens (staleness derived by
-# unioning CORRECTNESS_r{1..10}.json; the 16 r7 leftovers head round
-# 12's backlog — see _ROUND12_R7_LEFTOVERS). The two r1-era estimators
-# (approx_count_distinct, quantile_sketch) stay OUT by design: every
-# in-window entry must be oracle-backed, and they are tolerance-tested
-# instead.
-# ==========================================================================
-
-_ROUND11_NEEDS_VERDICT = _ROUND11_ROTATION_CANDIDATES
-
-#: 6 r5 leftovers first (the stalest greens anywhere), then the 31
-#: alphabetically-first r7 greens (one flat cohort — every r7
-#: candidate shares the same last-verdict round, so alphabetical is
-#: the declared tiebreak).
-_ROUND11_STALE_BACKLOG = _ROUND11_R5_LEFTOVERS + (
-    "arithmetic_rounding",
-    "bpe_pair_counts",
-    "bracket_revenue",
-    "char_bigram_lm",
-    "corpus_datacard",
-    "dedup_method_agreement",
-    "dominant_part_suppliers",
-    "dow_seasonality",
-    "dup_cluster_histogram",
-    "embedding_drift_by_source",
-    "event_transition_matrix",
-    "exact_quantiles",
-    "forecast_revenue",
-    "grouping_sets_agg",
-    "grouping_sets_agg_df",
-    "important_part_value",
-    "ivf_index_upsert",
-    "ivf_staleness_report",
-    "knn_label_agreement",
-    "label_separation_report",
-    "language_confusion_matrix",
-    "large_volume_orders",
-    "market_basket_pairs",
-    "min_cost_supplier",
-    "minhash_calibration_report",
-    "nation_supplier_hhi",
-    "national_market_share",
-    "near_dup_triangles",
-    "ngram_novelty",
-    "part_supplier_diversity",
-    "product_profit",
-)
-
-#: The 16 r7 greens the 31 stale slots could not hold — they MUST head
-#: round 12's stale backlog (stalest remaining cohort after this
-#: round's verdicts land).
-_ROUND12_R7_LEFTOVERS = (
-    "promo_revenue_share",
-    "quantization_error_report",
-    "regional_supplier_volume",
-    "returned_item_customers",
-    "rolling_distinct_users",
-    "session_path_topk",
-    "ship_latency_quantiles",
-    "skew_profile",
-    "sliding_window_chunks",
-    "source_overlap_matrix",
-    "split_leakage_report",
-    "tokenizer_fertility",
-    "unpivot_agg",
-    "unpivot_agg_sql",
-    "user_type_entropy",
-    "value_trend_by_type",
-)
-
-_ROUND11_WINDOW = _ROUND11_NEEDS_VERDICT + _ROUND11_STALE_BACKLOG
-
-#: Queries added or CHANGED after the round-11 window filled. Round 12
-#: MUST rotate these to the window front before re-verifying anything
-#: else — build the round-12 guard from this list, not hand-collected.
-#: - winnowing_strip: NEW round-11 operator (the MOSS action face) —
-#:   first verdict pending.
-#: - everything else: result-identical plan changes from round 11's
-#:   layout-aware substrate spread (_spread_for_hashing — the shingle
-#:   /winnowing/vectorized-kernel openers now skip the text-sized
-#:   exchange when the scan already parallelizes) and, for the
-#:   connected-components consumers, the CC loop's scoped
-#:   constraint-propagation disable. The in-window co-users
-#:   (ngram_jaccard_pairs, minhash_calibration_report,
-#:   dedup_method_agreement, ngram_novelty, dup_cluster_histogram,
-#:   near_dup_triangles, the winnowing trio) get their round-11
-#:   verdicts on the changed plans; these are the consumers whose last
-#:   verdict predates the change. source_overlap_matrix also appears
-#:   in _ROUND12_R7_LEFTOVERS (it is both stale AND changed) — round
-#:   12's window builder dedupes.
-_ROUND12_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "winnowing_strip",
-    # NEW round-11 operators, first verdict pending:
-    "markup_density_report",
-    "k_anonymize_release",
-    "cusum_changepoint_report",
-    "media_type_mismatch_report",
-    "ivf_probe_sweep",
-    "screen_funnel_report",
-    "corpus_curation",
-    "dedup_priority",
-    "incremental_dedup",
-    "minhash_lsh_pairs",
-    "minhash_signatures",
-    "near_dup_components",
-    "near_dup_rate_by_source",
-    "shingle_containment_pairs",
-    "simhash_calibration_report",
-    "simhash_fingerprints",
-    "simhash_fingerprints_pandas",
-    "simhash_near_dup_pairs",
-    "source_overlap_matrix",
-)
-
-if len(_ROUND11_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-11 window holds {len(_ROUND11_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND11_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-11 window")
-for _q in (
-    _ROUND11_WINDOW + _ROUND12_ROTATION_CANDIDATES + _ROUND12_R7_LEFTOVERS
-):
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND11_NEEDS_VERDICT + _ROUND11_STALE_BACKLOG:
-    if _q not in _ROUND11_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND12_ROTATION_CANDIDATES + _ROUND12_R7_LEFTOVERS:
-    if _q in _ROUND11_WINDOW:
-        raise RuntimeError(
-            f"round-11 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-11 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 12) — the 20 _ROUND12_ROTATION_CANDIDATES lead
-# (7 NEW round-11 operators needing a FIRST verdict + 13
-# result-identical plan changes from the layout-aware substrate spread
-# and the CC-loop rework; VERDICT r11 task 1), then the 15 remaining
-# r7 leftovers (source_overlap_matrix is deduped — it sits in BOTH
-# overflow lists and rides in with the candidates), then the 15
-# alphabetically-first of the 49 r8-era greens (the stalest bulk after
-# this round's verdicts; staleness derived by unioning
-# CORRECTNESS_r{1..11}.json). The 34 r8 greens the window cannot hold
-# are declared at _ROUND13_R8_LEFTOVERS. The two r1-era estimators
-# stay OUT by design (tolerance-tested, no oracle).
-# ==========================================================================
-
-_ROUND12_NEEDS_VERDICT = _ROUND12_ROTATION_CANDIDATES
-
-#: 15 r7 leftovers first (the stalest greens anywhere once the
-#: candidates carry source_overlap_matrix), then the 15
-#: alphabetically-first r8 greens (one flat cohort — every r8
-#: candidate shares the same last-verdict round, so alphabetical is
-#: the declared tiebreak).
-_ROUND12_STALE_BACKLOG = tuple(
-    q for q in _ROUND12_R7_LEFTOVERS if q not in _ROUND12_ROTATION_CANDIDATES
-) + (
-    "array_explode",
-    "array_subscript",
-    "avg_per_group",
-    "base64_roundtrip",
-    "case_when_mapping",
-    "cast_projection",
-    "column_equality_filter",
-    "cosine_topk_bruteforce",
-    "cosine_topk_ivf",
-    "count_distinct",
-    "cube_agg",
-    "date_parts",
-    "distinct_values",
-    "doc_fingerprint",
-    "embedding_lsh_buckets",
-)
-
-#: The 34 r8 greens the 15 stale slots could not hold — they MUST head
-#: round 13's stale backlog (stalest remaining cohort after this
-#: round's verdicts land).
-_ROUND13_R8_LEFTOVERS = (
-    "embedding_near_dup",
-    "grouped_count",
-    "join_anti",
-    "join_asof",
-    "join_broadcast_dim",
-    "join_cross",
-    "join_enrichment_chain",
-    "join_full_outer",
-    "join_left",
-    "join_semi",
-    "json_get",
-    "json_map_explode",
-    "json_parse_flatten",
-    "latest_per_key",
-    "null_reject_filter",
-    "pivot_agg",
-    "revenue_by_nation",
-    "risk_join_sql",
-    "rollup_agg",
-    "set_except",
-    "set_intersect",
-    "sort_limit",
-    "split_derive",
-    "stats_per_group",
-    "string_normalize",
-    "table_profile",
-    "top_k_per_group",
-    "top_unshipped_orders",
-    "topic_dispatch_filter",
-    "union_fan_in",
-    "value_routing",
-    "window_lag_lead",
-    "window_rank",
-    "window_running_sum",
-)
-
-_ROUND12_WINDOW = _ROUND12_NEEDS_VERDICT + _ROUND12_STALE_BACKLOG
-
-#: Queries added or CHANGED after the round-12 window filled. Round 13
-#: MUST rotate these to the window front before re-verifying anything
-#: else — build the round-13 guard from this list, not hand-collected.
-#: (Populated as round 12 lands operators; media_type_mismatch_report
-#: is NOT here — its tie-break fix landed BEFORE its first verdict,
-#: inside this round's window.)
-#: - bpe_learn_merges / bpe_apply_merges: NEW round-12 operators (the
-#:   closed tokenizer-induction loop) — first verdicts pending.
-#: - markup_strip: NEW round-12 operator (the markup action face) —
-#:   first verdict pending.
-#: - bpe_token_mixture_weights: NEW round-12 operator (mixture weights
-#:   on merge-aware token counts) — first verdict pending.
-#: - bpe_vocab_table: NEW round-12 operator (the post-merge subword
-#:   vocabulary) — first verdict pending.
-#: - bpe_compression_sweep / bpe_seq_pack_bins: NEW round-12 operators
-#:   (the merge-budget curve + merge-aware packing) — first verdicts
-#:   pending.
-#: - ann_probe_agreement: NEW round-12 operator (the deployed-depth
-#:   sweep↔report consistency gate) — first verdict pending.
-#: - tokenizer_drift_report: NEW round-12 operator (train/eval
-#:   fertility drift per source) — first verdict pending.
-#: - deleak_split / quarantine_drifting_sources: NEW round-12
-#:   operators (the leakage and drift reports' action faces) — first
-#:   verdicts pending.
-#: - bpe_pack_efficiency / bpe_merge_stability: NEW round-12 operators
-#:   (packing accounting on merge-aware units; per-half merge
-#:   reproducibility) — first verdicts pending.
-_ROUND13_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "deleak_split",
-    "quarantine_drifting_sources",
-    "bpe_pack_efficiency",
-    "bpe_merge_stability",
-    "bpe_learn_merges",
-    "bpe_apply_merges",
-    "markup_strip",
-    "bpe_token_mixture_weights",
-    "bpe_vocab_table",
-    "bpe_compression_sweep",
-    "bpe_seq_pack_bins",
-    "ann_probe_agreement",
-    "tokenizer_drift_report",
-)
-
-if len(_ROUND12_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-12 window holds {len(_ROUND12_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND12_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-12 window")
-for _q in (
-    _ROUND12_WINDOW + _ROUND13_ROTATION_CANDIDATES + _ROUND13_R8_LEFTOVERS
-):
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND12_NEEDS_VERDICT + _ROUND12_STALE_BACKLOG:
-    if _q not in _ROUND12_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND13_ROTATION_CANDIDATES + _ROUND13_R8_LEFTOVERS:
-    if _q in _ROUND12_WINDOW:
-        raise RuntimeError(
-            f"round-12 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-12 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 13) — the 13 _ROUND13_ROTATION_CANDIDATES lead
-# (every round-12 operator gets its FIRST driver verdict; VERDICT r12
-# task 1), then the 34 _ROUND13_R8_LEFTOVERS (the stalest cohort — r8
-# greens the round-12 window could not hold), then the 3
-# alphabetically-first of the 40 r9-era greens (staleness derived by
-# unioning CORRECTNESS_r{1..12}.json; every r9 candidate shares the
-# same last-verdict round, so alphabetical is the declared tiebreak).
-# The 37 r9 greens the window cannot hold are declared at
-# _ROUND14_R9_LEFTOVERS. The two r1-era estimators stay OUT by design
-# (tolerance-tested, no oracle).
-# ==========================================================================
-
-_ROUND13_NEEDS_VERDICT = _ROUND13_ROTATION_CANDIDATES
-
-#: 34 r8 leftovers first (the stalest greens anywhere), then the 3
-#: alphabetically-first r9 greens.
-_ROUND13_STALE_BACKLOG = _ROUND13_R8_LEFTOVERS + (
-    "corr_panel",
-    "cosine_scores_pandas",
-    "customer_rfm",
-)
-
-#: The 37 r9 greens the 3 stale slots could not hold — they MUST head
-#: round 14's stale backlog (stalest remaining cohort after this
-#: round's verdicts land).
-_ROUND14_R9_LEFTOVERS = (
-    "daily_type_anomaly",
-    "decayed_user_score",
-    "embedding_centroids",
-    "embedding_quantize",
-    "exact_dedup",
-    "frame_sample_stats",
-    "hash_split",
-    "hourly_event_rollup",
-    "interval_count_join",
-    "iqr_outliers",
-    "kmeans_assign",
-    "language_id",
-    "media_byte_stats",
-    "media_resize_stats",
-    "ngram_contamination",
-    "passage_dedup",
-    "passage_source_matrix",
-    "perplexity_score",
-    "pii_scrub",
-    "price_histogram",
-    "pricing_summary",
-    "quality_score",
-    "redis_envelope_decode",
-    "repetition_score",
-    "risk_join",
-    "rolling_avg_24h",
-    "salted_supplier_rollup",
-    "scd2_history",
-    "sessionize",
-    "source_mixture_weights",
-    "stratified_sample",
-    "substring_dedup",
-    "tfidf_top_terms",
-    "timestamp_convert",
-    "token_stats",
-    "weekly_retention",
-    "word_entropy",
-)
-
-#: Queries added or CHANGED after the round-13 window filled. Round 14
-#: MUST rotate these to the window front before re-verifying anything
-#: else — build the round-14 guard from this list, not hand-collected.
-#: - bpe_encode_chunks: NEW round-13 operator (within-document chunking
-#:   on merge-aware unit budgets — VERDICT r12 task 3) — first verdict
-#:   pending.
-#: - bpe_unit_total_agreement: NEW round-13 operator (loop-world vs
-#:   baked-replace-world corpus unit total, the ann_probe_agreement
-#:   pattern — VERDICT r12 task 8) — first verdict pending.
-#: - chunk_dedup: NEW round-13 operator (exact dedup of the training
-#:   sequences over chunk_hash) — first verdict pending.
-_ROUND14_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "bpe_encode_chunks",
-    "bpe_unit_total_agreement",
-    "chunk_dedup",
-)
-
-_ROUND13_WINDOW = _ROUND13_NEEDS_VERDICT + _ROUND13_STALE_BACKLOG
-
-if len(_ROUND13_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-13 window holds {len(_ROUND13_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND13_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-13 window")
-for _q in (
-    _ROUND13_WINDOW + _ROUND14_ROTATION_CANDIDATES + _ROUND14_R9_LEFTOVERS
-):
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND13_NEEDS_VERDICT + _ROUND13_STALE_BACKLOG:
-    if _q not in _ROUND13_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND14_ROTATION_CANDIDATES + _ROUND14_R9_LEFTOVERS:
-    if _q in _ROUND13_WINDOW:
-        raise RuntimeError(
-            f"round-13 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-13 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 14) — the 3 _ROUND14_ROTATION_CANDIDATES lead
-# (every round-13 operator gets its FIRST driver verdict; VERDICT r13
-# task 1), then the 37 _ROUND14_R9_LEFTOVERS (the stalest cohort — the
-# r9 greens rounds 10–13 could not hold; this EMPTIES the r9 cohort),
-# then the 10 alphabetically-first of the 45 r10-era greens (staleness
-# derived by unioning CORRECTNESS_r{1..13}.json; every r10 candidate
-# shares the same last-verdict round, so alphabetical is the declared
-# tiebreak). The 35 r10 greens the window cannot hold are declared at
-# _ROUND15_R10_LEFTOVERS. The two r1-era estimators stay OUT by design
-# (tolerance-tested, no oracle).
-# ==========================================================================
-
-_ROUND14_NEEDS_VERDICT = _ROUND14_ROTATION_CANDIDATES
-
-#: 37 r9 leftovers first (the stalest greens anywhere — emptying the
-#: r9 cohort), then the 10 alphabetically-first r10 greens.
-_ROUND14_STALE_BACKLOG = _ROUND14_R9_LEFTOVERS + (
-    "ann_recall_report",
-    "bm25_search",
-    "boilerplate_strip",
-    "ccnet_perplexity_bucket",
-    "cdc_merge",
-    "cluster_quality",
-    "curriculum_order",
-    "customer_order_distribution",
-    "decile_stats",
-    "decontaminate_corpus",
-)
-
-#: The 35 r10 greens the 10 stale slots could not hold — they MUST
-#: head round 15's stale backlog (stalest remaining cohort after this
-#: round's verdicts land).
-_ROUND15_R10_LEFTOVERS = (
-    "domain_quality_filter",
-    "domain_stats",
-    "dsir_importance_weights",
-    "fuzzy_name_pairs",
-    "gopher_quality_filter",
-    "hybrid_retrieval_fusion",
-    "idle_customer_balance",
-    "k_anonymity_report",
-    "knn_graph",
-    "l_diversity_report",
-    "lang_zscore",
-    "lang_zscore_pandas",
-    "late_order_priorities",
-    "lone_late_supplier_orders",
-    "media_dedup",
-    "mixture_sample",
-    "mixture_sample_accounting",
-    "mixture_upsample",
-    "nation_trade_volume",
-    "nfc_normalize",
-    "pack_efficiency",
-    "quality_topk_filter",
-    "quantized_cosine_topk",
-    "robust_scale",
-    "semantic_dedup",
-    "seq_pack_bins",
-    "seq_pack_concat",
-    "session_window_rollup",
-    "shard_assign",
-    "small_quantity_revenue",
-    "snapshot_diff",
-    "t_closeness_report",
-    "timeseries_gap_fill",
-    "token_bigram_pmi",
-    "vocab_coverage",
-)
-
-#: Queries added or CHANGED after the round-14 window filled. Round 15
-#: MUST rotate these to the window front before re-verifying anything
-#: else — build the round-15 guard from this list, not hand-collected.
-#: - pack_deduped_chunks: NEW round-14 operator (the training writer
-#:   consuming chunk_dedup's keepers — VERDICT r13 task 2) — first
-#:   verdict pending.
-#: - chunk_dedup_accounting: NEW round-14 operator (packed + saved =
-#:   pre-dedup conservation gate on the writer) — first verdict
-#:   pending.
-#: - shard_packed_chunks: NEW round-14 operator (packed bins dealt
-#:   into epoch shards — the chunk spine's last writer step) — first
-#:   verdict pending.
-_ROUND15_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "pack_deduped_chunks",
-    "chunk_dedup_accounting",
-    "shard_packed_chunks",
-)
-
-_ROUND14_WINDOW = _ROUND14_NEEDS_VERDICT + _ROUND14_STALE_BACKLOG
-
-if len(_ROUND14_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-14 window holds {len(_ROUND14_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND14_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-14 window")
-for _q in (
-    _ROUND14_WINDOW + _ROUND15_ROTATION_CANDIDATES + _ROUND15_R10_LEFTOVERS
-):
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND14_NEEDS_VERDICT + _ROUND14_STALE_BACKLOG:
-    if _q not in _ROUND14_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND15_ROTATION_CANDIDATES + _ROUND15_R10_LEFTOVERS:
-    if _q in _ROUND14_WINDOW:
-        raise RuntimeError(
-            f"round-14 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-14 verdict"
-        )
-
-# ==========================================================================
-# DRIVER WINDOW (round 15) — the 3 _ROUND15_ROTATION_CANDIDATES lead
-# (every round-14 chunk-writer operator gets its FIRST driver verdict;
-# VERDICT r14 task 1), then the 35 _ROUND15_R10_LEFTOVERS (the stalest
-# cohort — this EMPTIES the r10 cohort), then the 12 alphabetically-
-# first of the 50 r11-era greens (staleness derived by unioning
-# CORRECTNESS_r{1..14}.json; every r11 candidate shares the same
-# last-verdict round, so alphabetical is the declared tiebreak). The
-# 38 r11 greens the window cannot hold are declared at
-# _ROUND16_R11_LEFTOVERS. The two r1-era estimators stay OUT by design
-# (tolerance-tested, no oracle).
-# ==========================================================================
-
-_ROUND15_NEEDS_VERDICT = _ROUND15_ROTATION_CANDIDATES
-
-#: 35 r10 leftovers first (the stalest greens anywhere — emptying the
-#: r10 cohort), then the 12 alphabetically-first r11 greens.
-_ROUND15_STALE_BACKLOG = _ROUND15_R10_LEFTOVERS + (
-    "arithmetic_rounding",
-    "bpe_pair_counts",
-    "bracket_revenue",
-    "char_bigram_lm",
-    "contamination_method_agreement",
-    "corpus_datacard",
-    "dedup_method_agreement",
-    "dominant_part_suppliers",
-    "dow_seasonality",
-    "dup_cluster_histogram",
-    "embedding_drift_by_source",
-    "embedding_health_report",
-)
-
-#: The 38 r11 greens the 12 stale slots could not hold — they MUST
-#: head round 16's stale backlog (stalest remaining cohort after this
-#: round's verdicts land).
-_ROUND16_R11_LEFTOVERS = (
-    "event_transition_matrix",
-    "exact_quantiles",
-    "forecast_revenue",
-    "funnel_conversion",
-    "grouping_sets_agg",
-    "grouping_sets_agg_df",
-    "guard_metrics_report",
-    "important_part_value",
-    "ivf_index_upsert",
-    "ivf_staleness_report",
-    "knn_label_agreement",
-    "label_separation_report",
-    "language_confusion_matrix",
-    "large_volume_orders",
-    "market_basket_pairs",
-    "media_feature_pipeline",
-    "min_cost_supplier",
-    "minhash_calibration_report",
-    "nation_supplier_hhi",
-    "national_market_share",
-    "near_dup_triangles",
-    "ngram_jaccard_pairs",
-    "ngram_novelty",
-    "part_supplier_diversity",
-    "pii_prevalence_report",
-    "product_profit",
-    "quality_drift_report",
-    "semantic_contamination",
-    "shard_balance_report",
-    "top_revenue_suppliers",
-    "trade_pagerank",
-    "url_dedup",
-    "url_normalize",
-    "vocab_oov_rate",
-    "weighted_reservoir_sample",
-    "winnowing_density_report",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-)
-
-#: Queries added or CHANGED after the round-15 window filled. Round 16
-#: MUST rotate these to the window front before re-verifying anything
-#: else — build the round-16 guard from this list, not hand-collected.
-#: - curriculum_pack_order: NEW round-15 operator (NTILE curriculum
-#:   phases over the packed bins — VERDICT r14 task 5) — first verdict
-#:   pending.
-_ROUND16_ROTATION_CANDIDATES: tuple[str, ...] = (
-    "curriculum_pack_order",
-)
-
-_ROUND15_WINDOW = _ROUND15_NEEDS_VERDICT + _ROUND15_STALE_BACKLOG
-
-if len(_ROUND15_WINDOW) != _WINDOW:
-    raise RuntimeError(
-        f"round-15 window holds {len(_ROUND15_WINDOW)} entries, need {_WINDOW}"
-    )
-if len(set(_ROUND15_WINDOW)) != _WINDOW:
-    raise RuntimeError("duplicate name in the round-15 window")
-for _q in (
-    _ROUND15_WINDOW + _ROUND16_ROTATION_CANDIDATES + _ROUND16_R11_LEFTOVERS
-):
-    if _q not in _REGISTRY:
-        raise RuntimeError(f"window/rotation query not registered: {_q}")
-for _q in _ROUND15_NEEDS_VERDICT + _ROUND15_STALE_BACKLOG:
-    if _q not in _ROUND15_WINDOW:
-        raise RuntimeError(
-            f"changed/stale query outside the {_WINDOW}-entry window: {_q}"
-        )
-for _q in _ROUND16_ROTATION_CANDIDATES + _ROUND16_R11_LEFTOVERS:
-    if _q in _ROUND15_WINDOW:
-        raise RuntimeError(
-            f"round-15 overflow query {_q} sits INSIDE the window — it would "
-            "displace a round-15 verdict"
-        )
-
-# Reorder so the driver's first-50 truncation sees exactly _ROUND15_WINDOW.
-_REGISTRY = {name: _REGISTRY[name] for name in _ROUND15_WINDOW} | {
-    name: entry
-    for name, entry in _REGISTRY.items()
-    if name not in set(_ROUND15_WINDOW)
-}
