@@ -14,17 +14,46 @@ every create and rename: about ten forks and 40 ms per checkpoint file,
 and a stateful batch writes dozens of them (state deltas, offsets,
 commits, source logs). Both managers refuse to overwrite an existing
 file and leave the same files on disk, so checkpoints written under
-either one resume under the other. Under spark-submit Spark's default
-stays; ``extra_conf`` can override the setting either way.
+either one resume under the other.
+
+Hadoop's local ``FileSystem`` still forks ``chmod`` after every file
+create and ``mkdir`` without ``libhadoop``, because its
+``setPermission`` falls back to a shell command. Local sessions
+therefore register ``graft.ForklessLocalFileSystem`` (``jvm/``, a
+prebuilt jar put on the driver class path) as ``fs.file.impl``: a
+``LocalFileSystem`` with the same ``.crc`` checksums, whose
+``setPermission`` sets the mode bits through ``java.nio``, and whose
+rename refuses to replace an existing file like Spark's default class
+(Hive's ``ProxyLocalFileSystem``). That covers every ``file:`` write:
+state deltas and their checksums, offsets, commits, source logs,
+output parquet files and the upsert sink's staging. A JVM that is
+already running without the jar keeps Spark's default class. Under
+spark-submit Spark's defaults stay; ``extra_conf`` can override either
+setting.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+FORKLESS_FS = "graft.ForklessLocalFileSystem"
+FORKLESS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "forkless-localfs.jar")
+_CLASS_PATH = "spark.driver.extraClassPath"
+_FS_IMPL = "spark.hadoop.fs.file.impl"
+
+
+def _jvm_loads(jvm, class_name: str) -> bool:
+    try:
+        jvm.java.lang.Class.forName(class_name)
+    except Py4JJavaError:
+        return False
+    return True
 
 
 def get_spark(
@@ -41,6 +70,7 @@ def get_spark(
     bound.
     """
     n_shuffle = str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)
+    conf = dict(extra_conf or {})
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", n_shuffle)
@@ -71,7 +101,16 @@ def get_spark(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
         )
-    for k, v in (extra_conf or {}).items():
+        # ... and Hadoop's local FileSystem forks chmod per created file and
+        # directory; only register the forkless class where the JVM loads it
+        gateway = SparkContext._gateway
+        if gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT"):
+            # getOrCreate launches the JVM: the jar joins the caller's class path
+            conf[_CLASS_PATH] = os.pathsep.join(filter(None, [FORKLESS_JAR, conf.get(_CLASS_PATH)]))
+            conf.setdefault(_FS_IMPL, FORKLESS_FS)
+        elif gateway is not None and _jvm_loads(gateway.jvm, FORKLESS_FS):
+            conf.setdefault(_FS_IMPL, FORKLESS_FS)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
