@@ -1,14 +1,11 @@
 """Round-10 additions: the stratum quality-drift EMD gate, the
-driver-visible observe-metrics face, and the end-to-end monitor
-rollup contract."""
+driver-visible observe-metrics face, the privacy and contamination
+gates, and the registry's degenerate-input contract."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 # --- quality_drift_report ---------------------------------------------------
@@ -272,132 +269,6 @@ def test_semantic_contamination_flag_is_scale_relative(spark, sf_dir):
         assert r["contaminated"] == want, r
     flagged = sum(r["contaminated"] for r in rows)
     assert 0 < flagged < n / 2
-
-
-# --- monitor rollup end-to-end ----------------------------------------------
-
-
-@pytest.mark.slow
-def test_monitor_rollup_end_to_end_survives_post_eviction_late_row(
-    spark, tmp_path_factory
-):
-    """The full monitor pipeline — watermarked stream count, update-mode
-    emissions, compacted-table upsert — across a replay where a day's
-    state is genuinely EVICTED before a late row for it arrives:
-    batch 1 opens day-1 (2 events) and day-2, batch 2 opens day-3
-    (advancing the zero-delay watermark so days 1–2 evict at its end),
-    batch 3 delivers a day-1 straggler. Whatever the engine does with
-    that straggler (drop it, or resurrect fresh state and re-emit a
-    count of 1), the PUBLISHED rollup must keep day-1 at its closed
-    count of 2 — the monotone-n_events max_by guard — and the other
-    days must match the batch face exactly."""
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        daily_type_counts_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sinks import (
-        compacted_table_upsert,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_foreach_batch,
-    )
-
-    root = tmp_path_factory.mktemp("monitor_e2e")
-    src, table = str(root / "events"), str(root / "rollup")
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def t(d, h):
-        return dt.datetime(2024, 1, d, h)
-
-    batches = [
-        [(t(1, 10), "e"), (t(1, 11), "e"), (t(2, 9), "e")],
-        [(t(3, 1), "e")],  # watermark -> day3; days 1-2 evict at batch end
-        [(t(1, 23), "e")],  # post-eviction straggler for day 1
-    ]
-    for b in batches:
-        spark.createDataFrame(b, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    run_foreach_batch(
-        daily_type_counts_stream(
-            file_stream(spark, src, schema), delay="0 seconds"
-        ),
-        compacted_table_upsert(table, ["event_type", "d"], "n_events"),
-        output_mode="update",
-    )
-    got = {
-        (r["event_type"], str(r["d"])): r["n_events"]
-        for r in spark.read.parquet(table).collect()
-    }
-    assert got == {
-        ("e", "2024-01-01"): 2,  # closed count kept, straggler suppressed
-        ("e", "2024-01-02"): 1,
-        ("e", "2024-01-03"): 1,
-    }
-
-
-@pytest.mark.slow
-def test_daily_counts_closed_stream_emits_each_day_once(
-    spark, tmp_path_factory
-):
-    """The append face's closed-day contract, by construction: a day
-    emits exactly once, when the watermark reaches its day-start
-    (inclusive — with a zero delay the newest seen day closes in the
-    same run, so ALL three days emit here), carrying its final count
-    including the still-live late merge from batch 2; the post-close
-    day-1 straggler in batch 3 produces NO second emission — in append
-    mode the watermark gates input, so the day-1 count can never
-    regress or duplicate."""
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        daily_type_counts_closed_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_to_memory,
-    )
-
-    root = tmp_path_factory.mktemp("closed_days")
-    src = str(root / "events")
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def t(d, h):
-        return dt.datetime(2024, 1, d, h)
-
-    batches = [
-        [(t(1, 10), "e"), (t(2, 9), "e")],
-        [(t(1, 23), "e"), (t(3, 1), "e")],  # live day-1 merge; day 3 opens
-        [(t(1, 22), "e")],  # post-close straggler
-    ]
-    for b in batches:
-        spark.createDataFrame(b, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    rows = run_to_memory(
-        daily_type_counts_closed_stream(
-            file_stream(spark, src, schema), delay="0 seconds"
-        ),
-        "closed_day_stream",
-        output_mode="append",
-    ).collect()
-    emitted = [((r["event_type"], str(r["d"])), r["n_events"]) for r in rows]
-    # exactly one emission per day, final counts, straggler invisible
-    assert sorted(emitted) == [
-        (("e", "2024-01-01"), 2),
-        (("e", "2024-01-02"), 1),
-        (("e", "2024-01-03"), 1),
-    ]
 
 
 def test_embedding_health_report_counts_injected_defects(spark):

@@ -242,7 +242,7 @@ def test_stateful_state_version_bump_fails_loudly(
         # parquet sink, not memory: the memory sink refuses checkpoint
         # recovery, and recovery is exactly what's under test
         q = (
-            sf_mod.transition_stateful(file_stream(spark, path, schema))
+            sf_mod.transition_stateful(file_stream(spark, path, schema, max_files_per_trigger=1))
             .writeStream.format("parquet")
             .queryName(name)
             .outputMode("append")
@@ -270,57 +270,6 @@ def test_stateful_state_version_bump_fails_loudly(
     )
     with pytest.raises(Exception, match="state-schema version mismatch"):
         run("ver_bump_v_next")
-
-
-def test_substring_match_stream_surfaces_short_docs(spark, tmp_path_factory):
-    """A new doc below the fingerprint floor (< 3 + WINNOW_WINDOW - 1
-    tokens) cannot be screened by the winnowing probe — it must
-    surface as a (doc_id, NULL, NULL, NULL) row, not vanish, so triage
-    can route it to the exact-hash probe; screened docs are unaffected."""
-    from pyspark.sql import types as T
-
-    from udacity_dsnd_projects_spark.functions.dedup import winnowing_index_for
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_to_memory,
-    )
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        substring_match_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    hist = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    index = winnowing_index_for(hist).localCheckpoint(eager=True)
-    base3 = hist.filter(F.col("doc_id") == 3).collect()[0].text
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    root = tmp_path_factory.mktemp("short_probe")
-    path = str(root / "rows")
-    spark.createDataFrame(
-        [
-            (9000001, base3),  # screenable, matches history
-            (9000002, "too short"),  # 2 tokens: below the floor
-            (9000003, "five tokens is still short"),  # 5 < 6: below
-        ],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(path)
-
-    rows = run_to_memory(
-        substring_match_stream(file_stream(spark, path, schema), index),
-        "short_probe_stream",
-    ).collect()
-    nulls = {r.doc_id for r in rows if r.hist_doc_id is None}
-    assert nulls == {9000002, 9000003}
-    for r in rows:
-        if r.doc_id in nulls:
-            assert r.shared is None and r.overlap is None
-    assert any(r.doc_id == 9000001 and r.hist_doc_id == 3 for r in rows)
 
 
 # --------------------------------------------------------------------------
@@ -477,43 +426,6 @@ def test_ivf_probe_sweep_monotone_and_consistent(spark, sf_dir):
     assert deep.mean_recall == round(
         sum(r.n_hits for r in rec) / (len(rec) * TOP_K), 6
     )
-
-
-def test_changepoint_monitor_view_equals_batch(spark, sf_dir, tmp_path_factory):
-    """The CUSUM dashboard over the stream-maintained compacted rollup
-    must equal the batch cusum_changepoint_report row-for-row — the
-    shared-scorer identity extended to the sequential screen."""
-    import pytest
-
-    pytest.importorskip("pyspark")
-    from tests.replay import _ts_chunk_edges, _write_chunks
-    from udacity_dsnd_projects_spark.operators.analytics import (
-        cusum_changepoint_report,
-    )
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        changepoint_monitor_view,
-        daily_type_counts_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sinks import compacted_table_upsert
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_foreach_batch,
-    )
-
-    root = tmp_path_factory.mktemp("cusum_monitor")
-    src, table = str(root / "events"), str(root / "rollup")
-    ev = load_table(spark, "events", sf_dir)
-    _write_chunks(ev, _ts_chunk_edges(ev, 3), src)
-
-    counts = daily_type_counts_stream(file_stream(spark, src, ev.schema))
-    run_foreach_batch(
-        counts, compacted_table_upsert(table, ["event_type", "d"], "n_events")
-    )
-
-    got = sorted(map(tuple, changepoint_monitor_view(spark, table).collect()))
-    want = sorted(map(tuple, cusum_changepoint_report(spark, sf_dir).collect()))
-    assert got == want and got
 
 
 def test_screen_funnel_counts_are_internally_consistent(spark, sf_dir):

@@ -1,11 +1,10 @@
 """Round-12 tests: the media-type-mismatch full-string tie-break
 (VERDICT r11 task 4), the winnowing_strip keeper-md5 placement, the
-too-short-stream-row redelivery dedup, the connected-components
-conf-restore reentrancy guard, the cached substrate-layout probe
+connected-components conf-restore reentrancy guard, the cached substrate-layout probe
 (ADVICE r11), the closed BPE tokenizer-induction loop (task 2), the
 markup_strip action face (task 3), and the round-12 depth faces:
 bpe_compression_sweep / bpe_seq_pack_bins / tokenizer_drift_report /
-ann_probe_agreement / token_budget_stream / deleak_split /
+ann_probe_agreement / deleak_split /
 quarantine_drifting_sources / bpe_pack_efficiency /
 bpe_merge_stability."""
 
@@ -154,54 +153,6 @@ def test_winnowing_strip_md5_above_join(spark, sf_dir):
         if i != -1
     )
     assert i_md5 < i_join, plan
-
-
-# --------------------------------------------------------------------------
-# ADVICE r11 — a too-short doc re-delivered across micro-batches must
-# emit its (doc_id, NULL, NULL, NULL) row ONCE (nulls compare equal in
-# dropDuplicates), matching the docstring's emitted-once contract.
-# --------------------------------------------------------------------------
-
-
-def test_short_doc_redelivery_emits_once(spark, tmp_path):
-    from udacity_dsnd_projects_spark.functions.dedup import winnowing_index_for
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        substring_match_stream,
-    )
-
-    hist = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        ["doc_id", "text"],
-    )
-    idx = winnowing_index_for(hist)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    batch = spark.createDataFrame([(7, "too short")], ["doc_id", "text"])
-    # the SAME short doc delivered twice (two files → two micro-batches)
-    batch.coalesce(1).write.mode("overwrite").parquet(str(src / "b1"))
-    batch.coalesce(1).write.mode("overwrite").parquet(str(src / "b2"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    out = substring_match_stream(stream, idx)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("r12_short_redelivery")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("select * from r12_short_redelivery").collect()
-    assert len(rows) == 1, rows
-    r = rows[0]
-    assert r.doc_id == 7 and r.hist_doc_id is None and r.overlap is None
 
 
 # --------------------------------------------------------------------------
@@ -612,90 +563,6 @@ def test_tokenizer_drift_splits_cover_corpus(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Round-12 depth — token_budget_stream: the crawl loop's running
-# merge-aware token accounting. Stream==batch: the final update-mode
-# emission per source must equal the batch rollup over the same rows
-# (shared per-word fold), with totals MERGING across micro-batches.
-# --------------------------------------------------------------------------
-
-
-def test_token_budget_stream_equals_batch(spark, tmp_path):
-    from udacity_dsnd_projects_spark.functions.text import (
-        _bpe_vocab,
-        _eligible_words,
-        _learn_merges,
-        _sum_over_words,
-        _word_units_fn,
-    )
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        token_budget_stream,
-    )
-
-    rows = [
-        (i, f"web doc {i} alpha beta " + "ab " * (i % 4), "web")
-        for i in range(10)
-    ] + [
-        (i, f"lab doc {i} gamma " + "cd " * (i % 3), "lab")
-        for i in range(10, 18)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text", "source"])
-    merges = _learn_merges(_bpe_vocab(docs), rounds=4)
-
-    src = tmp_path / "crawl"
-    src.mkdir()
-    # two micro-batches, each containing BOTH sources → totals must merge
-    for b, pred in ((1, "doc_id % 2 = 0"), (2, "doc_id % 2 = 1")):
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(
-            str(src / f"b{b}")
-        )
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        token_budget_stream(stream, merges)
-        .writeStream.format("memory")
-        .queryName("r12_token_budget")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # latest emission per source (update mode re-emits on merge)
-    got = {
-        r["source"]: (r["n_docs"], r["n_words"], r["n_merged_units"])
-        for r in spark.sql(
-            """SELECT source, n_docs, n_words, n_merged_units FROM (
-                 SELECT *, ROW_NUMBER() OVER (
-                   PARTITION BY source ORDER BY n_merged_units DESC) rn
-                 FROM r12_token_budget) WHERE rn = 1"""
-        ).collect()
-    }
-    want = {
-        r["source"]: (r["n_docs"], r["n_words"], r["n_merged_units"])
-        for r in docs.select("source", _eligible_words().alias("ws"))
-        .select(
-            "source",
-            F.size("ws").cast("long").alias("w"),
-            _sum_over_words(_word_units_fn(merges)).alias("u"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("w").alias("n_words"),
-            F.sum("u").alias("n_merged_units"),
-        )
-        .collect()
-    }
-    assert got == want
-    assert len(got) == 2
-
-
-# --------------------------------------------------------------------------
 # Round-12 depth — deleak_split: split_leakage_report's action face.
 # Cross-face identity: the number of dropped train docs must be
 # bounded by the report's cross_split pair count (each dropped doc
@@ -932,8 +799,8 @@ def test_learn_merges_matches_pure_python_reference(spark, vocab):
 @settings(max_examples=10, deadline=None)
 def test_word_units_fn_matches_pure_python_apply(spark, vocab):
     """The baked replace-chain unit counter (what bpe_apply_merges,
-    the packing faces, the mixture face, and token_budget_stream all
-    share) must equal symbol-list BPE applied rule by rule."""
+    the packing faces and the mixture face all share) must equal
+    symbol-list BPE applied rule by rule."""
     from udacity_dsnd_projects_spark.functions.text import _word_units_fn
 
     items = sorted(vocab.items())

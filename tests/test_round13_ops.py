@@ -336,119 +336,6 @@ def test_encode_chunks_skips_empty_chunk_ids(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# VERDICT r12 task 8 — the crawl-loop ACTION probes: deleak and
-# drift-quarantine screening at ingest, stream == batch by
-# shared-helper identity against the published artifact tables.
-# --------------------------------------------------------------------------
-
-
-def _doc_stream(spark, tmp_path, rows):
-    src = tmp_path / "stream_src"
-    schema = "doc_id long, text string, lang string, source string"
-    df = spark.createDataFrame(rows, schema)
-    # two files → two micro-batches, exercising cross-batch behavior
-    half = len(rows) // 2
-    spark.createDataFrame(rows[:half], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b1"))
-    spark.createDataFrame(rows[half:], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b2"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    return df, stream
-
-
-def test_deleak_probe_stream_equals_batch(spark, tmp_path):
-    from udacity_dsnd_projects_spark.functions.curation import _deleak_release
-    from udacity_dsnd_projects_spark.streaming.sources import run_to_memory
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        deleak_probe_stream,
-    )
-
-    rows = [(i, f"doc {i}", "en", "web") for i in range(20)]
-    docs, stream = _doc_stream(spark, tmp_path, rows)
-    # the published leak table: docs 3 and 17 are known leaks
-    leaks = spark.createDataFrame(
-        [(3, 2), (17, 1)], "doc_id long, __n_cross long"
-    )
-    want = sorted(
-        map(tuple, _deleak_release(docs.select("doc_id"), leaks).collect())
-    )
-    got = sorted(
-        map(tuple, run_to_memory(deleak_probe_stream(stream, leaks), "dlk").collect())
-    )
-    assert got == want
-    acts = {r[0]: r[3] for r in got}
-    assert acts[3] == "dropped_leak" and acts[17] == "dropped_leak"
-    assert acts[0] == "keep"
-
-
-def test_quarantine_probe_stream_equals_batch(spark, tmp_path):
-    from udacity_dsnd_projects_spark.functions.curation import (
-        _quarantine_release,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import run_to_memory
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        quarantine_probe_stream,
-    )
-
-    rows = [
-        (i, f"doc {i}", "en" if i % 2 else "fr", "web" if i % 3 else "books")
-        for i in range(18)
-    ]
-    docs, stream = _doc_stream(spark, tmp_path, rows)
-    strata = spark.createDataFrame(
-        [("fr", "books", 1), ("en", "web", 0)],
-        "lang string, source string, drifted int",
-    )
-    want = sorted(
-        map(
-            tuple,
-            _quarantine_release(
-                docs.select("doc_id", "lang", "source"), strata
-            ).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            run_to_memory(quarantine_probe_stream(stream, strata), "qtn").collect(),
-        )
-    )
-    assert got == want
-    by_id = {r[0]: r[3] for r in got}
-    # (fr, books) strata drifted → quarantined; everything else keeps
-    for i, _, lang, source in [(r[0], r[1], r[2], r[3]) for r in rows]:
-        assert by_id[i] == ("quarantined" if (lang, source) == ("fr", "books") else "keep")
-
-
-def test_encode_chunks_stream_equals_batch(spark, tmp_path):
-    """The ingest-time chunker must emit exactly the batch face's rows
-    for the same documents under the same published merges."""
-    from udacity_dsnd_projects_spark.functions.text import encode_chunks_frame
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        encode_chunks_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import run_to_memory
-
-    rows = [
-        (i, " ".join(f"word{j % 7}" for j in range(i * 13 % 90 + 5)), "en", "web")
-        for i in range(12)
-    ]
-    docs, stream = _doc_stream(spark, tmp_path, rows)
-    merges = [("w", "o", 0), ("wo", "r", 0), ("wor", "d", 0)]
-    want = sorted(map(tuple, encode_chunks_frame(docs, merges).collect()))
-    got = sorted(
-        map(tuple, run_to_memory(encode_chunks_stream(stream, merges), "ecs").collect())
-    )
-    assert got == want and len(got) > 0
-
-
-# --------------------------------------------------------------------------
 # VERDICT r12 task 8 (second half) — the tokenizer family's
 # cross-machinery gate: the loop world's final stage frame and the
 # baked replace chain must report the SAME corpus unit total.

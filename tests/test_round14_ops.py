@@ -10,7 +10,6 @@ import sys
 import textwrap
 
 import pytest
-from pyspark.sql import functions as F
 
 
 # --------------------------------------------------------------------------
@@ -304,140 +303,6 @@ def test_shard_packed_chunks_deals_bins_round_robin(spark, sf_dir):
     # deterministic: a rerun is bit-identical (no RNG state)
     again = shard_packed_chunks(spark, sf_dir).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
-
-
-# --------------------------------------------------------------------------
-# VERDICT r13 task 2 (stream face) — arriving chunks are screened
-# against the published chunk_hash index at INGEST.
-# --------------------------------------------------------------------------
-
-
-def _doc_stream(spark, tmp_path, rows):
-    """Docs as both a batch frame and a 2-file parquet stream."""
-    schema = "doc_id long, text string, lang string, source string"
-    df = spark.createDataFrame(rows, schema)
-    src = tmp_path / "docs"
-    half = len(rows) // 2
-    spark.createDataFrame(rows[:half], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b1"))
-    spark.createDataFrame(rows[half:], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b2"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    return df, stream
-
-
-def test_chunk_dedup_stream_screens_against_published_index(spark, tmp_path):
-    """Stream == batch: ingest-time chunking + chunk screening over a
-    replayed 2-batch stream emits exactly the batch pipeline's
-    surviving chunk set — known-hash chunks dropped, a duplicate
-    arriving across micro-batches emitted once."""
-    from udacity_dsnd_projects_spark.functions.text import encode_chunks_frame
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        encode_chunks_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import run_to_memory
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        chunk_dedup_stream,
-    )
-
-    boiler = "all rights reserved contact the webmaster"
-    rows = [
-        (0, boiler, "en", "web"),  # batch 1 — known to history
-        (1, "fresh content one", "en", "web"),  # batch 1
-        (2, boiler, "en", "web"),  # batch 2 — same chunk as doc 0
-        (3, "fresh content two", "fr", "web"),  # batch 2
-    ]
-    docs, stream = _doc_stream(spark, tmp_path, rows)
-    merges = [("c", "o", 0), ("co", "n", 0)]
-    chunks = encode_chunks_frame(docs, merges)
-    # the published index: the boiler chunk is already in the snapshot
-    hist = chunks.filter(F.col("doc_id") == 0).select("chunk_hash")
-    want = sorted(
-        r["chunk_hash"]
-        for r in chunks.dropDuplicates(["chunk_hash"])
-        .join(hist, "chunk_hash", "left_anti")
-        .collect()
-    )
-    got_rows = run_to_memory(
-        chunk_dedup_stream(encode_chunks_stream(stream, merges), hist), "cds"
-    ).collect()
-    got = sorted(r["chunk_hash"] for r in got_rows)
-    assert got == want and len(got) == 2  # the two fresh chunks only
-    # within-stream dedup emitted each surviving hash exactly once
-    assert len(got) == len(set(got))
-
-
-def test_ingest_screen_conserves_keeper_hash_set(spark, tmp_path):
-    """The spine's cross-boundary conservation law: (history keepers)
-    ∪ (chunks surviving the ingest screen) must be EXACTLY the keeper
-    hash set a from-scratch batch dedup over the full corpus produces
-    — the ingest path loses nothing and lets no duplicate through,
-    regardless of how the new docs are micro-batched."""
-    from udacity_dsnd_projects_spark.functions.text import (
-        chunk_dedup_frame,
-        encode_chunks_frame,
-    )
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        encode_chunks_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import run_to_memory
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        chunk_dedup_stream,
-    )
-
-    boiler = "subscribe to our newsletter for updates"
-    rows = [
-        (0, boiler, "en", "web"),
-        (1, "history only sentence", "en", "web"),
-        (2, boiler, "en", "web"),  # arrives again in the stream
-        (3, "novel crawl content alpha", "en", "web"),
-        (4, "novel crawl content beta", "fr", "web"),
-        (5, "novel crawl content alpha", "en", "books"),  # in-stream dup
-    ]
-    schema = "doc_id long, text string, lang string, source string"
-    hist_docs = spark.createDataFrame(rows[:2], schema)
-    new_rows = rows[2:]
-    merges = [("n", "o", 0), ("no", "v", 0)]
-    hist_keepers = chunk_dedup_frame(encode_chunks_frame(hist_docs, merges))
-    # stream the new docs in 2 micro-batches through encode → screen
-    src = tmp_path / "crawl"
-    spark.createDataFrame(new_rows[:2], schema).coalesce(1).write.parquet(
-        str(src / "b1")
-    )
-    spark.createDataFrame(new_rows[2:], schema).coalesce(1).write.parquet(
-        str(src / "b2")
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    survivors = run_to_memory(
-        chunk_dedup_stream(
-            encode_chunks_stream(stream, merges),
-            hist_keepers.select("chunk_hash"),
-        ),
-        "spine",
-    ).collect()
-    got = {r["chunk_hash"] for r in hist_keepers.collect()} | {
-        r["chunk_hash"] for r in survivors
-    }
-    full = chunk_dedup_frame(
-        encode_chunks_frame(spark.createDataFrame(rows, schema), merges)
-    )
-    want = {r["chunk_hash"] for r in full.collect()}
-    assert got == want
-    # the screen really screened: the boiler re-crawl emitted nothing
-    # (known to history), the in-stream alpha duplicate emitted once —
-    # only alpha and beta flow to the writer
-    emitted = [r["chunk_hash"] for r in survivors]
-    assert len(emitted) == len(set(emitted)) == 2
 
 
 def test_learn_cache_lru_eviction_keeps_hot_entry(spark, monkeypatch):

@@ -1,11 +1,9 @@
 """Round-15 tests: the chunk-spine invariants VERDICT r14 asked to
-pin — ``n_units`` as a pure function of ``chunk_hash`` (task 4) — and
-the ADVICE r14 fixes (chunk_dedup_stream's bounded watermark form,
-shard_packed_chunks' integer-DIV position)."""
+pin — ``n_units`` as a pure function of ``chunk_hash`` (task 4) — the
+ADVICE r14 fix to shard_packed_chunks' integer-DIV position, the
+curriculum pack order, and the local-frame builder."""
 
 from __future__ import annotations
-
-import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,174 +60,6 @@ def test_chunk_units_invariant_on_planted_duplicates(spark, tmp_path):
         .collect()
     )
     assert agg and all(r["lo"] == r["hi"] for r in agg)
-
-
-# --------------------------------------------------------------------------
-# ADVICE r14 — chunk_dedup_stream mirrors dedup_stream's signature:
-# the event-time form bounds state with dropDuplicatesWithinWatermark
-# instead of forcing callers to bypass the screen for bounded state.
-# --------------------------------------------------------------------------
-
-
-def test_chunk_dedup_stream_watermark_form_matches_compat(spark, tmp_path):
-    """The bounded (event-time) form emits the same survivors as the
-    compat unbounded form when duplicates arrive within the delay —
-    and still screens against the static history index."""
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_to_memory,
-    )
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        chunk_dedup_stream,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("chunk_hash", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("doc_id", T.LongType()),
-        ]
-    )
-    base = dt.datetime(2024, 6, 1)
-    # h_hist is known to history; h_dup arrives twice within the delay
-    b1 = [("h_hist", base, 0), ("h_dup", base, 1), ("h_new", base, 2)]
-    b2 = [("h_dup", base + dt.timedelta(minutes=10), 3)]
-    path = str(tmp_path / "chunks")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-    hist = spark.createDataFrame([("h_hist",)], ["chunk_hash"])
-
-    compat = run_to_memory(
-        chunk_dedup_stream(file_stream(spark, path, schema), hist),
-        "cds_compat",
-    ).collect()
-    bounded = run_to_memory(
-        chunk_dedup_stream(
-            file_stream(spark, path, schema), hist, "ts", "2 hours"
-        ),
-        "cds_bounded",
-    ).collect()
-    assert sorted(r["chunk_hash"] for r in compat) == ["h_dup", "h_new"]
-    assert sorted(r["chunk_hash"] for r in bounded) == sorted(
-        r["chunk_hash"] for r in compat
-    )
-
-
-def test_incremental_dedup_stream_watermark_form_matches_compat(
-    spark, tmp_path
-):
-    """The ADVICE r14 doctrine applied family-wide: the document-level
-    ingest screen's bounded (event-time) form emits the same survivors
-    as the compat form when duplicates arrive within the delay — the
-    md5 projection preserves the event-time column, so no caller-side
-    plumbing is needed."""
-    from pyspark.sql import functions as F
-
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_to_memory,
-    )
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        incremental_dedup_stream,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    base = dt.datetime(2024, 6, 1)
-    b1 = [
-        (0, "snapshot doc", base),
-        (1, "fresh one", base),
-    ]
-    b2 = [
-        (2, "fresh one", base + dt.timedelta(minutes=5)),  # in-stream dup
-        (3, "fresh two", base + dt.timedelta(minutes=6)),
-    ]
-    path = str(tmp_path / "docs")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-    hist = (
-        spark.createDataFrame([("snapshot doc",)], ["text"])
-        .select(F.md5(F.col("text").cast("binary")).alias("content_md5"))
-    )
-    compat = run_to_memory(
-        incremental_dedup_stream(file_stream(spark, path, schema), hist),
-        "ids_compat",
-    ).collect()
-    bounded = run_to_memory(
-        incremental_dedup_stream(
-            file_stream(spark, path, schema), hist,
-            event_time_col="ts", delay="2 hours",
-        ),
-        "ids_bounded",
-    ).collect()
-    assert sorted(r["doc_id"] for r in compat) == [1, 3]
-    assert sorted(r["doc_id"] for r in bounded) == sorted(
-        r["doc_id"] for r in compat
-    )
-
-
-def test_near_dup_stream_watermark_form_matches_compat(
-    spark, tmp_path_factory
-):
-    """Same doctrine for the fuzzy screen: the event-time column rides
-    the signature/banding projections (keep_cols), so the pair-dedup
-    state can be watermark-bounded; the bounded replay emits the same
-    flagged pairs and scores as the compat replay."""
-    from pyspark.sql import functions as F
-
-    from udacity_dsnd_projects_spark.functions.dedup import minhash_bands_for
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_to_memory,
-    )
-    from udacity_dsnd_projects_spark.streaming.stateful import near_dup_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    hist = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    index = minhash_bands_for(hist).localCheckpoint(eager=True)
-    base_txt = {
-        r["doc_id"]: r["text"]
-        for r in hist.filter(F.col("doc_id") < 4).collect()
-    }
-    root = tmp_path_factory.mktemp("neardup_wm")
-    path = str(root / "rows")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    t0 = dt.datetime(2024, 6, 1)
-    b1 = [(9000001, base_txt[3], t0)]
-    b2 = [(9000002, base_txt[3], t0 + dt.timedelta(minutes=5))]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-
-    compat = run_to_memory(
-        near_dup_stream(file_stream(spark, path, schema), index),
-        "nds_compat",
-    ).collect()
-    bounded = run_to_memory(
-        near_dup_stream(
-            file_stream(spark, path, schema), index,
-            event_time_col="ts", delay="2 hours",
-        ),
-        "nds_bounded",
-    ).collect()
-    key = lambda r: (r["doc_id"], r["hist_doc_id"], r["est_jaccard"])
-    assert sorted(map(key, bounded)) == sorted(map(key, compat))
-    assert any(r["doc_id"] == 9000001 and r["hist_doc_id"] == 3 for r in compat)
-    # output schema is unchanged by the bounded form (ts dropped)
-    assert bounded == [] or set(bounded[0].asDict()) == {
-        "doc_id", "hist_doc_id", "est_jaccard"
-    }
 
 
 # --------------------------------------------------------------------------

@@ -1,53 +1,19 @@
-"""Round-5 batch-4 operators: relational shapes + time-series faces.
+"""Round-5 batch-4 operators: time-series faces, selection, clustering,
+multimodal dedup and the text-quality gates.
 
 The oracle equivalence for each of these runs in tests/test_queries.py;
-here we pin the semantic properties the oracle alone can't see (the
-zero-count retention of the outer join, session-operator duality, grid
-density of the resample) and the plan shapes that make them scale.
+here we pin the semantic properties the oracle alone can't see
+(session-operator duality, grid density of the resample) and the plan
+shapes that make them scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from udacity_dsnd_projects_spark.operators import relational as rel
 from udacity_dsnd_projects_spark.operators import timeseries as ts
 from udacity_dsnd_projects_spark.operators.windows import sessionize
 from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-
-def test_order_distribution_accounts_for_every_customer(spark, sf_dir):
-    """The LEFT OUTER join must keep zero-order customers: the
-    distribution's customer total equals the dimension's row count."""
-    dist = rel.customer_order_distribution(spark, sf_dir)
-    total = dist.agg(F.sum("n_customers")).first()[0]
-    n_cust = load_table(spark, "customer", sf_dir).count()
-    assert total == n_cust
-
-
-def test_top_revenue_suppliers_hits_global_max(spark, sf_dir):
-    """Every returned supplier carries the same (maximal) revenue."""
-    rows = rel.top_revenue_suppliers(spark, sf_dir).collect()
-    assert rows
-    revs = {r["total_revenue"] for r in rows}
-    assert len(revs) == 1
-
-
-def test_lone_late_supplier_blames_are_bounded_by_orders(spark, sf_dir):
-    blamed = rel.lone_late_supplier_orders(spark, sf_dir)
-    total_blames = blamed.agg(F.sum("n_held_orders")).first()[0] or 0
-    n_orders = load_table(spark, "orders", sf_dir).count()
-    assert total_blames <= n_orders
-
-
-def test_small_quantity_revenue_broadcasts_the_part_dim(spark, sf_dir):
-    plan = (
-        rel.small_quantity_revenue(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
 
 
 def test_gap_fill_grid_is_dense_and_locf_holds(spark, sf_dir):
@@ -126,25 +92,6 @@ def test_session_window_agrees_with_gaps_and_islands(spark, sf_dir):
     )
     assert native.exceptAll(manual).count() == 0
     assert manual.exceptAll(native).count() == 0
-
-
-def test_idle_customer_balance_customers_have_no_recent_orders(spark, sf_dir):
-    seg = rel.idle_customer_balance(spark, sf_dir)
-    # the counted customers really have zero post-cutoff orders
-    cust = load_table(spark, "customer", sf_dir)
-    orders = load_table(spark, "orders", sf_dir).filter(
-        F.col("o_orderdate") >= F.lit(rel.IDLE_CUTOFF).cast("timestamp")
-    )
-    avg_bal = (
-        cust.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal")).first()[0]
-    )
-    rich_idle = (
-        cust.filter(F.col("c_acctbal") > avg_bal)
-        .join(orders, cust["c_custkey"] == orders["o_custkey"], "left_anti")
-        .count()
-    )
-    total = seg.agg(F.sum("n_customers")).first()[0] or 0
-    assert total == rich_idle
 
 
 # --------------------------------------------------------------------------
@@ -287,82 +234,8 @@ def test_ccnet_buckets_are_balanced_terciles(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# batch-4 fourth wave: BM25 lexical retrieval
+# md5 digest parity between the engines
 # --------------------------------------------------------------------------
-from udacity_dsnd_projects_spark.functions import search as srch
-
-
-def test_bm25_returns_topk_per_query_and_self_retrieves(spark, sf_dir):
-    out = srch.bm25_search(spark, sf_dir)
-    per_q = {
-        r["query_id"]: r["n"]
-        for r in out.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert len(per_q) == srch.N_QUERIES
-    for n in per_q.values():
-        assert n <= srch.BM25_TOPK
-    # ranks are contiguous from 1 and scores are non-increasing in rank
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy("rk")
-    bad = (
-        out.withColumn("prev_rk", F.lag("rk").over(w))
-        .withColumn("prev_score", F.lag("score").over(w))
-        .filter(
-            (F.coalesce(F.col("prev_rk"), F.lit(0)) != F.col("rk") - 1)
-            | (
-                F.col("prev_score").isNotNull()
-                & (F.col("prev_score") < F.col("score"))
-            )
-        )
-    )
-    assert bad.count() == 0
-    # at least one query self-retrieves the doc it was cut from (all
-    # of them do on larger corpora; tiny SF makes common-word queries
-    # ambiguous, so only existence is asserted here)
-    assert out.filter(F.col("query_id") == F.col("doc_id")).count() >= 1
-
-
-def test_bm25_plan_prunes_postings_and_pushes_group_limit(spark, sf_dir):
-    plan = (
-        srch.bm25_search(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # top-k executes as WindowGroupLimit (map-side pre-limit)
-    assert "WindowGroupLimit" in plan and "Partial" in plan, plan
-    # the query-term set joins in as a broadcast (postings are pruned
-    # to queried terms, never a full inverted index)
-    assert "BroadcastHashJoin" in plan
-
-
-def test_hybrid_fusion_ranks_dual_mode_hits_highest(spark, sf_dir):
-    """An item found by BOTH retrieval modes must outscore any item
-    found by one mode at the same single-mode rank, and the fused
-    frame preserves both source ranks for triage."""
-    out = srch.hybrid_retrieval_fusion(spark, sf_dir)
-    both = out.filter(
-        F.col("lex_rk").isNotNull() & F.col("vec_rk").isNotNull()
-    )
-    single = out.filter(
-        F.col("lex_rk").isNull() | F.col("vec_rk").isNull()
-    )
-    if both.count() > 0 and single.count() > 0:
-        best_single = single.agg(F.max("rrf")).first()[0]
-        worst_both_possible = 2.0 / (srch.RRF_K + srch.BM25_TOPK)
-        # structural bound: a dual hit at worst ranks still beats a
-        # single hit at best rank iff 2/(K+k) > 1/(K+1) — holds for
-        # K=60, k=10
-        assert worst_both_possible > 1.0 / (srch.RRF_K + 1)
-        assert best_single <= 1.0 / (srch.RRF_K + 1) + 1e-12
-    # every fused rank list is contiguous from 1
-    per_q = out.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n"), F.max("fused_rk").alias("mx")
-    )
-    assert per_q.filter(F.col("n") != F.col("mx")).count() == 0
 
 
 def test_media_digest_is_utf8_md5_even_for_non_ascii(spark):
@@ -386,12 +259,11 @@ def test_media_digest_is_utf8_md5_even_for_non_ascii(spark):
 
 def test_checkpointed_ops_scan_the_corpus_once(spark, sf_dir):
     """The checkpoint placements are load-bearing: without them the
-    postings/digest subtrees re-evaluate per consumer (observed as 4-6
-    parquet scans). Lock the collapsed plans."""
+    digest subtree re-evaluates per consumer (observed as 4-6 parquet
+    scans). Lock the collapsed plan."""
     import re
 
     for fn, cap in [
-        (srch.bm25_search, 1),
         (mm.media_dedup, 0),  # digest checkpoint covers everything
     ]:
         plan = (

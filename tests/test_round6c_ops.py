@@ -349,7 +349,7 @@ def test_transition_stream_survives_chunked_groups(spark, tmp_path_factory):
             "append"
         ).parquet(path)
         got = run_to_memory(
-            transition_stateful(file_stream(spark, path, schema)),
+            transition_stateful(file_stream(spark, path, schema, max_files_per_trigger=1)),
             "trans_chunked",
         ).collect()
         # 19 transitions in exact event order: a>b, b>c, c>d, d>a, ...

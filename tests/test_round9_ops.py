@@ -210,7 +210,7 @@ def test_observed_stream_metrics_per_micro_batch(spark, sf_dir, tmp_path_factory
     _write_chunks(ev, _ts_chunk_edges(ev, 3), src)
 
     stream = observed_stream(
-        file_stream(spark, src, ev.schema),
+        file_stream(spark, src, ev.schema, max_files_per_trigger=1),
         ["value"],
         {"nonpos_value": F.col("value") <= 0},
     )
@@ -507,7 +507,7 @@ def test_strip_against_index_stream_equals_batch(spark, tmp_path_factory):
 
     new_docs = spark.read.schema(hist.schema).parquet(src)
     run_foreach_batch(
-        file_stream(spark, src, hist.schema),
+        file_stream(spark, src, hist.schema, max_files_per_trigger=1),
         lambda b, _: strip_against_index(b, index)
         .write.mode("append")
         .parquet(sink),
@@ -540,63 +540,6 @@ GAP_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
-
-
-@pytest.mark.slow
-def test_daily_counts_stream_merges_late_rows_into_live_state(
-    spark, tmp_path_factory
-):
-    """The late-row contract of the monitor stream face, as the engine
-    actually behaves: update-mode aggregation's watermark bounds STATE,
-    it is not an input gate. A late row whose day-state is still live
-    (eviction happens only at the end of the batch in which the
-    watermark advanced past the day) MERGES into the count and the day
-    re-emits — matching the batch face, which counts every row — while
-    a new day in the same micro-batch opens normally. Day 1's final
-    count must therefore be 2, the same answer the batch face gives on
-    the full event set."""
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        daily_type_counts_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_to_memory,
-    )
-
-    root = tmp_path_factory.mktemp("late_days")
-    path = str(root / "events")
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def t(d, h):
-        return dt.datetime(2024, 1, d, h)
-
-    b1 = [(t(1, 10), "e"), (t(2, 9), "e")]  # watermark -> day2 start
-    b2 = [(t(1, 23), "e"), (t(3, 1), "e")]  # day1 late-but-live; day3 opens
-    for b in (b1, b2):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-
-    rows = run_to_memory(
-        daily_type_counts_stream(
-            file_stream(spark, path, schema), delay="0 seconds"
-        ),
-        "late_day_stream",
-        output_mode="update",
-    ).collect()
-    final = {}
-    for r in rows:  # update mode: last emission per (type, day) wins
-        final[(r["event_type"], str(r["d"]))] = r["n_events"]
-    assert final == {
-        ("e", "2024-01-01"): 2,  # late row merged into still-live day-1
-        ("e", "2024-01-02"): 1,
-        ("e", "2024-01-03"): 1,
-    }
 
 
 @pytest.mark.slow
@@ -672,7 +615,7 @@ def test_transition_stateful_drops_late_rows(spark, tmp_path_factory):
     got = sorted(
         (r["prev_type"], r["next_type"])
         for r in run_to_memory(
-            transition_stateful(file_stream(spark, path, EVENT_SCHEMA)),
+            transition_stateful(file_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger=1)),
             "late_trans_stream",
         ).collect()
     )
@@ -709,7 +652,7 @@ def test_gap_fill_stateful_folds_late_rows_without_time_travel(
         ).parquet(path)
 
     rows = run_to_memory(
-        gap_fill_stateful(file_stream(spark, path, GAP_SCHEMA)),
+        gap_fill_stateful(file_stream(spark, path, GAP_SCHEMA, max_files_per_trigger=1)),
         "late_gap_stream",
         output_mode="update",
     ).collect()
@@ -725,40 +668,6 @@ def test_gap_fill_stateful_folds_late_rows_without_time_travel(
         (1, t(11, 0)): (1.0, 0, 0),
         (1, t(12, 0)): (3.0, 2, 1),  # late row folded: counted, not argmax
     }
-
-
-@pytest.mark.slow
-def test_daily_type_anomaly_stream_equals_batch(spark, sf_dir, tmp_path_factory):
-    """Task 9 — the streaming monitor face: a chronological 3-chunk
-    replay of the events table through the watermarked daily-count
-    stream + compacted-table upsert, scored by the SHARED scorer, must
-    equal the batch daily_type_anomaly answer row-for-row."""
-    from tests.replay import _ts_chunk_edges, _write_chunks
-    from udacity_dsnd_projects_spark.operators.analytics import daily_type_anomaly
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-    from udacity_dsnd_projects_spark.streaming.monitor import (
-        anomaly_monitor_view,
-        daily_type_counts_stream,
-    )
-    from udacity_dsnd_projects_spark.streaming.sinks import compacted_table_upsert
-    from udacity_dsnd_projects_spark.streaming.sources import (
-        file_stream,
-        run_foreach_batch,
-    )
-
-    root = tmp_path_factory.mktemp("monitor")
-    src, table = str(root / "events"), str(root / "rollup")
-    ev = load_table(spark, "events", sf_dir)
-    _write_chunks(ev, _ts_chunk_edges(ev, 3), src)
-
-    counts = daily_type_counts_stream(file_stream(spark, src, ev.schema))
-    run_foreach_batch(
-        counts, compacted_table_upsert(table, ["event_type", "d"], "n_events")
-    )
-
-    got = sorted(map(tuple, anomaly_monitor_view(spark, table).collect()))
-    want = sorted(map(tuple, daily_type_anomaly(spark, sf_dir).collect()))
-    assert got == want and got
 
 
 @pytest.mark.slow
@@ -793,7 +702,7 @@ def test_transition_stateful_late_count_in_state(spark, tmp_path_factory):
     got = sorted(
         (r["prev_type"], r["next_type"])
         for r in run_to_memory(
-            transition_stateful(file_stream(spark, path, EVENT_SCHEMA)),
+            transition_stateful(file_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger=1)),
             "late_count_stream",
         ).collect()
     )

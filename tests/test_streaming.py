@@ -13,6 +13,8 @@ import pytest
 from udacity_dsnd_projects_spark.schemas import (
     STATION,
     TURNSTILE,
+    WEATHER,
+    WEATHER_STATUS_DOMAIN,
 )
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -22,6 +24,7 @@ from udacity_dsnd_projects_spark.streaming.cta import (
     faust_station_transform,
     station_table_latest,
     turnstile_summary,
+    weather_display,
 )
 from udacity_dsnd_projects_spark.streaming.sources import (
     file_stream,
@@ -98,13 +101,43 @@ def stedi_dirs(spark, tmp_path_factory):
     return env_path, risk_path
 
 
+def test_streaming_package_imports_no_batch_operator_modules():
+    """The pipelines' package stands alone: no module under
+    ``streaming/`` imports the batch ``functions`` or ``operators``
+    packages, at module level or inside a function."""
+    import ast
+    from pathlib import Path
+
+    import udacity_dsnd_projects_spark.streaming as streaming
+
+    pkg = streaming.__name__.split(".")
+    banned = tuple(f"{pkg[0]}.{sub}." for sub in ("functions", "operators"))
+    offenders = []
+    for path in sorted(Path(streaming.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = pkg[: len(pkg) - node.level + 1] if node.level else []
+                module = ".".join(base + ([node.module] if node.module else []))
+                names = [module] + [f"{module}.{a.name}" for a in node.names]
+            else:
+                continue
+            offenders += [
+                f"{path.name}:{node.lineno} {n}"
+                for n in names
+                if f"{n}.".startswith(banned)
+            ]
+    assert not offenders, offenders
+
+
 def test_envelope_decode_stream_equals_batch(spark, stedi_dirs):
     env_path, _ = stedi_dirs
     batch = derive_birth_year(
         parse_redis_envelope(spark.read.schema(KV_SCHEMA).parquet(env_path))
     )
     stream = derive_birth_year(
-        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA))
+        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA, max_files_per_trigger=1))
     )
     got = run_to_memory(stream, "env_decode").collect()
     want = batch.collect()
@@ -119,9 +152,9 @@ def test_stream_stream_join_compat(spark, stedi_dirs):
     rows."""
     env_path, risk_path = stedi_dirs
     customers = derive_birth_year(
-        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA))
+        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA, max_files_per_trigger=1))
     )
-    risks = parse_stedi_events(file_stream(spark, risk_path, KV_SCHEMA))
+    risks = parse_stedi_events(file_stream(spark, risk_path, KV_SCHEMA, max_files_per_trigger=1))
     joined = join_risk(risks, customers, compat_unbounded_state=True)
     sink = to_kafka_shape(joined, "email")
     got = run_to_memory(sink, "risk_sink").collect()
@@ -143,10 +176,10 @@ def test_stream_stream_join_with_watermark_runs(spark, stedi_dirs):
     """Idiomatic T3 mode: watermarked join still yields all on-time rows."""
     env_path, risk_path = stedi_dirs
     customers = derive_birth_year(
-        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA))
+        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA, max_files_per_trigger=1))
     ).withColumn("cts", F.current_timestamp())
     risks = parse_stedi_events(
-        file_stream(spark, risk_path, KV_SCHEMA)
+        file_stream(spark, risk_path, KV_SCHEMA, max_files_per_trigger=1)
     ).withColumn("rts", F.current_timestamp())
     joined = join_risk(risks, customers, watermarks=("rts", "cts"))
     got = run_to_memory(joined, "risk_wm")
@@ -159,9 +192,9 @@ def test_streaming_join_without_watermark_is_refused(spark, stedi_dirs):
     instead of silently building unbounded state."""
     env_path, risk_path = stedi_dirs
     customers = derive_birth_year(
-        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA))
+        parse_redis_envelope(file_stream(spark, env_path, KV_SCHEMA, max_files_per_trigger=1))
     )
-    risks = parse_stedi_events(file_stream(spark, risk_path, KV_SCHEMA))
+    risks = parse_stedi_events(file_stream(spark, risk_path, KV_SCHEMA, max_files_per_trigger=1))
     with pytest.raises(ValueError, match="unbounded join state"):
         join_risk(risks, customers)
 
@@ -227,11 +260,11 @@ def test_watermarked_join_bounds_state_vs_compat(spark, tmp_path_factory):
     def build(watermarked: bool):
         customers = derive_birth_year(
             parse_redis_envelope(
-                file_stream(spark, env_path, KV_TS_SCHEMA), ts_col="ts"
+                file_stream(spark, env_path, KV_TS_SCHEMA, max_files_per_trigger=1), ts_col="ts"
             )
         )
         risks = parse_stedi_events(
-            file_stream(spark, risk_path, KV_TS_SCHEMA), ts_col="ts"
+            file_stream(spark, risk_path, KV_TS_SCHEMA, max_files_per_trigger=1), ts_col="ts"
         ).withColumnRenamed("event_ts", "risk_event_ts")
         if watermarked:
             return join_risk(
@@ -275,7 +308,8 @@ def test_turnstile_summary_stream_equals_batch(spark, turnstile_dir):
             state[r["STATION_ID"]] = r["COUNT"]
 
     stream = turnstile_summary(
-        file_stream(spark, turnstile_dir, TURNSTILE), ksql_compat_names=True
+        file_stream(spark, turnstile_dir, TURNSTILE, max_files_per_trigger=1),
+        ksql_compat_names=True,
     )
     run_foreach_batch(stream, upsert, output_mode="update")
 
@@ -283,6 +317,27 @@ def test_turnstile_summary_stream_equals_batch(spark, turnstile_dir):
     want = {r["station_id"]: r["count"] for r in batch.collect()}
     assert state == want
     assert sum(state.values()) == 210
+
+
+def test_weather_display_formats_every_status(spark):
+    """F5 — the dashboard's weather formatting: one output row per input
+    row, every status in the enum domain displayed the way the
+    reference's ``replace('_',' ').title()`` does, and the temperature
+    rounded to one decimal."""
+    # temperature is a float column: 99.95 is stored as 99.9499969...
+    temps = [(12.34, 12.3), (71.26, 71.3), (-3.97, -4.0), (0.04, 0.0), (99.95, 99.9)]
+    rows = [
+        (1_000 + i, t, status)
+        for i, ((t, _), status) in enumerate(zip(temps, WEATHER_STATUS_DOMAIN))
+    ]
+    out = weather_display(spark.createDataFrame(rows, WEATHER))
+    assert out.columns == ["timestamp", "temperature", "status_display"]
+    want = [
+        (ts, shown, status.replace("_", " ").title())
+        for (ts, _, status), (_, shown) in zip(rows, temps)
+    ]
+    assert sorted(map(tuple, out.collect())) == want
+    assert want[1][2] == "Partly Cloudy"
 
 
 def test_windowed_agg_with_watermark_stream_equals_batch(spark, tmp_path_factory):
@@ -314,7 +369,7 @@ def test_windowed_agg_with_watermark_stream_equals_batch(spark, tmp_path_factory
         ).write.mode("append").parquet(path)
 
     stream = (
-        file_stream(spark, path, schema)
+        file_stream(spark, path, schema, max_files_per_trigger=1)
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
@@ -367,7 +422,7 @@ def test_session_window_stream_equals_batch_sessionize(spark, tmp_path_factory):
     ).coalesce(1).write.mode("append").parquet(path)
 
     stream = (
-        file_stream(spark, path, schema)
+        file_stream(spark, path, schema, max_files_per_trigger=1)
         .withWatermark("ts", "1 minute")
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
@@ -405,7 +460,7 @@ def test_stateful_latest_per_key(spark, tmp_path_factory):
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
 
     out = latest_per_key_stateful(
-        file_stream(spark, path, schema), "k", "seq", ("val",)
+        file_stream(spark, path, schema, max_files_per_trigger=1), "k", "seq", ("val",)
     )
     rows = run_to_memory(out, "lww_state", output_mode="update").collect()
     # last emitted row per key is the final table state
@@ -505,14 +560,17 @@ def test_latest_per_key_tie_break_is_order_free(spark, tmp_path):
         _append_files(spark, src, batches, schema)
         emitted = _run_collect(
             latest_per_key_stateful(
-                file_stream(spark, src, schema), "station_id", "stop_id", values
+                file_stream(spark, src, schema, max_files_per_trigger=1),
+                "station_id",
+                "stop_id",
+                values,
             ),
             str(tmp_path / name / "ck_state"),
         )
         assert as_table(emitted) == want, name  # last emit per key wins
 
         q = (
-            file_stream(spark, src, schema)
+            file_stream(spark, src, schema, max_files_per_trigger=1)
             .writeStream.foreachBatch(compacted_table_upsert(table, ["station_id"], "stop_id"))
             .option("checkpointLocation", str(tmp_path / name / "ck_sink"))
             .trigger(availableNow=True)
@@ -532,7 +590,12 @@ def test_stateful_latest_per_key_restart_keeps_winners(spark, tmp_path):
 
     def run():
         return _run_collect(
-            latest_per_key_stateful(file_stream(spark, src, LWW_SCHEMA), "k", "seq", ("val",)),
+            latest_per_key_stateful(
+                file_stream(spark, src, LWW_SCHEMA, max_files_per_trigger=1),
+                "k",
+                "seq",
+                ("val",),
+            ),
             ckpt,
         )
 
@@ -568,7 +631,7 @@ def test_stateful_latest_per_key_refuses_pandas_state_checkpoint(spark, tmp_path
 
     _append_files(spark, src, [[(1, 1, "a")]], LWW_SCHEMA)
     pandas_table = (
-        file_stream(spark, src, LWW_SCHEMA)
+        file_stream(spark, src, LWW_SCHEMA, max_files_per_trigger=1)
         .groupBy("k")
         .applyInPandasWithState(
             keep_max,
@@ -581,7 +644,9 @@ def test_stateful_latest_per_key_refuses_pandas_state_checkpoint(spark, tmp_path
     assert len(_run_collect(pandas_table, ckpt)) == 1
 
     spark.createDataFrame([(2, 1, "b")], LWW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    native = latest_per_key_stateful(file_stream(spark, src, LWW_SCHEMA), "k", "seq", ("val",))
+    native = latest_per_key_stateful(
+        file_stream(spark, src, LWW_SCHEMA, max_files_per_trigger=1), "k", "seq", ("val",)
+    )
     with pytest.raises(
         StreamingQueryException,
         match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA",
@@ -605,7 +670,7 @@ def test_checkpoint_restart_processes_only_new_data(spark, tmp_path_factory):
 
     def run_once():
         q = (
-            file_stream(spark, src, schema)
+            file_stream(spark, src, schema, max_files_per_trigger=1)
             .writeStream.foreachBatch(collect)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -644,7 +709,7 @@ def _checkpoint_manager(spark, directory):
 
 def _sum_by_key(spark, src: str):
     return (
-        file_stream(spark, src, SUM_SCHEMA)
+        file_stream(spark, src, SUM_SCHEMA, max_files_per_trigger=1)
         .groupBy("k")
         .agg(F.count("*").alias("n"), F.sum("v").alias("total"))
     )
@@ -766,45 +831,6 @@ def test_envelope_decode_tolerates_corrupt_payloads(spark):
     assert [(r.email, r.birthYear) for r in got] == [("g@test.com", "1990")]
 
 
-def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path_factory):
-    """Streaming exact dedup: a duplicate key replayed in a LATER
-    micro-batch is dropped (state store remembers keys across
-    batches); both the unbounded and watermarked forms agree here."""
-    from udacity_dsnd_projects_spark.streaming.stateful import dedup_stream
-
-    root = tmp_path_factory.mktemp("sdedup")
-    path = str(root / "rows")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("val", T.StringType()),
-        ]
-    )
-    import datetime as dt
-
-    base = dt.datetime(2024, 6, 1)
-    b1 = [(i, base + dt.timedelta(minutes=i), f"first_{i}") for i in range(8)]
-    # batch 2 re-sends ids 0-3 (producer retry) plus new ids 8-9
-    b2 = [(i, base + dt.timedelta(minutes=30 + i), f"retry_{i}") for i in range(4)]
-    b2 += [(i, base + dt.timedelta(minutes=30 + i), f"first_{i}") for i in (8, 9)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-
-    got = run_to_memory(
-        dedup_stream(file_stream(spark, path, schema), ["id"]), "sdedup_unbounded"
-    ).collect()
-    vals = {r["id"]: r["val"] for r in got}
-    assert len(vals) == 10
-    assert all(v.startswith("first_") for v in vals.values())  # retries dropped
-
-    got_wm = run_to_memory(
-        dedup_stream(file_stream(spark, path, schema), ["id"], "ts", "2 hours"),
-        "sdedup_wm",
-    ).collect()
-    assert {r["id"]: r["val"] for r in got_wm} == vals
-
-
 def test_compacted_table_sink(spark, tmp_path_factory):
     """K5 — the foreachBatch compacted-table sink converges to the
     batch latest-per-key answer, including stale rows replayed in a
@@ -830,7 +856,7 @@ def test_compacted_table_sink(spark, tmp_path_factory):
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
 
     q = (
-        file_stream(spark, src, schema)
+        file_stream(spark, src, schema, max_files_per_trigger=1)
         .writeStream.foreachBatch(compacted_table_upsert(table, ["k"], "seq"))
         .outputMode("update")
         .trigger(availableNow=True)
@@ -914,7 +940,7 @@ def test_compacted_table_upsert_evaluates_each_batch_once(spark, tmp_path):
         persistent.append(sc._jsc.getPersistentRDDs().size())
 
     table_stream = latest_per_key_stateful(
-        file_stream(spark, src, LWW_SCHEMA), "k", "seq", ("val",)
+        file_stream(spark, src, LWW_SCHEMA, max_files_per_trigger=1), "k", "seq", ("val",)
     )
     q = (
         table_stream.filter(counted("val"))  # a filter, so no action prunes it
@@ -970,7 +996,7 @@ def test_faust_station_table_stream_equals_batch(spark, tmp_path_factory):
         for r in latest.collect():
             state[r["station_id"]] = (r["station_name"], r["order"], r["line"])
 
-    run_foreach_batch(file_stream(spark, path, STATION), upsert)
+    run_foreach_batch(file_stream(spark, path, STATION, max_files_per_trigger=1), upsert)
 
     batch_latest = station_table_latest(
         faust_station_transform(
@@ -1054,7 +1080,7 @@ def test_corpus_quality_rollup_stream_equals_batch(spark, tmp_path_factory):
         )
 
     got_rows = run_to_memory(
-        rollup(file_stream(spark, path, schema)),
+        rollup(file_stream(spark, path, schema, max_files_per_trigger=1)),
         "corpus_rollup",
         output_mode="complete",
     ).collect()
@@ -1064,200 +1090,6 @@ def test_corpus_quality_rollup_stream_equals_batch(spark, tmp_path_factory):
         for r in rollup(spark.read.schema(schema).parquet(path)).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_interval_join_stream_equals_batch(spark, tmp_path_factory):
-    """Stream-stream time-interval join (points into 15-min incident
-    windows) emits exactly the batch join's match set when the corpus
-    is replayed through micro-batches."""
-    from udacity_dsnd_projects_spark.streaming.interval import (
-        interval_join_batch_reference,
-        interval_join_stream,
-    )
-
-    root = tmp_path_factory.mktemp("ivj")
-    path = str(root / "events")
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (
-            i,
-            base + dt.timedelta(minutes=5 * i, seconds=i % 3),
-            "error" if i % 7 == 0 else "click",
-            i % 4,
-        )
-        for i in range(60)
-    ]
-    for b in range(3):
-        spark.createDataFrame(rows[b * 20 : (b + 1) * 20], schema).coalesce(
-            1
-        ).write.mode("append").parquet(path)
-
-    got_rows = run_to_memory(
-        interval_join_stream(file_stream(spark, path, schema)),
-        "ivj_join",
-        output_mode="append",
-    ).collect()
-    got = {(r["window_id"], r["event_id"], r["user_id"]) for r in got_rows}
-
-    batch = interval_join_batch_reference(spark.read.schema(schema).parquet(path))
-    want = {(r["window_id"], r["event_id"], r["user_id"]) for r in batch.collect()}
-    assert got == want and len(want) > 0
-
-
-def test_incremental_dedup_stream_equals_batch(spark, tmp_path_factory):
-    """Recurring-crawl shape: micro-batches of new docs are content-
-    hashed, deduped within the stream, and anti-joined against the
-    static prior-snapshot hash table (stream-static left anti). The
-    surviving set equals the batch answer computed on the same rows."""
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        incremental_dedup_stream,
-    )
-
-    root = tmp_path_factory.mktemp("incdedup")
-    path = str(root / "rows")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    hist_rows = [(100 + i, f"snapshot doc {i}") for i in range(6)]
-    b1 = [
-        (0, "brand new zero"),
-        (1, "snapshot doc 2"),  # already in the snapshot -> dropped
-        (2, "brand new two"),
-    ]
-    b2 = [
-        (3, "brand new two"),  # within-stream dup of doc 2 -> dropped
-        (4, "snapshot doc 5"),  # snapshot dup -> dropped
-        (5, "brand new five"),
-    ]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-
-    hist_hashes = (
-        spark.createDataFrame(hist_rows, schema)
-        .select(F.md5(F.col("text").cast("binary")).alias("content_md5"))
-        .distinct()
-    )
-    got_rows = run_to_memory(
-        incremental_dedup_stream(file_stream(spark, path, schema), hist_hashes),
-        "inc_dedup_stream",
-    ).collect()
-    got = {r["doc_id"] for r in got_rows}
-    assert got == {0, 2, 5}
-    # batch reference over the same rows
-    batch = (
-        spark.read.schema(schema)
-        .parquet(path)
-        .withColumn("content_md5", F.md5(F.col("text").cast("binary")))
-        .groupBy("content_md5")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .join(hist_hashes, "content_md5", "left_anti")
-    )
-    assert {r["doc_id"] for r in batch.collect()} == got
-
-
-def test_near_dup_stream_equals_batch(spark, tmp_path_factory):
-    """Streaming fuzzy dedup: new docs stream against a static LSH
-    band index; an exact re-crawl and a lightly mutated copy are
-    flagged with the same candidates + scores the batch face finds,
-    and unrelated text passes clean."""
-    from udacity_dsnd_projects_spark.functions.dedup import minhash_bands_for
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-    from udacity_dsnd_projects_spark.streaming.stateful import near_dup_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    hist = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    index = minhash_bands_for(hist).localCheckpoint(eager=True)
-
-    base = {r["doc_id"]: r["text"] for r in hist.filter(F.col("doc_id") < 6).collect()}
-    mutated = base[5].rsplit(" ", 1)[0] + " zzzmutation"
-    root = tmp_path_factory.mktemp("neardup_stream")
-    path = str(root / "rows")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    b1 = [(9000001, base[3]), (9000002, "zzz qqq vvv kkk jjj www uuu ppp")]
-    b2 = [(9000003, mutated)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-
-    got_rows = run_to_memory(
-        near_dup_stream(file_stream(spark, path, schema), index), "near_dup_stream"
-    ).collect()
-    got = {(r["doc_id"], r["hist_doc_id"], r["est_jaccard"]) for r in got_rows}
-    # batch reference: identical pipeline over the same static rows
-    want_rows = near_dup_stream(
-        spark.read.schema(schema).parquet(path), index
-    ).collect()
-    want = {(r["doc_id"], r["hist_doc_id"], r["est_jaccard"]) for r in want_rows}
-    assert got == want
-    # the exact re-crawl hits its source at est_jaccard 1.0
-    assert (9000001, 3, 1.0) in got
-    # the mutated copy still collides with its source over threshold
-    assert any(d == 9000003 and h == 5 for d, h, _ in got)
-    # gibberish stays clean
-    assert not any(d == 9000002 for d, _, _ in got)
-
-
-def test_url_dedup_stream_equals_batch(spark, tmp_path_factory):
-    """Crawl-frontier shape: a stream of raw URLs is normalized with
-    the SAME expression chain as the batch face and deduped on the
-    canonical form across micro-batches; the surviving set equals the
-    batch distinct-canonical answer (one logical plan, two modes)."""
-    from udacity_dsnd_projects_spark.functions.web import normalize_url
-    from udacity_dsnd_projects_spark.streaming.stateful import dedup_stream
-
-    root = tmp_path_factory.mktemp("urldedup")
-    path = str(root / "rows")
-    schema = T.StructType(
-        [
-            T.StructField("crawl_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-        ]
-    )
-    b1 = [
-        (0, "HTTP://WWW.Example.COM:80/a?id=1&utm_source=x#frag"),
-        (1, "http://example.com/a?id=1"),  # same canonical as crawl 0
-        (2, "https://Example.com:443/b/"),
-        (3, "https://example.com/b?utm_campaign=y"),  # same canonical as 2
-    ]
-    b2 = [
-        (4, "http://www.example.com/a/?id=1&ref=rss"),  # dup of 0/1 again
-        (5, "https://example.com/c"),  # genuinely new
-    ]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
-
-    stream = file_stream(spark, path, schema).withColumn(
-        "canon_url", normalize_url(F.col("url"))
-    )
-    got = run_to_memory(
-        dedup_stream(stream, ["canon_url"]), "url_dedup_stream"
-    ).collect()
-    batch = (
-        spark.read.schema(schema)
-        .parquet(path)
-        .select(normalize_url(F.col("url")).alias("canon_url"))
-        .distinct()
-        .collect()
-    )
-    assert {r["canon_url"] for r in got} == {r["canon_url"] for r in batch}
-    assert len(got) == 3  # a, b, c — one survivor per canonical URL
 
 
 def test_cdc_changelog_stream_equals_batch_merge(spark, sf_dir, tmp_path_factory):
@@ -1283,7 +1115,7 @@ def test_cdc_changelog_stream_equals_batch_merge(spark, sf_dir, tmp_path_factory
     log.filter(F.col("seq") > 1).coalesce(1).write.mode("append").parquet(src)
 
     q = (
-        file_stream(spark, src, schema)
+        file_stream(spark, src, schema, max_files_per_trigger=1)
         .writeStream.foreachBatch(compacted_table_upsert(table, ["doc_id"], "seq"))
         .outputMode("update")
         .trigger(availableNow=True)
@@ -1338,7 +1170,7 @@ def test_gap_fill_stateful_fills_silent_hours_across_batches(spark, tmp_path_fac
     spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(path)
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
 
-    out = gap_fill_stateful(file_stream(spark, path, schema))
+    out = gap_fill_stateful(file_stream(spark, path, schema, max_files_per_trigger=1))
     rows = run_to_memory(out, "gapfill_state", output_mode="update").collect()
 
     # last emission per (user, hr) is the current row (update mode)
@@ -1380,7 +1212,8 @@ def test_window_chunks_stream_equals_batch(spark, tmp_path_factory):
     spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(path)
 
     got = run_to_memory(
-        window_chunks(file_stream(spark, path, schema)), "win_chunks_stream"
+        window_chunks(file_stream(spark, path, schema, max_files_per_trigger=1)),
+        "win_chunks_stream",
     ).collect()
     batch = window_chunks(spark.read.schema(schema).parquet(path)).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
@@ -1423,7 +1256,7 @@ def test_transition_stream_equals_batch(spark, tmp_path_factory):
         ).write.mode("append").parquet(path)
 
     got_rows = run_to_memory(
-        transition_stateful(file_stream(spark, path, schema)),
+        transition_stateful(file_stream(spark, path, schema, max_files_per_trigger=1)),
         "transition_stream",
     ).collect()
     got: dict[tuple, int] = {}
@@ -1444,69 +1277,3 @@ def test_transition_stream_equals_batch(spark, tmp_path_factory):
     assert got == want
     # each user contributes exactly n-1 transitions
     assert sum(got.values()) == 4 * 8
-
-
-def test_substring_match_stream_equals_batch(spark, tmp_path_factory):
-    """Streaming winnowing probe: new docs stream against a static
-    winnowing index; a document that WRAPS a history document (the
-    quote/template case exact and MinHash probes miss at low overall
-    similarity) is flagged with the same pairs + scores the identical
-    pipeline computes statically, and unrelated text passes clean."""
-    from udacity_dsnd_projects_spark.functions.dedup import (
-        winnowing_index_for,
-    )
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-    from udacity_dsnd_projects_spark.streaming.stateful import (
-        substring_match_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    hist = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    index = winnowing_index_for(hist).localCheckpoint(eager=True)
-
-    base = {
-        r["doc_id"]: r["text"]
-        for r in hist.filter(F.col("doc_id") < 6).collect()
-    }
-    root = tmp_path_factory.mktemp("substr_stream")
-    path = str(root / "rows")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    # b1: an exact re-crawl (overlap 1.0 vs its source) + gibberish;
-    # b2: a new doc QUOTING doc 5 between fresh prose — the substring
-    # case
-    quoted = "breaking report today " + base[5] + " officials did not comment"
-    b1 = [(9000001, base[3]), (9000002, "zz qq vv kk jj ww uu pp yy tt")]
-    b2 = [(9000003, quoted)]
-    for b in (b1, b2):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-
-    got_rows = run_to_memory(
-        substring_match_stream(file_stream(spark, path, schema), index),
-        "substring_match_stream",
-    ).collect()
-    got = {
-        (r["doc_id"], r["hist_doc_id"], r["shared"], r["overlap"])
-        for r in got_rows
-    }
-    # batch reference: identical pipeline over the same static rows
-    want = {
-        (r["doc_id"], r["hist_doc_id"], r["shared"], r["overlap"])
-        for r in substring_match_stream(
-            spark.read.schema(schema).parquet(path), index
-        ).collect()
-    }
-    assert got == want
-    assert (9000001, 3) in {(d, h) for d, h, _, _ in got}
-    by_pair = {(d, h): ov for d, h, _, ov in got}
-    assert by_pair[(9000001, 3)] == 1.0  # exact re-crawl: full containment
-    # the quoting doc is flagged against its quoted source
-    assert any(d == 9000003 and h == 5 for d, h in by_pair)
-    # gibberish stays clean
-    assert not any(d == 9000002 for d, h in by_pair)

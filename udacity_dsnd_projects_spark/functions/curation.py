@@ -1179,10 +1179,7 @@ def _deleak_release(ids: DataFrame, leaks: DataFrame) -> DataFrame:
     """The release join of :func:`deleak_split` over explicit frames:
     ``ids`` (doc_id — batch corpus scan OR an arriving crawl stream)
     left-joined against the pair-bounded leak frame (doc_id,
-    __n_cross). Shared verbatim by the batch face and the streaming
-    probe (:func:`~udacity_dsnd_projects_spark.streaming.stateful.
-    deleak_probe_stream`), so stream == batch by construction. The
-    split label is pure modular arithmetic on the row's own id — no
+    __n_cross). The split label is pure modular arithmetic on the row's own id — no
     second corpus scan, stateless under a readStream."""
     from udacity_dsnd_projects_spark.functions.pipeline import split_assign
 
@@ -1589,10 +1586,7 @@ def _quarantine_release(docs: DataFrame, rep: DataFrame) -> DataFrame:
     """The release join of :func:`quarantine_drifting_sources` over
     explicit frames: ``docs`` (doc_id, lang, source — batch corpus
     scan OR an arriving crawl stream) broadcast-left-joined against
-    the metadata-sized drift report (lang, source, drifted). Shared
-    verbatim by the batch face and the streaming probe
-    (:func:`~udacity_dsnd_projects_spark.streaming.stateful.
-    quarantine_probe_stream`), so stream == batch by construction —
+    the metadata-sized drift report (lang, source, drifted) —
     stateless, one broadcast join, no shuffle of the document side."""
     return docs.join(F.broadcast(rep), ["lang", "source"], "left").select(
         "doc_id",

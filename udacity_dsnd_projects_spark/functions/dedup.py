@@ -469,8 +469,7 @@ def _capped_pair_counts(ex: DataFrame, key: str) -> DataFrame:
     re-evaluates the whole hashing subtree (tokenize → per-char hash
     fold → window cap) a second time. Postings are (doc_id, key) slim
     — no text — so the materialization is cheap at any scale (on a
-    cluster this is the published inverted index being persisted,
-    exactly what winnowing_index_for ships)."""
+    cluster this is the published inverted index being persisted)."""
     kept = _df_capped(ex, key).localCheckpoint(eager=True)
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = kept.alias("a").hint("merge"), kept.alias("b").hint("merge")
@@ -1852,28 +1851,6 @@ JOIN sizes sa ON p.doc_a = sa.doc_id
 JOIN sizes sb ON p.doc_b = sb.doc_id
 WHERE p.common * 1.0 / LEAST(sa.n, sb.n) >= {WINNOW_OVERLAP_T}
 """
-
-
-def winnowing_index_for(docs: DataFrame) -> DataFrame:
-    """The publishable winnowing index a curation run materializes —
-    what :func:`~udacity_dsnd_projects_spark.streaming.stateful.substring_match_stream`
-    probes with newly-crawled documents: one (fp, hist_doc_id,
-    hist_fps) row per KEPT fingerprint per document, carrying the
-    document's full kept-fingerprint array so a colliding probe scores
-    the pair row-locally (``array_intersect``) with no aggregation —
-    the same carry-the-signature trick as ``minhash_bands_for``. The
-    :data:`SHINGLE_DF_CAP` applies at PUBLISH time: hyper-common
-    fingerprints (site-boilerplate minima) are dropped from both the
-    probe keys and the carried arrays, exactly as the batch match
-    stage drops them before its self-join. At scale this is a bucketed
-    table keyed on ``fp`` so the stream-side probe prunes."""
-    kept = _df_capped(_winnow_fp_rows(docs), "fp")
-    arrs = kept.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("fp")).alias("hist_fps")
-    )
-    return kept.join(arrs, "doc_id").select(
-        "fp", F.col("doc_id").alias("hist_doc_id"), "hist_fps"
-    )
 
 
 def winnowing_density_report(spark: SparkSession, sf_dir: str) -> DataFrame:

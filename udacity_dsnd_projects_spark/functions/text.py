@@ -2104,10 +2104,7 @@ def bpe_encode_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def encode_chunks_frame(docs: DataFrame, merges) -> DataFrame:
     """:func:`bpe_encode_chunks`' transform over an explicit documents
     frame and an already-learned merge list — stateless and row-local,
-    so it runs unchanged under a ``readStream`` (the streaming face
-    :func:`~udacity_dsnd_projects_spark.streaming.monitor.encode_chunks_stream`
-    applies it verbatim to crawl micro-batches with the PUBLISHED
-    tokenizer artifact; stream == batch by shared-helper identity).
+    so it also runs unchanged under a ``readStream``.
 
     The whole chunking is ONE linear fold: a struct accumulator
     carries (finished chunks, running unit total, word index, open

@@ -908,19 +908,6 @@ def daily_type_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .localCheckpoint(eager=True)
     )
-    return score_daily_counts(daily)
-
-
-def score_daily_counts(daily: DataFrame) -> DataFrame:
-    """Z-score a (event_type, d, n_events) daily-count frame against
-    each type's own history — the scoring half of
-    :func:`daily_type_anomaly`, split out so the STREAMING face
-    (:mod:`~udacity_dsnd_projects_spark.streaming.monitor`, which
-    incrementally maintains the same rollup as a compacted table) can
-    run the identical dashboard over its materialization: one shared
-    scorer is what makes stream-equals-batch provable rather than
-    merely intended. ``daily`` must already be materialized or cheap —
-    it is consumed twice (stats rollup + broadcast join back)."""
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("n_events").alias("s1"),
@@ -1016,10 +1003,9 @@ def cusum_changepoint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cusum_changepoints(daily: DataFrame) -> DataFrame:
     """The CUSUM scorer over a (event_type, d, n_events) daily-count
-    frame — split out like :func:`score_daily_counts` so the streaming
-    monitor's compacted rollup (and crafted test series) run the
-    identical screen. ``daily`` must already be materialized or cheap
-    (consumed by the stats rollup AND the window pass)."""
+    frame — split out so crafted test series run the identical
+    screen. ``daily`` must already be materialized or cheap (consumed
+    by the stats rollup AND the window pass)."""
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("n_events").alias("s1"),

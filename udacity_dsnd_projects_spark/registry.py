@@ -21,7 +21,6 @@ from udacity_dsnd_projects_spark.functions import graph as _graph
 from udacity_dsnd_projects_spark.functions import multimodal as _mm
 from udacity_dsnd_projects_spark.functions import pipeline as _pipe
 from udacity_dsnd_projects_spark.functions import scalar as _scalar
-from udacity_dsnd_projects_spark.functions import search as _search
 from udacity_dsnd_projects_spark.functions import selection as _sel
 from udacity_dsnd_projects_spark.functions import snapshot as _snap
 from udacity_dsnd_projects_spark.functions import similarity as _sim
@@ -34,11 +33,8 @@ from udacity_dsnd_projects_spark.operators import analytics as _an
 from udacity_dsnd_projects_spark.operators import envelope as _env
 from udacity_dsnd_projects_spark.operators import joins as _joins
 from udacity_dsnd_projects_spark.operators import projections as _proj
-from udacity_dsnd_projects_spark.operators import relational as _rel
-from udacity_dsnd_projects_spark.operators import relational2 as _rel2
 from udacity_dsnd_projects_spark.operators import risk_join as _risk
 from udacity_dsnd_projects_spark.operators import timeseries as _ts
-from udacity_dsnd_projects_spark.operators import setops as _setops
 from udacity_dsnd_projects_spark.operators import skew as _skew
 from udacity_dsnd_projects_spark.operators import windows as _win
 
@@ -409,32 +405,6 @@ register(
     _an.late_order_priorities,
     _an.ORACLE_LATE_ORDER_PRIORITIES,
 )
-# NEW (batch 4): classic warehouse shapes the headline set didn't cover
-register(
-    "customer_order_distribution",
-    _rel.customer_order_distribution,
-    _rel.ORACLE_CUSTOMER_ORDER_DISTRIBUTION,
-)
-register(
-    "idle_customer_balance",
-    _rel.idle_customer_balance,
-    _rel.ORACLE_IDLE_CUSTOMER_BALANCE,
-)
-register(
-    "small_quantity_revenue",
-    _rel.small_quantity_revenue,
-    _rel.ORACLE_SMALL_QUANTITY_REVENUE,
-)
-register(
-    "top_revenue_suppliers",
-    _rel.top_revenue_suppliers,
-    _rel.ORACLE_TOP_REVENUE_SUPPLIERS,
-)
-register(
-    "lone_late_supplier_orders",
-    _rel.lone_late_supplier_orders,
-    _rel.ORACLE_LONE_LATE_SUPPLIER_ORDERS,
-)
 # NEW (batch 4): DSIR importance weights + A-ES weighted sampling
 register(
     "dsir_importance_weights",
@@ -449,13 +419,6 @@ register(
 # NEW (batch 4): clustering health report; binary-payload dedup
 register("cluster_quality", _pipe.cluster_quality, _pipe.ORACLE_CLUSTER_QUALITY)
 register("media_dedup", _mm.media_dedup, _mm.ORACLE_MEDIA_DEDUP)
-# NEW (batch 4): BM25 lexical retrieval (keyword twin of cosine top-k)
-register("bm25_search", _search.bm25_search, _search.ORACLE_BM25_SEARCH)
-register(
-    "hybrid_retrieval_fusion",
-    _search.hybrid_retrieval_fusion,
-    _search.ORACLE_HYBRID_RETRIEVAL_FUSION,
-)
 # NEW (batch 4): asymmetric containment dedup; Gopher rule gate;
 # CCNet head/middle/tail perplexity split
 register(
@@ -502,43 +465,7 @@ register("seq_pack_concat", _pipe.seq_pack_concat, _pipe.ORACLE_SEQ_PACK_CONCAT)
 register("shard_assign", _pipe.shard_assign, _pipe.ORACLE_SHARD_ASSIGN)
 register("lang_zscore", _pipe.lang_zscore, _pipe.ORACLE_LANG_ZSCORE)
 
-# --- TPC-H long-tail shapes + round-5 additions ---------------------------
-register(
-    "regional_supplier_volume",
-    _rel2.regional_supplier_volume,
-    _rel2.ORACLE_REGIONAL_SUPPLIER_VOLUME,
-)
-register("forecast_revenue", _rel2.forecast_revenue, _rel2.ORACLE_FORECAST_REVENUE)
-register(
-    "national_market_share",
-    _rel2.national_market_share,
-    _rel2.ORACLE_NATIONAL_MARKET_SHARE,
-)
-register("product_profit", _rel2.product_profit, _rel2.ORACLE_PRODUCT_PROFIT)
-register(
-    "returned_item_customers",
-    _rel2.returned_item_customers,
-    _rel2.ORACLE_RETURNED_ITEM_CUSTOMERS,
-)
-register(
-    "promo_revenue_share",
-    _rel2.promo_revenue_share,
-    _rel2.ORACLE_PROMO_REVENUE_SHARE,
-)
-register(
-    "part_supplier_diversity",
-    _rel2.part_supplier_diversity,
-    _rel2.ORACLE_PART_SUPPLIER_DIVERSITY,
-)
-register(
-    "large_volume_orders",
-    _rel2.large_volume_orders,
-    _rel2.ORACLE_LARGE_VOLUME_ORDERS,
-)
-register("bracket_revenue", _rel2.bracket_revenue, _rel2.ORACLE_BRACKET_REVENUE)
-register(
-    "min_cost_supplier", _rel2.min_cost_supplier, _rel2.ORACLE_MIN_COST_SUPPLIER
-)
+# --- Round-5 additions ---------------------------------------------------
 register(
     "sliding_window_chunks",
     _train.sliding_window_chunks,
@@ -555,16 +482,6 @@ register(
 register("skew_profile", _skew.skew_profile, _skew.ORACLE_SKEW_PROFILE)
 register(
     "corpus_datacard", _cur.corpus_datacard, _cur.ORACLE_CORPUS_DATACARD
-)
-register(
-    "important_part_value",
-    _rel2.important_part_value,
-    _rel2.ORACLE_IMPORTANT_PART_VALUE,
-)
-register(
-    "dominant_part_suppliers",
-    _rel2.dominant_part_suppliers,
-    _rel2.ORACLE_DOMINANT_PART_SUPPLIERS,
 )
 register("unpivot_agg", _agg.unpivot_agg, _agg.ORACLE_UNPIVOT_AGG)
 register(
@@ -824,10 +741,6 @@ register("top_k_per_group", _win.top_k_per_group, _win.ORACLE_TOP_K_PER_GROUP)
 register("sort_limit", _win.sort_limit, _win.ORACLE_SORT_LIMIT)
 register("window_lag_lead", _win.window_lag_lead, _win.ORACLE_WINDOW_LAG_LEAD)
 
-# --- Set operations (§2.6) — r1/r2 green ------------------------------------
-register("union_fan_in", _setops.union_fan_in, _setops.ORACLE_UNION_FAN_IN)
-register("set_except", _setops.set_except, _setops.ORACLE_SET_EXCEPT)
-register("set_intersect", _setops.set_intersect, _setops.ORACLE_SET_INTERSECT)
 
 # --- Scalar functions (§2.7, F1-F12) — r1/r2 green --------------------------
 register("split_derive", _scalar.split_derive, _scalar.ORACLE_SPLIT_DERIVE)

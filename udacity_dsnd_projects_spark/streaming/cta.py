@@ -64,8 +64,10 @@ def turnstile_summary(turnstiles: DataFrame, ksql_compat_names: bool = False) ->
 
 def weather_display(weather: DataFrame) -> DataFrame:
     """Dashboard-side weather formatting (``consumers/models/
-    weather.py:17-25`` + ``status.html:14``): latest status, displayed
-    ``replace('_',' ').title()`` (F5)."""
+    weather.py:17-25`` + ``status.html:14``), applied to every row:
+    ``temperature`` rounded to one decimal and ``status`` displayed as
+    ``replace('_',' ').title()`` (F5). The dashboard shows the newest
+    row; picking it is left to the caller."""
     return weather.select(
         "timestamp",
         F.round(F.col("temperature").cast("double"), 1).alias("temperature"),

@@ -73,12 +73,13 @@ def file_stream(
     path: str,
     schema: T.StructType,
     fmt: str = "parquet",
-    max_files_per_trigger: int | None = 1,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Test-time source: file stream with an explicit schema (the
-    engine never infers — SURVEY.md §1.2). ``maxFilesPerTrigger=1``
-    forces multiple micro-batches so replay/ordering semantics are
-    actually exercised."""
+    """File stream with an explicit schema (the engine never infers —
+    SURVEY.md §1.2). ``max_files_per_trigger`` caps the new files read
+    per micro-batch; ``None`` keeps Spark's default of every new file
+    in one batch. Replay tests pass 1 so that their rows arrive over
+    several micro-batches."""
     reader = spark.readStream.format(fmt).schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -7,9 +7,12 @@ the dashboard's per-station models
 ``max(struct(seq, ...))`` aggregation keeps that table exactly: its
 state store holds each key's winner across micro-batches, checkpoint
 included, so late and out-of-order rows compare against the stored
-winner. Faces that need per-key state a built-in aggregate cannot
-express (gap fill, transitions) use ``applyInPandasWithState``:
-user-defined per-key state in the same executor state store.
+winner; :func:`latest_per_key_stateful` is the CTA station table.
+Faces that need per-key state a built-in aggregate cannot express
+(:func:`gap_fill_stateful`, :func:`transition_stateful`) use
+``applyInPandasWithState``: user-defined per-key state in the same
+executor state store, stamped with a state-schema version so that an
+incompatible checkpoint fails loudly instead of misdecoding.
 
 Scale notes: state is partitioned by key across executors (hash
 shuffle), each micro-batch touches only keys present in the batch, and
@@ -27,169 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def dedup_stream(
-    updates: DataFrame,
-    keys: list[str],
-    event_time_col: str | None = None,
-    delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact deduplication: emit only the FIRST row seen per
-    key across all micro-batches.
-
-    Without ``event_time_col`` the dedup state grows forever (every key
-    ever seen) — the compat form, matching the reference's unbounded
-    stream state (T3). With it, ``dropDuplicatesWithinWatermark``
-    bounds state to the watermark horizon: the 100 TB form, correct
-    whenever true duplicates arrive within ``delay`` of each other
-    (exactly the guarantee a Kafka producer retry needs).
-    """
-    if event_time_col is None:
-        return updates.dropDuplicates(keys)
-    return updates.withWatermark(event_time_col, delay).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def incremental_dedup_stream(
-    new_docs: DataFrame,
-    hist_hashes: DataFrame,
-    text_col: str = "text",
-    hash_col: str = "content_md5",
-    event_time_col: str | None = None,
-    delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming face of
-    :func:`~udacity_dsnd_projects_spark.functions.dedup.incremental_dedup`:
-    a stream of newly-crawled documents is content-hashed, deduped
-    within the stream (first-seen wins across micro-batches), and
-    anti-joined against the STATIC prior-snapshot hash table — a
-    stream-static left-anti join, one of Spark's supported
-    stream-static shapes, so only truly-new content flows downstream.
-
-    ``hist_hashes`` must be a batch frame with column ``hash_col``
-    (distinct md5s of the snapshot). At scale that frame is a
-    bucketed/Z-ordered table the join prunes against; the per-stream
-    state is the within-stream dedup's, and mirrors
-    :func:`dedup_stream`'s signature (the ADVICE r14 doctrine applied
-    family-wide): without ``event_time_col`` the store grows with
-    every hash ever seen — the compat form; with it,
-    ``dropDuplicatesWithinWatermark`` bounds state to the watermark
-    horizon (the md5 projection preserves every input column, so the
-    event-time column rides through untouched)."""
-    from pyspark.sql import functions as F
-
-    hashed = new_docs.withColumn(
-        hash_col, F.md5(F.col(text_col).cast("binary"))
-    )
-    return dedup_stream(hashed, [hash_col], event_time_col, delay).join(
-        hist_hashes, hash_col, "left_anti"
-    )
-
-
-def chunk_dedup_stream(
-    new_chunks: DataFrame,
-    hist_hashes: DataFrame,
-    event_time_col: str | None = None,
-    delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming CHUNK screen against the published ``chunk_hash``
-    index — :func:`incremental_dedup_stream`'s recipe at training-chunk
-    granularity (VERDICT r13 task 2): once the batch pass has
-    published its keeper hash table
-    (:func:`~udacity_dsnd_projects_spark.functions.text.chunk_dedup`),
-    every chunk the ingest-time chunker emits
-    (:func:`~udacity_dsnd_projects_spark.streaming.monitor.encode_chunks_stream`)
-    is deduped within the stream (first-seen wins across micro-batches
-    — a boilerplate passage recrawled twice in one day flows once) and
-    anti-joined against the snapshot index, so only chunks the
-    training set has never seen reach the writer.
-
-    ``new_chunks`` already carries ``chunk_hash``
-    (:func:`~udacity_dsnd_projects_spark.functions.text.encode_chunks_frame`
-    computes it row-locally — no hashing here, stream == batch by
-    construction); ``hist_hashes`` is a batch frame with a
-    ``chunk_hash`` column (the dedup report, or any projection of it).
-    State shape mirrors :func:`dedup_stream`'s signature (ADVICE r14):
-    without ``event_time_col`` the within-stream dedup's store keyed
-    by the 32-char md5 grows with every hash ever seen — the compat
-    form; with it, ``dropDuplicatesWithinWatermark`` bounds state to
-    the watermark horizon — the 100 TB form, correct whenever a
-    recrawled chunk re-arrives within ``delay``. The history probe is
-    a stream-static left-anti join either way — at scale a
-    bucketed/Z-ordered hash table the join prunes against, exactly
-    :func:`incremental_dedup_stream`'s shape."""
-    return dedup_stream(new_chunks, ["chunk_hash"], event_time_col, delay).join(
-        hist_hashes.select("chunk_hash"), "chunk_hash", "left_anti"
-    )
-
-
-def near_dup_stream(
-    new_docs: DataFrame,
-    index_bands: DataFrame,
-    threshold: float | None = None,
-    event_time_col: str | None = None,
-    delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming NEAR-dup detection against a static MinHash-LSH band
-    index — the fuzzy sibling of :func:`incremental_dedup_stream`: a
-    stream of new documents is signature-banded with the SAME JVM
-    expressions as the batch face
-    (:func:`~udacity_dsnd_projects_spark.functions.dedup.signatures_for`
-    + ``bands_for_sigs`` — streaming-safe, no Python, no state) and
-    joined stream-static against the snapshot's band index; colliding
-    candidates are scored by estimated Jaccard (fraction of matching
-    signature rows) and pairs over ``threshold`` flow downstream as
-    (doc_id, hist_doc_id, est_jaccard).
-
-    ``index_bands`` is ``minhash_bands_for(history)`` materialized —
-    at scale a bucketed table keyed on (band, key) so the stream-side
-    probe prunes. Band collisions produce duplicate candidate rows
-    across micro-batches; the pair dedup mirrors
-    :func:`dedup_stream`'s signature (ADVICE r14 doctrine): without
-    ``event_time_col`` it keeps the first pair forever (compat
-    unbounded state); with it, the event-time column rides through the
-    signature/banding projections (``keep_cols``) so
-    ``dropDuplicatesWithinWatermark`` can bound the pair store to the
-    watermark horizon."""
-    from pyspark.sql import functions as F
-
-    from udacity_dsnd_projects_spark.functions.dedup import (
-        NUM_PERM,
-        bands_for_sigs,
-        signatures_for,
-    )
-
-    if threshold is None:
-        from udacity_dsnd_projects_spark.functions.dedup import JACCARD_THRESHOLD
-
-        threshold = JACCARD_THRESHOLD
-    keep = (event_time_col,) if event_time_col is not None else ()
-    bands = bands_for_sigs(signatures_for(new_docs, keep), keep)
-    hist = index_bands.select(
-        "band",
-        "key",
-        F.col("doc_id").alias("hist_doc_id"),
-        F.col("mh").alias("hist_mh"),
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("mh", "hist_mh", lambda x, y: x == y), lambda eq: eq
-            )
-        )
-        / NUM_PERM
-    )
-    pairs = (
-        bands.join(hist, ["band", "key"])
-        .withColumn("est_jaccard", F.round(est, 5))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("doc_id", "hist_doc_id", "est_jaccard", *keep)
-    )
-    return dedup_stream(
-        pairs, ["doc_id", "hist_doc_id"], event_time_col, delay
-    ).select("doc_id", "hist_doc_id", "est_jaccard")
 
 
 def latest_per_key_stateful(
@@ -256,9 +96,8 @@ def _check_state_ver(stored: int, expected: int, face: str) -> None:
 
 
 def gap_fill_stateful(events: DataFrame) -> DataFrame:
-    """Streaming face of
-    :func:`~udacity_dsnd_projects_spark.operators.timeseries.timeseries_gap_fill`:
-    per-user hourly LOCF resampling as incremental state. Per key the
+    """Per-user hourly LOCF (last observation carried forward)
+    resampling of an event stream, kept as incremental state. Per key the
     state is (last emitted hour, running argmax of that hour, carried
     value); each micro-batch emits (a) filler rows for every silent
     hour between the state's frontier and the batch's hours — carrying
@@ -597,138 +436,3 @@ def transition_stateful(events: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def substring_match_stream(
-    new_docs: DataFrame,
-    fp_index: DataFrame,
-    threshold: float | None = None,
-) -> DataFrame:
-    """Streaming SUBSTRING-level screen against a static winnowing
-    index — the third crawl-loop probe next to
-    :func:`incremental_dedup_stream` (exact) and
-    :func:`near_dup_stream` (whole-doc similarity): winnowing's
-    guarantee makes a fingerprint collision a position-robust shared
-    token RUN, so this face catches the quote/wrap/template case the
-    other two miss. Each arriving document is fingerprinted with the
-    SAME JVM expressions as the batch faces
-    (:func:`~udacity_dsnd_projects_spark.functions.dedup._winnow_fp_arrays`
-    — streaming-safe, no aggregation), its fingerprints probe the
-    index stream-static, and each colliding (new doc, hist doc) pair
-    is scored row-locally: ``shared = |fps ∩ hist_fps|``, ``overlap =
-    shared / |fps|`` — containment of the NEW document ("how much of
-    this crawl is already-known substring content"), the exact crawl
-    triage question, with the denominator entirely stream-side so the
-    score needs nothing but the collided row. Pairs at or above
-    ``threshold`` flow downstream as
-    (doc_id, hist_doc_id, shared, overlap).
-
-    ``fp_index`` is ``winnowing_index_for(history)`` materialized —
-    at scale a bucketed table keyed on ``fp`` (the publish-time DF cap
-    already dropped boilerplate mega-buckets). Multi-fingerprint
-    collisions produce duplicate candidate rows across micro-batches;
-    ``dropDuplicates`` keeps the first (compat unbounded state —
-    compose with a watermark column for the bounded form, as in
-    :func:`dedup_stream`).
-
-    UNSCREENABLE documents are surfaced, not swallowed: a new doc
-    shorter than ``3 + WINNOW_WINDOW - 1`` tokens yields no
-    fingerprints (the substrate's minimum window), so this probe can
-    say nothing about it — it is emitted once as
-    (doc_id, NULL, NULL, NULL) so a crawl-triage consumer can
-    distinguish "screened clean" (absent) from "too short to screen"
-    (null row) and route the doc to the exact-hash probe
-    (:func:`incremental_dedup_stream`), which has no length floor."""
-    from udacity_dsnd_projects_spark.functions.dedup import (
-        WINNOW_OVERLAP_T,
-        WINNOW_WINDOW,
-        _winnow_fp_arrays,
-    )
-    from pyspark.sql import functions as F
-
-    if threshold is None:
-        threshold = WINNOW_OVERLAP_T
-    probe = _winnow_fp_arrays(new_docs).select(
-        "doc_id", "fps", F.explode_outer("fps").alias("fp")
-    )
-    shared = F.size(F.array_intersect("fps", "hist_fps"))
-    matched = (
-        probe.join(fp_index, "fp")
-        .withColumn("shared", shared)
-        .withColumn("overlap", F.round(shared / F.size("fps"), 5))
-        .filter(F.col("overlap") >= threshold)
-        .select("doc_id", "hist_doc_id", "shared", "overlap")
-    )
-    # too-short-to-screen rows: below the substrate's fingerprint
-    # floor there is no screening verdict — emit a null row per doc so
-    # downstream routes it instead of mistaking silence for "clean"
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    unscreened = (
-        new_docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") < 3 + WINNOW_WINDOW - 1)
-        .select(
-            "doc_id",
-            F.lit(None).cast("long").alias("hist_doc_id"),
-            F.lit(None).cast("int").alias("shared"),
-            F.lit(None).cast("double").alias("overlap"),
-        )
-    )
-    # ONE dedup over BOTH branches (nulls compare equal in
-    # dropDuplicates): matched pairs dedupe across multi-fingerprint
-    # collisions as before, and a too-short doc re-delivered by an
-    # at-least-once source dedupes on its (doc_id, NULL) key instead of
-    # re-emitting a null row per delivery — the "emitted once" contract
-    # in the docstring. Placing the single state store after the union
-    # also drops the second shuffle the per-branch dedup would cost.
-    return matched.unionByName(unscreened).dropDuplicates(
-        ["doc_id", "hist_doc_id"]
-    )
-
-
-def deleak_probe_stream(new_docs: DataFrame, leak_ids: DataFrame) -> DataFrame:
-    """Streaming LEAK screen against the PUBLISHED leak-id table — the
-    fourth crawl-loop probe next to :func:`incremental_dedup_stream`
-    (exact), :func:`near_dup_stream` (similarity) and
-    :func:`substring_match_stream` (substring): once the batch
-    decontamination pass
-    (:func:`~udacity_dsnd_projects_spark.functions.curation.deleak_split`)
-    has published its pair-bounded leak frame (doc_id, __n_cross), every
-    newly crawled document is screened against it stream-static, so a
-    re-crawl of a known test-set near-duplicate is flagged at INGEST
-    instead of waiting for the next batch pass — the
-    ``strip_against_index`` pattern applied to decontamination. Emits
-    the same release row as the batch face: (doc_id, split,
-    n_cross_pairs, action).
-
-    Stream == batch by shared-helper identity (``_deleak_release`` —
-    the select is the same object code). Stateless: one broadcast
-    stream-static left join per micro-batch, split labels are modular
-    arithmetic on the row's own id; no state store, no watermark
-    needed. At scale the leak frame is pair-bounded (tiny at sane dup
-    rates) — the broadcast is the right plan at any corpus size."""
-    from pyspark.sql import functions as F
-
-    from udacity_dsnd_projects_spark.functions.curation import _deleak_release
-
-    return _deleak_release(new_docs.select("doc_id"), F.broadcast(leak_ids))
-
-
-def quarantine_probe_stream(new_docs: DataFrame, strata: DataFrame) -> DataFrame:
-    """Streaming DRIFT-quarantine screen against the PUBLISHED drift
-    verdicts — the ingest-time face of
-    :func:`~udacity_dsnd_projects_spark.functions.curation.quarantine_drifting_sources`:
-    once the batch EMD gate has published its (lang, source, drifted)
-    strata table, every newly crawled document is routed keep /
-    quarantined at arrival, completing the crawl-loop action set
-    (VERDICT r12 task 8). Emits the same release row as the batch
-    face: (doc_id, lang, source, action).
-
-    Stream == batch by shared-helper identity (``_quarantine_release``).
-    Stateless: the strata table is (langs × sources)-sized — metadata —
-    broadcast-left-joined onto each micro-batch; no state store, no
-    shuffle of the document side, same plan shape at any scale."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        _quarantine_release,
-    )
-
-    return _quarantine_release(new_docs.select("doc_id", "lang", "source"), strata)
