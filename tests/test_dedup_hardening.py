@@ -1,7 +1,7 @@
 """Round-2 hardening tests: the LSH bucket-size cap (mega-bucket
-guard), connected-component near-dup semantics, and planted-duplicate
-recall measurements that pin the NUM_PERM / N_PLANES parameter choices
-by measurement rather than docstring."""
+guard) and planted-duplicate recall measurements that pin the
+NUM_PERM / N_PLANES parameter choices by measurement rather than
+docstring."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from udacity_dsnd_projects_spark.functions import dedup as d
 from udacity_dsnd_projects_spark.functions import similarity as sim
-from udacity_dsnd_projects_spark.functions.curation import near_dup_drop_list
 from udacity_dsnd_projects_spark.sources.catalog import load_table
 
 MEGA = 300  # > MAX_BUCKET_SIZE (256)
@@ -51,33 +50,6 @@ def test_mega_bucket_single_shuffle_plan(spark):
     plan = d.lsh_pairs_for(docs)._jdf.queryExecution().executedPlan().toString()
     band_exchanges = re.findall(r"Exchange hashpartitioning\(band#\d+", plan)
     assert len(band_exchanges) == 1, plan
-
-
-def test_cc_drop_list_chain_and_star(spark):
-    # chain 1~2~3: one component, keep min (1) — C (=3) must also drop
-    # even though its only direct pair partner (2) is dropped
-    chain = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
-    assert sorted(r.doc_id for r in near_dup_drop_list(chain).collect()) == [2, 3]
-    # star {1~3, 2~3}: one component {1,2,3}, keep 1 — the old one-sweep
-    # drop-doc_b policy kept both 1 and 2
-    star = spark.createDataFrame([(1, 3), (2, 3)], ["doc_a", "doc_b"])
-    assert sorted(r.doc_id for r in near_dup_drop_list(star).collect()) == [2, 3]
-
-
-def test_cc_long_path_converges_within_cap(spark):
-    """Pointer doubling: a 300-edge path graph (diameter 300 >> the
-    20-round cap) must still converge — plain min-label propagation
-    would need ~300 rounds and previously returned silently-wrong
-    labels; the shortcut step makes rounds O(log2 diameter)."""
-    from udacity_dsnd_projects_spark.functions.curation import connected_components
-
-    n = 300
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], ["doc_a", "doc_b"]
-    ).coalesce(4)
-    comp = connected_components(path).collect()
-    assert len(comp) == n + 1
-    assert {r.component for r in comp} == {0}
 
 
 def test_minhash_lsh_recall_on_planted_near_dups(spark, sf_dir):
@@ -241,7 +213,3 @@ def _jvm_simhash(docs):
         fp = fp + F2.shiftleft(bits[j], j)
     return sh.select("doc_id", fp.alias("simhash"))
 
-
-def test_cc_empty_pair_graph(spark):
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert near_dup_drop_list(empty).count() == 0

@@ -43,13 +43,6 @@ def test_lsh_pairs_on_empty_and_singleton_corpus(spark):
     assert lsh_pairs_for(one).count() == 0  # no pair without a partner
 
 
-def test_curate_on_empty_frame(spark):
-    from udacity_dsnd_projects_spark.functions.curation import curate
-
-    empty = spark.createDataFrame([], DOC_SCHEMA)
-    assert curate(empty).count() == 0
-
-
 def test_salted_join_empty_sides(spark):
     from udacity_dsnd_projects_spark.operators.skew import salted_join
 

@@ -145,30 +145,6 @@ def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
     assert recall >= 0.5, f"IVF recall too low: {recall:.2f}"
 
 
-def test_ann_index_query_equals_inline_ivf(spark, sf_dir, tmp_path_factory):
-    """The persisted ANN index returns exactly what the inline IVF
-    computes (same probes, same scoring), and the probe join against
-    the bucketed index table plans without an index-side exchange."""
-    from udacity_dsnd_projects_spark.functions.ann import (
-        ann_query,
-        build_ann_index,
-        query_set,
-    )
-    from udacity_dsnd_projects_spark.functions.similarity import cosine_topk_ivf
-
-    path = str(tmp_path_factory.mktemp("ann") / "index")
-    build_ann_index(spark, sf_dir, "ann_idx", path)
-    try:
-        got = ann_query(spark, "ann_idx", query_set(spark, sf_dir))
-        want = cosine_topk_ivf(spark, sf_dir)
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        # broadcast probe join: the index table is never shuffled
-        assert "Exchange hashpartitioning" not in plan.split("Window")[-1]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ann_idx")
-
-
 def test_lsh_buckets_group_near_dups(spark, sf_dir):
     """Near-identical vectors must land in the same LSH bucket (the
     corpus has no true embedding dups — max pairwise cosine ≈ 0.51 —

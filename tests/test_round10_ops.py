@@ -1,115 +1,11 @@
-"""Round-10 additions: the stratum quality-drift EMD gate, the
-driver-visible observe-metrics face, the privacy and contamination
-gates, and the registry's degenerate-input contract."""
+"""Round-10 additions: the driver-visible observe-metrics face, the
+privacy and contamination gates, and the registry's degenerate-input
+contract."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# --- quality_drift_report ---------------------------------------------------
-
-
-def test_quality_drift_report_is_a_distribution_distance(spark, sf_dir):
-    """EMD properties the grid construction must provide: every
-    stratum of the corpus appears exactly once, n_docs adds back up to
-    the corpus size, the normalized distance lands in [0, 1], and the
-    drifted flag is exactly (emd > threshold)."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        QUALITY_DRIFT_T,
-        quality_drift_report,
-    )
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    rows = quality_drift_report(spark, sf_dir).collect()
-    want_strata = {
-        (r["lang"], r["source"])
-        for r in docs.select("lang", "source").distinct().collect()
-    }
-    assert {(r["lang"], r["source"]) for r in rows} == want_strata
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    for r in rows:
-        assert 0.0 <= r["emd"] <= 1.0, r
-        assert r["drifted"] == int(r["emd"] > QUALITY_DRIFT_T), r
-
-
-def test_quality_drift_report_scans_corpus_once(spark, sf_dir):
-    """The cell frame is eagerly checkpointed before its four
-    consumers, so the FINAL plan re-reads the checkpointed
-    (stratum × band) counts — metadata-sized — and never the documents
-    parquet: zero FileScans in the returned frame's plan."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        quality_drift_report,
-    )
-
-    plan = quality_drift_report(spark, sf_dir)._sc._jvm.PythonSQLUtils.explainString(
-        quality_drift_report(spark, sf_dir)._jdf.queryExecution(), "formatted"
-    )
-    assert "Scan parquet" not in plan
-
-
-def test_quality_drift_skewed_stratum_fires(spark, sf_dir):
-    """Sanity on the metric itself, via the shared grid math on a
-    crafted corpus: a stratum whose mass sits entirely in the opposite
-    band of everyone else must show a near-maximal EMD. Verified
-    through the registered query by writing a tiny documents table."""
-    import tempfile
-
-    from udacity_dsnd_projects_spark.functions.curation import (
-        quality_drift_report,
-    )
-
-    # band-0 text: short, all digits/punct, no stopwords → score 0
-    bad = "9!" * 5
-    # band-4 text: long, clean, stopword-rich → score 1
-    good = "the and is of a plain clean sentence with many common words"
-    rows = [(i, good, "en", "webA", len(good)) for i in range(50)]
-    rows += [(100 + i, bad, "en", "spamB", len(bad)) for i in range(50)]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).write.parquet(f"{d}/documents.parquet")
-        got = {
-            r["source"]: r for r in quality_drift_report(spark, d).collect()
-        }
-    # each stratum is half the corpus at the opposite extreme: EMD vs
-    # the 50/50 global mix is exactly 0.5 for both, over the full band
-    # span — and both clear the drift gate
-    assert got["spamB"]["emd"] == pytest.approx(0.5, abs=1e-6)
-    assert got["webA"]["emd"] == pytest.approx(0.5, abs=1e-6)
-    assert got["spamB"]["drifted"] == 1 and got["webA"]["drifted"] == 1
-
-
-def test_quality_drift_single_band_corpus_keeps_every_stratum(spark):
-    """Degenerate-corpus contract: when EVERY document lands in one
-    quality band (m = 1), each stratum's distribution trivially equals
-    the global point mass — the report must still emit one row per
-    stratum with emd exactly 0 and the gate quiet, not vanish (the
-    band < band_max exclusion is a conditional inside the aggregate,
-    never a row filter that could empty the grid)."""
-    import tempfile
-
-    from udacity_dsnd_projects_spark.functions.curation import (
-        quality_drift_report,
-    )
-
-    good = "the and is of a plain clean sentence with many common words"
-    rows = [(i, good, "en", "webA", len(good)) for i in range(5)]
-    rows += [(100 + i, good, "en", "webB", len(good)) for i in range(5)]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).write.parquet(f"{d}/documents.parquet")
-        got = {
-            r["source"]: r for r in quality_drift_report(spark, d).collect()
-        }
-    assert set(got) == {"webA", "webB"}
-    for r in got.values():
-        assert r["n_docs"] == 5
-        assert r["emd"] == 0.0
-        assert r["drifted"] == 0
 
 
 def test_t_closeness_single_band_domain_keeps_every_group(spark):
@@ -372,8 +268,7 @@ def test_shard_balance_report_scans_documents_once(spark, sf_dir):
     per-shard frame is eagerly checkpointed before its two consumers
     (the totals aggregate and the final select) — so the RETURNED
     frame's plan re-reads only the checkpointed rollup and never the
-    documents parquet: zero FileScans, exactly like the
-    quality_drift_report cell frame."""
+    documents parquet: zero FileScans."""
     from udacity_dsnd_projects_spark import registry
 
     plan = registry.queries()["shard_balance_report"](

@@ -1,6 +1,6 @@
 """Round-11 tests: the layout-aware dedup-substrate spread (VERDICT
 r10 task 2), the injectable-benchmark contamination faces (task 3),
-the winnowing action face (task 5), and state-schema versioning for
+and state-schema versioning for
 the stateful streaming faces (task 7)."""
 
 from __future__ import annotations
@@ -138,72 +138,6 @@ def test_semantic_contamination_against_crafted_benchmark(spark):
     # the scale-relative flag (>= 2x mean top-1 cosine) fires on 1 only
     assert rows[1].contaminated == 1
     assert rows[2].contaminated == 0 and rows[3].contaminated == 0
-
-
-# --------------------------------------------------------------------------
-# Task 5 — winnowing_strip: the MOSS action face (report→action split).
-# --------------------------------------------------------------------------
-
-
-def test_connected_components_survives_order_constraint(spark):
-    """Regression pin for the Spark constraint-rewrite defect: a pair
-    frame carrying an explicit doc_a < doc_b constraint (as
-    winnowing_pairs_for's output does) used to crash the CC loop's
-    localCheckpoint with NoSuchElementException: key not found."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        connected_components,
-    )
-
-    pairs = (
-        spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["doc_a", "doc_b"])
-        .filter("doc_a < doc_b")
-        .localCheckpoint(eager=True)
-    )
-    comp = {(r.doc_id, r.component) for r in connected_components(pairs).collect()}
-    assert comp == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
-    # and the conf mutation is restored on exit
-    assert (
-        spark.conf.get("spark.sql.constraintPropagation.enabled") == "true"
-    )
-
-
-def test_winnowing_strip_keeps_best_quality_member(spark, sf_dir):
-    """Every cluster keeps exactly one member; the keeper maximizes
-    quality (ties to the smaller doc_id) among its members; keep_md5
-    matches the keeper's raw text."""
-    import hashlib
-
-    from udacity_dsnd_projects_spark.functions.curation import (
-        connected_components,
-        winnowing_strip,
-    )
-    from udacity_dsnd_projects_spark.functions.dedup import winnowing_pairs_for
-    from udacity_dsnd_projects_spark.functions.text import quality_score
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    out = {r.component: r for r in winnowing_strip(spark, sf_dir).collect()}
-    assert out, "sf corpus must yield at least one overlap cluster"
-    docs = load_table(spark, "documents", sf_dir)
-    comp = {
-        r.doc_id: r.component
-        for r in connected_components(
-            winnowing_pairs_for(docs).select("doc_a", "doc_b")
-        ).collect()
-    }
-    q = {r.doc_id: r.quality for r in quality_score(spark, sf_dir).collect()}
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    assert set(out) == set(comp.values())
-    for c, row in out.items():
-        members = [d for d, cc in comp.items() if cc == c]
-        assert row.n_members == len(members)
-        assert row.n_dropped == len(members) - 1
-        best = max(members, key=lambda d: (q[d], -d))
-        assert row.keep_doc_id == best
-        assert row.keep_quality == q[best]
-        assert (
-            row.keep_md5
-            == hashlib.md5(texts[best].encode("utf-8")).hexdigest()
-        )
 
 
 # --------------------------------------------------------------------------
@@ -427,25 +361,3 @@ def test_ivf_probe_sweep_monotone_and_consistent(spark, sf_dir):
         sum(r.n_hits for r in rec) / (len(rec) * TOP_K), 6
     )
 
-
-def test_screen_funnel_counts_are_internally_consistent(spark, sf_dir):
-    """Funnel invariants: n_any_screen bounds each screen's count and
-    never exceeds n_docs; clean_rate reconciles; the substring column
-    agrees with the winnowing pair universe."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        screen_funnel_report,
-    )
-    from udacity_dsnd_projects_spark.functions.dedup import winnowing_pairs_for
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    rows = screen_funnel_report(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert max(r.n_exact_dup, r.n_near_dup, r.n_substring) <= r.n_any_screen
-        assert r.n_any_screen <= r.n_docs
-        assert r.clean_rate == round((r.n_docs - r.n_any_screen) / r.n_docs, 6)
-    docs = load_table(spark, "documents", sf_dir)
-    pair_docs = set()
-    for p in winnowing_pairs_for(docs).collect():
-        pair_docs.update((p.doc_a, p.doc_b))
-    assert sum(r.n_substring for r in rows) == len(pair_docs)

@@ -1,12 +1,9 @@
 """Round-12 tests: the media-type-mismatch full-string tie-break
-(VERDICT r11 task 4), the winnowing_strip keeper-md5 placement, the
-connected-components conf-restore reentrancy guard, the cached substrate-layout probe
-(ADVICE r11), the closed BPE tokenizer-induction loop (task 2), the
-markup_strip action face (task 3), and the round-12 depth faces:
+(VERDICT r11 task 4), the cached substrate-layout probe (ADVICE r11),
+the closed BPE tokenizer-induction loop (task 2), the markup_strip
+action face (task 3), and the round-12 depth faces:
 bpe_compression_sweep / bpe_seq_pack_bins / tokenizer_drift_report /
-ann_probe_agreement / deleak_split /
-quarantine_drifting_sources / bpe_pack_efficiency /
-bpe_merge_stability."""
+ann_probe_agreement / bpe_pack_efficiency / bpe_merge_stability."""
 
 from __future__ import annotations
 
@@ -61,44 +58,6 @@ def test_mismatch_all_clean_modality_yields_null_top(spark):
 
 
 # --------------------------------------------------------------------------
-# ADVICE r11 — connected_components' scoped constraint-propagation
-# disable must be reentrancy-safe: a nested call sees 'false' already
-# set, and only the OUTERMOST exit restores the true pre-entry value.
-# --------------------------------------------------------------------------
-
-
-def test_cc_conf_toggle_is_reentrant(spark, monkeypatch):
-    from udacity_dsnd_projects_spark.functions import curation as c
-
-    _CP = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(_CP)
-    spark.conf.set(_CP, "true")
-    try:
-        pairs = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
-        orig = c._connected_components_loop
-        state = {"outer": True}
-
-        def nested(p):
-            if state["outer"]:
-                state["outer"] = False
-                out = c.connected_components(p)  # nested entry
-                # mid-nesting the conf must still be off, and the inner
-                # exit must NOT have restored anything yet
-                assert spark.conf.get(_CP) == "false"
-                return out
-            return orig(p)
-
-        monkeypatch.setattr(c, "_connected_components_loop", nested)
-        labels = {r.doc_id: r.component for r in c.connected_components(pairs).collect()}
-        assert labels == {1: 1, 2: 1, 3: 1}
-        # outermost exit restored the TRUE pre-entry value, not our 'false'
-        assert spark.conf.get(_CP) == "true"
-        assert id(spark) not in c._CC_CONF_DEPTH
-    finally:
-        spark.conf.set(_CP, prev)
-
-
-# --------------------------------------------------------------------------
 # ADVICE r11 — the substrate layout probe is memoized per analyzed
 # plan: composing several substrates over one input converts to an RDD
 # (full physical planning) ONCE, and distinct inputs don't collide.
@@ -132,27 +91,6 @@ def test_spread_probe_memoized_per_plan(spark, monkeypatch):
     d._spread_for_hashing(docs.coalesce(1))
     assert hits["n"] == 2
     assert len(d._SPREAD_PROBE_CACHE) == 2
-
-
-# --------------------------------------------------------------------------
-# ADVICE r11 — winnowing_strip's keeper md5 must evaluate ABOVE the
-# keeper join (one text row hashed per cluster), not under it (every
-# corpus row hashed). In the plan text, parents print before children,
-# so the md5 projection must appear before the join node.
-# --------------------------------------------------------------------------
-
-
-def test_winnowing_strip_md5_above_join(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions.curation import winnowing_strip
-
-    df = winnowing_strip(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    i_md5 = plan.index("md5(")
-    i_join = min(
-        i for i in (plan.find("BroadcastHashJoin"), plan.find("SortMergeJoin"))
-        if i != -1
-    )
-    assert i_md5 < i_join, plan
 
 
 # --------------------------------------------------------------------------
@@ -562,63 +500,6 @@ def test_tokenizer_drift_splits_cover_corpus(spark, sf_dir):
             assert r["eval_fertility"] is None
 
 
-# --------------------------------------------------------------------------
-# Round-12 depth — deleak_split: split_leakage_report's action face.
-# Cross-face identity: the number of dropped train docs must be
-# bounded by the report's cross_split pair count (each dropped doc
-# carries ≥1 cross pair), the dropped ids must all sit on the train
-# side, and planted cross-split duplicates MUST be caught.
-# --------------------------------------------------------------------------
-
-
-def test_deleak_split_drops_exactly_cross_leaking_train_docs(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions.curation import deleak_split
-    from udacity_dsnd_projects_spark.functions.curation import (
-        split_leakage_report,
-    )
-
-    rows = deleak_split(spark, sf_dir).collect()
-    dropped = [r for r in rows if r["action"] == "dropped_leak"]
-    assert dropped, "the planted corpus must produce cross-split leaks"
-    cross_pairs = 0
-    for r in split_leakage_report(spark, sf_dir).collect():
-        if r["pair_class"] == "cross_split":
-            cross_pairs = r["n_pairs"]
-    assert cross_pairs > 0
-    # every dropped doc is train-side with ≥1 cross pair; total cross
-    # attributions cannot exceed 2 endpoints per pair
-    assert all(r["split"] == "train" for r in dropped)
-    assert all(r["n_cross_pairs"] >= 1 for r in dropped)
-    # each cross pair has exactly ONE train endpoint, so the dropped
-    # attributions sum to exactly the pair count and the dropped doc
-    # count is bounded by it (pairs may share a train endpoint)
-    assert sum(r["n_cross_pairs"] for r in dropped) == cross_pairs
-    assert len(dropped) <= cross_pairs
-    keeps = [r for r in rows if r["action"] == "keep"]
-    assert all(r["n_cross_pairs"] == 0 for r in keeps)
-
-
-def test_quarantine_matches_drift_report_strata(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions.curation import (
-        quality_drift_report,
-        quarantine_drifting_sources,
-    )
-
-    flagged = {
-        (r["lang"], r["source"])
-        for r in quality_drift_report(spark, sf_dir).collect()
-        if r["drifted"] == 1
-    }
-    rows = quarantine_drifting_sources(spark, sf_dir).collect()
-    for r in rows:
-        want = "quarantined" if (r["lang"], r["source"]) in flagged else "keep"
-        assert r["action"] == want, r
-    # the release covers every document exactly once
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    assert len(rows) == load_table(spark, "documents", sf_dir).count()
-
-
 def test_bpe_pack_efficiency_ties_to_bpe_bins(spark, sf_dir):
     from udacity_dsnd_projects_spark.functions.text import (
         BPE_PACK_BUDGET,
@@ -682,26 +563,6 @@ def _preorder_join_names(node):
     for i in range(kids.length()):
         out.extend(_preorder_join_names(kids.apply(i)))
     return out
-
-
-def test_quarantine_release_join_is_broadcast(spark, sf_dir):
-    """The release join (corpus × metadata-sized report) must be a
-    broadcast join — asserted structurally: (a) the broadcast hint
-    survives analysis/optimization on the TOPMOST join of the logical
-    plan, and (b) the topmost join node of the physical plan tree is a
-    Broadcast* join. The report's internal grid joins below it may
-    legitimately sort-merge on the metadata frame."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        quarantine_drifting_sources,
-    )
-
-    qe = quarantine_drifting_sources(spark, sf_dir)._jdf.queryExecution()
-    # (a) the hint on the release join is still there post-optimizer
-    assert "strategy=broadcast" in qe.optimizedPlan().toString()
-    # (b) topmost physical join (preorder-first) is a broadcast join
-    joins = _preorder_join_names(qe.executedPlan())
-    assert joins, "no join in the physical plan"
-    assert joins[0].startswith("Broadcast"), joins
 
 
 def test_ann_probe_agreement_vacuous_on_empty_warehouse(spark, tmp_path):

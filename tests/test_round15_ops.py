@@ -5,7 +5,6 @@ curriculum pack order, and the local-frame builder."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -287,63 +286,3 @@ def test_rank_offsets_join_has_no_python_stage(spark, sf_dir):
     )
     assert bad_rows == 0
 
-
-def test_cc_loop_restores_shuffle_partitions(spark, sf_dir):
-    """The CC loop sizes spark.sql.shuffle.partitions to label volume
-    for its own actions and must restore the session value on exit
-    (including the convergence path)."""
-    from udacity_dsnd_projects_spark.functions.curation import (
-        connected_components,
-    )
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5)], "doc_a long, doc_b long"
-    )
-    out = {r["doc_id"]: r["component"] for r in connected_components(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_fused_winnow_kernel_equals_single_family_substrates(spark, sf_dir):
-    """signatures_and_winnow_vectorized must be bit-identical to the
-    standalone MinHash kernel AND the JVM winnowing substrate — corpus
-    plus adversarial rows (unicode, exactly-3-token, below-one-window,
-    sub-3-token drops)."""
-    from udacity_dsnd_projects_spark.functions.dedup import (
-        _winnow_fp_arrays,
-        signatures_and_winnow_vectorized,
-        signatures_vectorized,
-    )
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    extra = spark.createDataFrame(
-        [
-            (90001, "héllo wörld ünïcode tokens here extra words beyond window"),
-            (90002, "a b c"),
-            (90003, "a b c d e"),
-            (90004, "x y z w v u t s r q p"),
-            (90005, "  "),
-            (90006, "one two"),
-        ],
-        "doc_id long, text string",
-    )
-    d = docs.unionByName(extra)
-    fused = {
-        r["doc_id"]: (list(r["mh"]), sorted(r["fps"]))
-        for r in signatures_and_winnow_vectorized(d).collect()
-    }
-    mh_ref = {
-        r["doc_id"]: list(r["mh"]) for r in signatures_vectorized(d).collect()
-    }
-    fp_ref = {
-        r["doc_id"]: sorted(r["fps"]) for r in _winnow_fp_arrays(d).collect()
-    }
-    assert set(fused) == set(mh_ref)
-    assert {k: v[0] for k, v in fused.items()} == mh_ref
-    # JVM face drops docs below one window; fused emits them with
-    # empty fps — the exploded row sets must agree exactly
-    assert {k: v[1] for k, v in fused.items() if v[1]} == fp_ref
-    assert fused[90002][1] == [] and fused[90003][1] == []
-    assert 90005 not in fused and 90006 not in fused

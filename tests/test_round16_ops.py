@@ -1,5 +1,4 @@
 """Round-16 tests (optimization round 2): the ADVICE r15 hardening —
-the CC loop's conf overrides folded into one depth-guarded scope,
 local_frame's row-arity validation and createDataFrame-parity
 nullability — plus pins for any operator internals this round's
 optimizations restructure."""
@@ -7,60 +6,7 @@ optimizations restructure."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-# --------------------------------------------------------------------------
-# ADVICE r15 (medium) — the CC loop's shuffle-partition override must
-# live in the SAME depth-guarded scope as the constraint-propagation
-# toggle: a nested/overlapping connected_components call on one session
-# must never capture the outer call's scratch value, and the outermost
-# exit must restore the TRUE pre-entry values of BOTH confs.
-# --------------------------------------------------------------------------
-
-
-def test_cc_conf_scope_is_depth_guarded_for_nested_calls(spark, monkeypatch):
-    from udacity_dsnd_projects_spark.functions import curation
-
-    _SP = "spark.sql.shuffle.partitions"
-    _CP = "spark.sql.constraintPropagation.enabled"
-    before_sp = spark.conf.get(_SP)
-    before_cp = spark.conf.get(_CP)
-    assert before_sp != "1", "test needs a pre-entry value != loop scratch"
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5)], "doc_a long, doc_b long"
-    )
-    seen: dict[str, str] = {}
-    real_loop = curation._connected_components_loop
-
-    def nested_once(p):
-        if "inner_sp" not in seen:
-            # simulate an overlapping call: by the time the inner call
-            # starts, the outer loop has already set its scratch values
-            out = real_loop(p)
-            seen["inner_sp"] = "marker"
-            inner = curation.connected_components(pairs)
-            inner.collect()
-            # the inner exit must NOT have restored anything yet
-            # (depth > 1): the session still runs the loop regime
-            seen["after_inner_sp"] = spark.conf.get(_SP)
-            seen["after_inner_cp"] = spark.conf.get(_CP)
-            return out
-        return real_loop(p)
-
-    monkeypatch.setattr(curation, "_connected_components_loop", nested_once)
-    out = {
-        r["doc_id"]: r["component"]
-        for r in curation.connected_components(pairs).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
-    # while nested, the inner exit left the scoped confs alone
-    assert seen["after_inner_cp"] == "false"
-    # outermost exit restored the true pre-entry values of BOTH confs
-    assert spark.conf.get(_SP) == before_sp
-    assert spark.conf.get(_CP) == before_cp
 
 
 # --------------------------------------------------------------------------

@@ -183,30 +183,6 @@ def test_lang_zscore_pandas_guard_raises_on_oversized_stratum(
 
 
 # --------------------------------------------------------------------------
-# dedup_priority
-# --------------------------------------------------------------------------
-def test_dedup_priority_keeps_best_quality_member(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import curation as cur
-    from udacity_dsnd_projects_spark.functions.text import quality_score
-
-    comp = cur.near_dup_components(spark, sf_dir).toPandas()
-    q = quality_score(spark, sf_dir).select("doc_id", "quality").toPandas()
-    out = cur.dedup_priority(spark, sf_dir).toPandas()
-    assert len(out) == comp["component"].nunique()
-    merged = comp.merge(q, on="doc_id")
-    for r in out.itertuples():
-        members = merged[merged["component"] == r.component]
-        assert r.n_members == len(members)
-        best_q = members["quality"].max()
-        assert r.keep_quality == best_q
-        # tie-break: smallest doc_id among the max-quality members
-        assert (
-            r.keep_doc_id
-            == members[members["quality"] == best_q]["doc_id"].min()
-        )
-
-
-# --------------------------------------------------------------------------
 # robust_scale
 # --------------------------------------------------------------------------
 def test_robust_scale_bounds_are_exact_percentile_values(spark, sf_dir):

@@ -333,23 +333,6 @@ def test_ann_recall_matches_set_intersection(spark, sf_dir):
         assert 0.0 <= rep[q]["recall"] <= 1.0
 
 
-# --------------------------------------------------------------------------
-# Near-dup rate by source
-# --------------------------------------------------------------------------
-def test_near_dup_rate_by_source_consistent(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import curation as cur
-
-    rows = cur.near_dup_rate_by_source(spark, sf_dir).collect()
-    n_dup_total = sum(r["n_near_dup"] for r in rows)
-    assert n_dup_total == cur.near_dup_components(spark, sf_dir).count()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    totals = {r["source"]: r["n"] for r in docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert {r["source"]: r["n_docs"] for r in rows} == totals
-    for r in rows:
-        assert 0 <= r["n_near_dup"] <= r["n_docs"]
-        assert 0.0 <= r["dup_rate"] <= 1.0
-
-
 def test_merge_changelog_edge_semantics(spark):
     """Crafted-log MERGE edges the synthesized corpus can't produce:
     reinsert-after-delete (upsert with HIGHER seq than the tombstone

@@ -1,4 +1,4 @@
-"""Round-5 batch-4 operators: time-series faces, selection, clustering,
+"""Round-5 batch-4 operators: time-series faces, clustering,
 multimodal dedup and the text-quality gates.
 
 The oracle equivalence for each of these runs in tests/test_queries.py;
@@ -95,59 +95,10 @@ def test_session_window_agrees_with_gaps_and_islands(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# batch-4 second wave: selection / clustering / multimodal dedup
+# batch-4 second wave: clustering / multimodal dedup
 # --------------------------------------------------------------------------
 from udacity_dsnd_projects_spark.functions import multimodal as mm
-from udacity_dsnd_projects_spark.functions import selection as sel
 from udacity_dsnd_projects_spark.functions.pipeline import cluster_quality
-
-
-def test_dsir_scores_target_language_higher(spark, sf_dir):
-    """The importance score must separate the distributions it was
-    built from: mean score of target-lang docs > mean of the rest."""
-    scored = sel.dsir_importance_weights(spark, sf_dir).filter(
-        F.col("n_feats") > 0
-    )
-    rows = (
-        scored.withColumn(
-            "is_target", (F.col("lang") == sel.DSIR_TARGET_LANG).cast("int")
-        )
-        .groupBy("is_target")
-        .agg(F.avg("score").alias("m"))
-        .collect()
-    )
-    means = {r["is_target"]: r["m"] for r in rows}
-    assert means[1] > means[0]
-
-
-def test_weighted_reservoir_sample_takes_k_per_stratum(spark, sf_dir):
-    out = sel.weighted_reservoir_sample(spark, sf_dir)
-    sizes = {
-        r["lang"]: r["n"]
-        for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    strata = {
-        r["lang"]: r["n"]
-        for r in load_table(spark, "documents", sf_dir)
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    for lang, n in sizes.items():
-        assert n == min(sel.RESERVOIR_K, strata[lang])
-    # rerun-stability: no RNG state anywhere
-    again = sel.weighted_reservoir_sample(spark, sf_dir)
-    assert out.exceptAll(again).count() == 0
-
-
-def test_weighted_reservoir_plan_pushes_group_limit(spark, sf_dir):
-    plan = (
-        sel.weighted_reservoir_sample(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "WindowGroupLimit" in plan and "Partial" in plan, plan
 
 
 def test_cluster_quality_accounts_for_every_vector(spark, sf_dir):

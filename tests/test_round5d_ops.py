@@ -1,6 +1,6 @@
 """Round-5 fifth batch (training + extras): plan properties and edge
 semantics for the sliding-window chunker, the curriculum scheduler,
-the skew profile, the corpus datacard, rolling distinct users and
+the skew profile, rolling distinct users and
 exact quantiles. Value correctness is covered by
 tests/test_queries.py's oracle replica; these tests pin the SCALE
 properties (single scans, no stray shuffles or global sorts)."""
@@ -127,29 +127,6 @@ def test_skew_profile_is_take_ordered_over_key_frame(spark, sf_dir):
     # shares are a probability mass subset; ratios positive
     assert all(0 < r.row_share <= 1 and r.skew_ratio > 0 for r in rows)
     assert sum(r.row_share for r in rows) <= 1.0 + 1e-9
-
-
-def test_corpus_datacard_single_scan_and_sane_ranges(spark, sf_dir):
-    # one documents scan feeds every column (the planted-copy union
-    # reads the same table twice in the logical plan, but no column
-    # outside the five per-doc inputs is read), and the ratio columns
-    # are probability-ranged with a non-trivial dup rate overall
-    df = registry.queries()["corpus_datacard"](spark, sf_dir)
-    rows = df.collect()
-    assert rows
-    for r in rows:
-        assert 0.0 <= r.pct_en <= 1.0
-        assert 0.0 <= r.mean_quality <= 1.0
-        assert 0.0 <= r.dup_rate < 1.0
-        assert r.total_tokens > 0 and r.n_docs > 0
-    assert any(r.dup_rate > 0 for r in rows)  # planted dups visible
-    plan = _plan(spark, sf_dir, "corpus_datacard")
-    # the planted-copy union produces TWO documents scans — the
-    # untouched column must be pruned from EVERY one of them
-    segments = plan.split("ReadSchema")[1:]
-    assert segments
-    for seg in segments:
-        assert "n_chars" not in seg.split("\n")[0]
 
 
 def test_rolling_distinct_users_matches_bruteforce_on_sample_days(spark, sf_dir):

@@ -232,25 +232,6 @@ def test_bpe_pair_counts_shape(spark, sf_dir):
     assert all(len(r["pair"]) == 2 and " " not in r["pair"] for r in rows)
 
 
-def test_split_leakage_report_partitions_pairs(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions.curation import (
-        split_leakage_report,
-    )
-    from udacity_dsnd_projects_spark.functions.dedup import (
-        _docs_with_planted_dups,
-        lsh_pairs_for,
-    )
-
-    rep = split_leakage_report(spark, sf_dir).collect()
-    classes = {r["pair_class"] for r in rep}
-    assert classes <= {"within_train", "within_test", "cross_split"}
-    n_pairs_total = lsh_pairs_for(_docs_with_planted_dups(spark, sf_dir)).count()
-    assert sum(r["n_pairs"] for r in rep) == n_pairs_total
-    assert abs(sum(r["pair_share"] for r in rep) - 1.0) < 1e-6
-    for r in rep:
-        assert 0.0 < r["mean_jaccard"] <= 1.0
-
-
 def test_ivf_upsert_plan_is_shuffle_free(spark, sf_dir):
     """The whole incremental index path — snapshot assign, new-batch
     assign, union — is projections over scans: no Exchange anywhere

@@ -1,5 +1,5 @@
-"""Round-6 third-wave operators: near-dup graph observability
-(source overlap, cluster histogram, triangles) and per-type OLS trend.
+"""Round-6 third-wave operators: per-type OLS trend and the event
+analytics beside it.
 
 Oracle equality runs via the registry parameterization in
 tests/test_queries.py; these pin oracle-independent properties.
@@ -11,73 +11,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from udacity_dsnd_projects_spark.functions.curation import (
-    dup_cluster_histogram,
-    near_dup_components,
-    near_dup_triangles,
-    source_overlap_matrix,
-)
 from udacity_dsnd_projects_spark.operators.analytics import value_trend_by_type
 
 SF = "/root/testdata/sf0.001"
-
-
-# --- source_overlap_matrix -------------------------------------------------
-def test_overlap_matrix_is_unordered_and_normalized(spark):
-    rows = source_overlap_matrix(spark, SF).collect()
-    assert rows, "the corpus LSH graph has pairs"
-    for r in rows:
-        assert r.source_a <= r.source_b
-        assert r.n_pairs > 0
-    assert abs(sum(r.pair_share for r in rows) - 1.0) < 1e-4
-
-
-# --- dup_cluster_histogram -------------------------------------------------
-def test_histogram_accounts_for_every_clustered_doc(spark):
-    hist = dup_cluster_histogram(spark, SF).collect()
-    assert hist
-    # a component only contains docs that appear in >=1 pair
-    assert all(r.cluster_size >= 2 for r in hist)
-    assert all(r.n_docs == r.cluster_size * r.n_clusters for r in hist)
-    total_docs = sum(r.n_docs for r in hist)
-    assert total_docs == near_dup_components(spark, SF).count()
-
-
-# --- near_dup_triangles ----------------------------------------------------
-def test_triangle_summary_bounds(spark):
-    row = near_dup_triangles(spark, SF).first()
-    assert row.n_edges > 0
-    assert row.n_wedges >= row.n_triangles  # each triangle closes a wedge
-    if row.transitivity is not None:
-        assert 0.0 <= row.transitivity <= 1.0
-
-
-def test_triangle_count_matches_bruteforce(spark):
-    """Exact check against a driver-side brute force over the (small)
-    test pair graph."""
-    from udacity_dsnd_projects_spark.functions.dedup import lsh_pairs_for
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    edges = {
-        (r.doc_a, r.doc_b)
-        for r in lsh_pairs_for(
-            load_table(spark, "documents", SF).select("doc_id", "text")
-        ).collect()
-    }
-    adj: dict[int, set[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    tri = sum(
-        1
-        for a, b in edges
-        for c in adj[a] & adj[b]
-        if b < c
-    )
-    row = near_dup_triangles(spark, SF).first()
-    assert row.n_triangles == tri
-    wedges = sum(len(n) * (len(n) - 1) // 2 for n in adj.values())
-    assert row.n_wedges == wedges
 
 
 # --- value_trend_by_type ---------------------------------------------------

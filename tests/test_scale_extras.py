@@ -1,7 +1,6 @@
-"""Behavioral tests for scd2_history, quality_topk_filter,
-trade_pagerank, and the z-order layout (oracle equivalence for the
-first three is in test_queries.py; z-order is infra, verified by
-parquet footer statistics)."""
+"""Behavioral tests for scd2_history, trade_pagerank, and the z-order
+layout (oracle equivalence for the first two is in test_queries.py;
+z-order is infra, verified by parquet footer statistics)."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
-from udacity_dsnd_projects_spark.functions import curation as cur
 from udacity_dsnd_projects_spark.functions import graph as g
 from udacity_dsnd_projects_spark.operators import windows as w
 from udacity_dsnd_projects_spark.sources.catalog import load_table
@@ -30,18 +28,6 @@ def test_scd2_intervals_tile_each_user(spark, sf_dir):
         # consecutive states differ (duplicates collapsed)
         states = grp["state"].to_numpy()
         assert (states[1:] != states[:-1]).all()
-
-
-def test_quality_gate_keeps_half_per_lang(spark, sf_dir):
-    docs = load_table(spark, "documents", sf_dir)
-    sizes = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    kept = cur.quality_topk_filter(spark, sf_dir).toPandas()
-    got = kept.groupby("lang")["doc_id"].count().to_dict()
-    for lang, n in sizes.items():
-        assert got.get(lang, 0) == -(-n * cur.QUALITY_KEEP_PCT // 1)  # ceil
 
 
 def test_pagerank_mass_and_bipartite_sides(spark, sf_dir):
@@ -148,17 +134,6 @@ def test_decile_stats_windows_are_bucket_partitioned(spark, sf_dir):
     df = an.decile_stats(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ntile" not in plan, plan
-    specs = _win_specs(df)
-    assert specs and all("__rank_bkt" in s for s in specs), specs
-
-
-def test_quality_topk_windows_are_bucket_partitioned(spark, sf_dir):
-    """Same guarantee for the three rankings in quality_topk_filter:
-    no lang-only window partitions (a handful of strata = a handful of
-    sort tasks); every window partitions by (lang, __rank_bkt)."""
-    df = cur.quality_topk_filter(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "percent_rank" not in plan, plan
     specs = _win_specs(df)
     assert specs and all("__rank_bkt" in s for s in specs), specs
 

@@ -20,6 +20,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tests.imports import PACKAGE_DIR, imported_names
+
 from udacity_dsnd_projects_spark.streaming.cta import (
     faust_station_transform,
     station_table_latest,
@@ -105,29 +107,13 @@ def test_streaming_package_imports_no_batch_operator_modules():
     """The pipelines' package stands alone: no module under
     ``streaming/`` imports the batch ``functions`` or ``operators``
     packages, at module level or inside a function."""
-    import ast
-    from pathlib import Path
-
-    import udacity_dsnd_projects_spark.streaming as streaming
-
-    pkg = streaming.__name__.split(".")
-    banned = tuple(f"{pkg[0]}.{sub}." for sub in ("functions", "operators"))
-    offenders = []
-    for path in sorted(Path(streaming.__file__).parent.glob("*.py")):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Import):
-                names = [a.name for a in node.names]
-            elif isinstance(node, ast.ImportFrom):
-                base = pkg[: len(pkg) - node.level + 1] if node.level else []
-                module = ".".join(base + ([node.module] if node.module else []))
-                names = [module] + [f"{module}.{a.name}" for a in node.names]
-            else:
-                continue
-            offenders += [
-                f"{path.name}:{node.lineno} {n}"
-                for n in names
-                if f"{n}.".startswith(banned)
-            ]
+    banned = tuple(f"{PACKAGE_DIR.name}.{sub}." for sub in ("functions", "operators"))
+    offenders = [
+        f"{path.name}:{line} {n}"
+        for path in sorted((PACKAGE_DIR / "streaming").glob("*.py"))
+        for line, n in imported_names(path)
+        if f"{n}.".startswith(banned)
+    ]
     assert not offenders, offenders
 
 
@@ -1046,96 +1032,63 @@ def test_kafka_round_trip_gated(spark, tmp_path_factory):
         q.stop()
 
 
-def test_corpus_quality_rollup_stream_equals_batch(spark, tmp_path_factory):
-    """Phase-4 ops are mode-agnostic like the §2 core: the curation
-    quality gate + per-language token rollup, replayed through file
-    micro-batches in complete mode, converges to the batch answer on
-    the same data."""
-    from udacity_dsnd_projects_spark.functions.curation import _quality_filter
-
-    root = tmp_path_factory.mktemp("corpus_stream")
-    path = str(root / "docs")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text", "lang")
-    )
-    # three chunks -> three micro-batches (maxFilesPerTrigger=1)
-    for b in range(3):
-        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-
-    def rollup(df):
-        toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        return _quality_filter(df).groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(toks)).alias("total_tokens"),
-        )
-
-    got_rows = run_to_memory(
-        rollup(file_stream(spark, path, schema, max_files_per_trigger=1)),
-        "corpus_rollup",
-        output_mode="complete",
-    ).collect()
-    got = {r["lang"]: (r["n_docs"], r["total_tokens"]) for r in got_rows}
-    want = {
-        r["lang"]: (r["n_docs"], r["total_tokens"])
-        for r in rollup(spark.read.schema(schema).parquet(path)).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_cdc_changelog_stream_equals_batch_merge(spark, sf_dir, tmp_path_factory):
-    """The batch cdc_merge (MERGE semantics) and the K5 compacted-table
-    sink converge to the same served table when the SAME changelog
-    flows through each: stream the synthesized upsert/delete log into
-    the foreachBatch sink (keyed on doc_id, latest seq wins), compact
-    tombstones at read time, and compare row-for-row with the batch
-    argmax — the batch/streaming duality for MERGE."""
-    from udacity_dsnd_projects_spark.functions.snapshot import _cdc_log, cdc_merge
+def test_cdc_changelog_stream_equals_batch_merge(spark, tmp_path_factory):
+    """The K5 compacted-table sink serves MERGE semantics for an
+    upsert/delete changelog: streamed in two micro-batches into the
+    foreachBatch sink (keyed on ``k``, latest ``seq`` wins, deletes kept
+    as tombstones and compacted at read), the served table equals a
+    plain-Python fold of the same log in arrival order."""
     from udacity_dsnd_projects_spark.streaming.sinks import compacted_table_upsert
-    from udacity_dsnd_projects_spark.streaming.sources import file_stream
 
     root = tmp_path_factory.mktemp("cdc_stream")
     src = str(root / "log")
     table = str(root / "table")
-
-    log = _cdc_log(spark, sf_dir)
-    schema = log.schema
-    # two micro-batch files: base snapshot first, then the changelog —
-    # the arrival order a real CDC consumer sees
-    log.filter(F.col("seq") == 1).coalesce(1).write.mode("append").parquet(src)
-    log.filter(F.col("seq") > 1).coalesce(1).write.mode("append").parquet(src)
+    schema = "k long, seq long, op string, v string"
+    batches = [
+        [
+            (1, 1, "upsert", "a1"),  # insert, updated next batch
+            (2, 1, "upsert", "b1"),  # insert, deleted next batch
+            (3, 1, "upsert", "c1"),
+            (3, 2, "delete", None),  # delete, re-inserted next batch
+            (4, 1, "upsert", "d1"),
+            (4, 2, "upsert", "d2"),  # update inside one batch
+            (6, 1, "upsert", "f1"),
+        ],
+        [
+            (1, 2, "upsert", "a2"),  # update
+            (2, 2, "delete", None),  # delete
+            (3, 3, "upsert", "c3"),  # re-insert after the delete
+            (5, 1, "delete", None),  # delete of an absent key
+            (6, 0, "upsert", "f0"),  # late and stale: seq 1 stays
+            (7, 1, "upsert", "g1"),  # insert
+        ],
+    ]
+    frames = [spark.createDataFrame(rows, schema) for rows in batches]
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(src)
 
     q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(compacted_table_upsert(table, ["doc_id"], "seq"))
+        file_stream(spark, src, frames[0].schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(compacted_table_upsert(table, ["k"], "seq"))
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [7, 6]
 
-    served = (
-        spark.read.parquet(table)
-        .filter(F.col("op") != "delete")  # tombstone compaction at read
-        .select(
-            "doc_id",
-            F.col("seq").alias("last_seq"),
-            "content_md5",
-            "n_chars",
-        )
-    )
-    got = sorted(map(tuple, served.collect()))
-    want = sorted(map(tuple, cdc_merge(spark, sf_dir).collect()))
-    assert got == want and got
+    folded = {}
+    for k, seq, op, v in (r for rows in batches for r in rows):
+        if k not in folded or seq > folded[k][0]:
+            folded[k] = (seq, op, v)
+    want = sorted((k, seq, v) for k, (seq, op, v) in folded.items() if op != "delete")
+    assert want == [(1, 2, "a2"), (3, 3, "c3"), (4, 2, "d2"), (6, 1, "f1"), (7, 1, "g1")]
+
+    stored = spark.read.parquet(table)
+    served = stored.filter(F.col("op") != "delete").select("k", "seq", "v")
+    assert sorted(map(tuple, served.collect())) == want
+    tombstones = stored.filter(F.col("op") == "delete").select("k").collect()
+    assert sorted(r.k for r in tombstones) == [2, 5]
 
 
 def test_gap_fill_stateful_fills_silent_hours_across_batches(spark, tmp_path_factory):

@@ -72,9 +72,9 @@ def _token_hash(tok: Column) -> Column:
 #: Memo for _spread_for_hashing's layout probe:
 #: {(id(session), analyzed-plan semanticHash): partition count}.
 #: Converting a DataFrame to an RDD to count partitions forces FULL
-#: physical planning on the driver, so substrate-heavy faces that
-#: compose several substrates over one input (screen_funnel_report
-#: builds three) would otherwise pay that planning per substrate.
+#: physical planning on the driver, so faces that compose several
+#: substrates over one input would otherwise pay that planning per
+#: substrate.
 #: semanticHash is computed on the already-analyzed logical plan
 #: (analysis is cached by Spark) — no physical planning on a hit.
 #: Bounded: cleared when it exceeds _SPREAD_PROBE_CAP entries (the
@@ -199,9 +199,8 @@ _ORACLE_SHINGLES = _oracle_shingles()
 
 
 #: Planted-duplicate corpus knobs — every PLANTED_DUP_MOD-th doc is
-#: re-crawled under doc_id + PLANTED_ID_OFFSET. Shared by every
-#: operator that scores duplicate mass (exact_dedup here,
-#: curation.py's corpus_datacard) so their corpora can never diverge.
+#: re-crawled under doc_id + PLANTED_ID_OFFSET; exact_dedup and its
+#: oracle read the same planted corpus.
 PLANTED_DUP_MOD = 10
 PLANTED_ID_OFFSET = 10_000_000
 
@@ -1060,93 +1059,6 @@ def signatures_and_simhash_vectorized(docs: DataFrame) -> DataFrame:
     return d.mapInPandas(kernel, out_schema)
 
 
-def signatures_and_winnow_vectorized(docs: DataFrame) -> DataFrame:
-    """(doc_id, mh, fps) — the MinHash signature AND the winnowing
-    fingerprint set from ONE kernel pass. Both families reduce the
-    SAME positional word-3-gram hash sequence
-    (:func:`_np_positional_grams`): MinHash takes permutation minima
-    over its distinct values, winnowing takes the distinct
-    sliding-window minima of the in-order sequence. A caller that
-    needs both screens (``screen_funnel_report``) previously ran the
-    numpy MinHash kernel AND the JVM winnowing expression chain — two
-    full tokenize+char-hash passes over the corpus. Arithmetic is
-    bit-identical to :func:`signatures_vectorized` and
-    :func:`_winnow_fp_arrays` (asserted in tests); docs with at least
-    3 tokens get a signature, and ``fps`` is empty below one full
-    window (< ``3 + WINNOW_WINDOW - 1`` tokens) exactly as the JVM
-    face's token filter drops them."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    d = (
-        _spread_for_hashing(docs)
-        .select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 3)
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("mh", T.ArrayType(T.LongType())),
-            T.StructField("fps", T.ArrayType(T.LongType())),
-        ]
-    )
-    A = np.array(PERM_A, dtype=np.int64)
-    B = np.array(PERM_B, dtype=np.int64)
-    W = WINNOW_WINDOW
-
-    def kernel(batches):
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "mh": pd.Series([], dtype="object"),
-                        "fps": pd.Series([], dtype="object"),
-                    }
-                )
-                continue
-            sh, doc_of_sh = _np_positional_grams(pdf["toks"], n)
-            # MinHash over the distinct values (as _np_distinct_shingles)
-            fused = np.unique(doc_of_sh * (HASH_MOD + 1) + sh)
-            u_doc = fused // (HASH_MOD + 1)
-            u_sh = fused % (HASH_MOD + 1)
-            counts = np.bincount(u_doc.astype(np.intp), minlength=n)
-            seg = np.concatenate(([0], np.cumsum(counts)))[:-1]
-            mh = np.empty((n, NUM_PERM), dtype=np.int64)
-            for p in range(NUM_PERM):
-                vals = (u_sh * A[p] + B[p]) % HASH_MOD
-                mh[:, p] = np.minimum.reduceat(vals, seg)
-            # winnowing over the in-order sequence: window minima whose
-            # start and end land in the same doc (doc_of_sh is
-            # non-decreasing, so start==end doc <=> window within doc;
-            # docs with fewer than W grams contribute no window — the
-            # JVM face's >= 3+W-1 token filter, expressed as a mask)
-            m = len(sh)
-            if m >= W:
-                wmin = sliding_window_view(sh, W).min(axis=1)
-                same = doc_of_sh[: m - W + 1] == doc_of_sh[W - 1 :]
-                fused2 = np.unique(
-                    doc_of_sh[: m - W + 1][same] * (HASH_MOD + 1) + wmin[same]
-                )
-                fdoc = (fused2 // (HASH_MOD + 1)).astype(np.intp)
-                fval = fused2 % (HASH_MOD + 1)
-                fcts = np.bincount(fdoc, minlength=n)
-                fps_col = np.split(fval, np.cumsum(fcts)[:-1])
-            else:
-                fps_col = [np.empty(0, dtype=np.int64)] * n
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "mh": list(mh), "fps": fps_col}
-            )
-
-    return d.mapInPandas(kernel, out_schema)
-
-
 def simhash_bands_for(sigs: DataFrame) -> DataFrame:
     """(doc_id, simhash, band, key) byte-banding rows over a
     (doc_id, simhash) frame."""
@@ -1675,9 +1587,9 @@ def _winnow_fp_arrays(
 ) -> DataFrame:
     """Shared winnowing substrate over an arbitrary (doc_id, text)
     frame — (doc_id, fps array<long>) of distinct window-minima; see
-    :func:`winnowing_fingerprints`. Factored so the fingerprint face,
-    the overlap-pairs face, and the streaming probe can never drift on
-    the hash/window/tie rules. Streaming-safe: per-row array math
+    :func:`winnowing_fingerprints`. Factored so the fingerprint face
+    and the overlap-pairs face can never drift on the
+    hash/window/tie rules. Streaming-safe: per-row array math
     only, no aggregation (and :func:`_spread_for_hashing` keeps its
     layout probe batch-only). Layout-aware opener: the text-sized
     spread exchange is skipped when the scan already parallelizes.
@@ -1781,25 +1693,14 @@ def winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnowing_pairs_for(load_table(spark, "documents", sf_dir))
 
 
-def winnowing_pairs_from_rows(rows: DataFrame) -> DataFrame:
-    """The winnowing match stage from a precomputed (doc_id, fp)
-    fingerprint frame — lets a caller that ALSO needs the MinHash
-    signatures (``screen_funnel_report``) hash the corpus once via
-    :func:`signatures_and_winnow_vectorized` and feed both screens
-    (the :func:`lsh_pairs_from_sigs` convention)."""
-    pairs = _capped_pair_counts(rows, "fp")
+def winnowing_pairs_for(docs: DataFrame) -> DataFrame:
+    """Core of :func:`winnowing_overlap_pairs` over any (doc_id, text)
+    frame."""
+    pairs = _capped_pair_counts(_winnow_fp_rows(docs), "fp")
     ov = F.col("common") / F.least("na", "nb")
     return pairs.filter(ov >= WINNOW_OVERLAP_T).select(
         "doc_a", "doc_b", "common", F.round(ov, 5).alias("overlap")
     )
-
-
-def winnowing_pairs_for(docs: DataFrame) -> DataFrame:
-    """Core of :func:`winnowing_overlap_pairs` over any (doc_id, text)
-    frame — factored so the action face
-    (:func:`~udacity_dsnd_projects_spark.functions.curation.winnowing_strip`)
-    consumes the exact same match stage the report publishes."""
-    return winnowing_pairs_from_rows(_winnow_fp_rows(docs))
 
 
 _ORACLE_WINNOW_FPS = rf"""

@@ -1,11 +1,9 @@
-"""Graph operators: fixed-iteration PageRank (engine addition).
-
-Complements ``curation.connected_components`` (the other iterative
-graph op) with the canonical importance measure. The graph is the
-customer↔supplier trade network derived from orders⋈lineitem —
-bipartite, symmetrized so no node dangles (a directed bipartite graph
-would leak all rank mass at the supplier side; symmetric edges are
-the standard fix and what an undirected trade network means anyway).
+"""Graph operators: fixed-iteration PageRank (engine addition), the
+canonical importance measure. The graph is the customer↔supplier
+trade network derived from orders⋈lineitem — bipartite, symmetrized
+so no node dangles (a directed bipartite graph would leak all rank
+mass at the supplier side; symmetric edges are the standard fix and
+what an undirected trade network means anyway).
 
 Scale shape (the distributed-PageRank textbook form):
 

@@ -634,7 +634,7 @@ FROM g
 def k_anonymize_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymized RELEASE — the action :func:`k_anonymity_report`
     only audits (the report→action split of ``pii_scrub`` /
-    ``decontaminate_corpus`` / ``winnowing_strip``): publish the QI
+    ``decontaminate_corpus``): publish the QI
     group-count table with every group under :data:`K_ANON_THRESHOLD`
     SUPPRESSED, its mass folded into one NULL-keyed residual row so
     the released totals still reconcile (classic small-cell

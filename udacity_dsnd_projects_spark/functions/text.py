@@ -79,12 +79,11 @@ FROM documents
 
 
 def quality_score_expr(text: Column) -> Column:
-    """The composite [0,1] quality score as a single reusable column
-    expression over ``text`` — shared by :func:`quality_score` (which
-    also reports the component ratios) and the per-source rollups
-    (curation.py's datacard). Scores land on exact quarter steps
-    (0.25 = 2^-2 is binary-exact), so SUMs of this column are
-    order-independent in IEEE double."""
+    """The composite [0,1] quality score as a single column expression
+    over ``text``, used by :func:`quality_score` (which also reports the
+    component ratios). Scores land on exact quarter steps (0.25 = 2^-2
+    is binary-exact), so SUMs of this column are order-independent in
+    IEEE double."""
     toks = tokens_col(text)
     n_tok = F.size(toks)
     n_chars = F.length(text)
@@ -131,8 +130,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EN = "', '".join(LANG_STOPWORDS["en"])
 
 #: DuckDB twin of :func:`quality_score_expr` over a raw ``text``
-#: column — interpolated into EVERY oracle that scores quality
-#: (ORACLE_QUALITY_SCORE below, curation.py's datacard), so the two
+#: column, interpolated into ORACLE_QUALITY_SCORE below, so the two
 #: engines' scoring rules can only change together.
 _ORACLE_QUALITY_EXPR = rf"""(CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 10
         THEN 0.25 ELSE 0.0 END
@@ -1089,7 +1087,7 @@ def _learn_merges(
     vocab-bounded always), one 1-row collect (the argmax — metadata,
     the same driver-side exception as the k-means seeds), and one
     eager ``localCheckpoint`` of the rewritten vocab so lineage stays
-    flat — the fused-iteration pattern of ``connected_components``.
+    flat.
     Returns the ordered merge list [(x, y, n), ...]; stops early if no
     pair remains (fully merged vocab)."""
     return _learn_merges_with_vocab(vocab, rounds)[0]
@@ -2278,8 +2276,7 @@ def chunk_dedup_frame(chunks: DataFrame) -> DataFrame:
     """:func:`chunk_dedup`'s transform over an explicit chunk frame
     (the :func:`encode_chunks_frame` schema) — shared verbatim by the
     batch face and :func:`pack_deduped_chunks`, so the packer consumes
-    EXACTLY the keeper set the dedup report describes (the
-    ``winnowing_strip`` report→action identity)."""
+    EXACTLY the keeper set the dedup report describes."""
     agg = chunks.groupBy("chunk_hash").agg(
         F.min(F.struct("doc_id", "chunk_id")).alias("__k"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -2324,8 +2321,8 @@ ORACLE_CHUNK_DEDUP = _oracle_chunk_dedup()
 
 def pack_deduped_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training WRITER consuming :func:`chunk_dedup`'s keepers
-    (VERDICT r13 task 2 — the report→action step ``winnowing_strip``
-    models): the deduplicated chunk stream, ordered by its canonical
+    (VERDICT r13 task 2 — the report→action step): the deduplicated
+    chunk stream, ordered by its canonical
     (doc_id, chunk_id) identity, fills fixed
     :data:`BPE_PACK_BUDGET`-unit training bins — so the packed
     artifact holds every distinct chunk content EXACTLY once and the

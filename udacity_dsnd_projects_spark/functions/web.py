@@ -400,7 +400,7 @@ def markup_density_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted text?" readout a crawl pipeline runs BEFORE the quality
     models: per source, how much HTML/markdown/entity residue the
     extraction left behind. A source with high tag density has a
-    broken extractor (fix the SOURCE, like `near_dup_rate_by_source`);
+    broken extractor (fix the SOURCE);
     per-doc thresholds come after. One row per source: (source,
     n_docs, html_docs, md_docs, entity_docs, n_tags,
     tags_per_100_docs, markup_doc_share).

@@ -5,7 +5,10 @@ Re-expresses the reference's flagship streaming query
 the driver corpus:
 
     parse JSON payload (P2)  → filter nulls (P6) → derive field via
-    split/getItem (F1) → inner equi-join (J1) → project / to_json (F2)
+    split/getItem (F1) → inner equi-join (J1) → project
+
+The Kafka-shaped ``to_json`` output (F2) is the streaming face's
+``streaming.sources.to_kafka_shape``.
 
 Corpus role mapping (FIXTURES.md §2): ``events`` plays ``stedi-events``
 (``user_id`` ≅ ``customer``, ``value`` ≅ ``score``, ``props`` exercises
@@ -101,16 +104,6 @@ def risk_join_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT /*+ BROADCAST(c) */ customer, score, k, name, cust_num
         FROM rj_risks r JOIN rj_custs c ON r.customer = c.c_custkey
         """
-    )
-
-
-def risk_join_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kafka-sink shape: key + to_json(struct(*)) value
-    (sparkpykafkajoin.py:145)."""
-    joined = risk_join(spark, sf_dir)
-    return joined.select(
-        F.col("customer").cast("string").alias("key"),
-        F.to_json(F.struct(*[F.col(c) for c in joined.columns])).alias("value"),
     )
 
 

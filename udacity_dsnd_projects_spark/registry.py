@@ -15,13 +15,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from udacity_dsnd_projects_spark.functions import corpus as _corp
-from udacity_dsnd_projects_spark.functions import curation as _cur
 from udacity_dsnd_projects_spark.functions import dedup as _dedup
 from udacity_dsnd_projects_spark.functions import graph as _graph
 from udacity_dsnd_projects_spark.functions import multimodal as _mm
 from udacity_dsnd_projects_spark.functions import pipeline as _pipe
 from udacity_dsnd_projects_spark.functions import scalar as _scalar
-from udacity_dsnd_projects_spark.functions import selection as _sel
 from udacity_dsnd_projects_spark.functions import snapshot as _snap
 from udacity_dsnd_projects_spark.functions import similarity as _sim
 from udacity_dsnd_projects_spark.functions import text as _text
@@ -72,8 +70,6 @@ register(
 register(
     "incremental_dedup", _dedup.incremental_dedup, _dedup.ORACLE_INCREMENTAL_DEDUP
 )
-# NEW: quality-aware near-dup cluster representative
-register("dedup_priority", _cur.dedup_priority, _cur.ORACLE_DEDUP_PRIORITY)
 # NEW: bigram collocations by PMI
 register("token_bigram_pmi", _text.token_bigram_pmi, _text.ORACLE_TOKEN_BIGRAM_PMI)
 # NEW: winsorized per-stratum scaling on exact ranks
@@ -248,18 +244,6 @@ register(
     _text.bpe_merge_stability,
     _text.ORACLE_BPE_MERGE_STABILITY,
 )
-register(
-    "split_leakage_report",
-    _cur.split_leakage_report,
-    _cur.ORACLE_SPLIT_LEAKAGE_REPORT,
-)
-# NEW (round 12): the leakage report's ACTION face — drop the train
-# side of every cross-split near-dup pair, eval stays frozen
-register(
-    "deleak_split",
-    _cur.deleak_split,
-    _cur.ORACLE_DELEAK_SPLIT,
-)
 # NEW (round 6): label-noise detection over the kNN substrate;
 # per-source embedding drift monitor
 register(
@@ -315,22 +299,7 @@ register(
     _an.cusum_changepoint_report,
     _an.ORACLE_CUSUM_CHANGEPOINT_REPORT,
 )
-# NEW (round 6, third wave): near-dup graph observability + OLS trend
-register(
-    "source_overlap_matrix",
-    _cur.source_overlap_matrix,
-    _cur.ORACLE_SOURCE_OVERLAP_MATRIX,
-)
-register(
-    "dup_cluster_histogram",
-    _cur.dup_cluster_histogram,
-    _cur.ORACLE_DUP_CLUSTER_HISTOGRAM,
-)
-register(
-    "near_dup_triangles",
-    _cur.near_dup_triangles,
-    _cur.ORACLE_NEAR_DUP_TRIANGLES,
-)
+# NEW (round 6, third wave): per-type OLS trend
 register(
     "value_trend_by_type",
     _an.value_trend_by_type,
@@ -393,28 +362,11 @@ register(
     _sim.ann_probe_agreement,
     _sim.ORACLE_ANN_PROBE_AGREEMENT,
 )
-# NEW: per-source near-dup triage dashboard
-register(
-    "near_dup_rate_by_source",
-    _cur.near_dup_rate_by_source,
-    _cur.ORACLE_NEAR_DUP_RATE_BY_SOURCE,
-)
 # NEW: TPC-H Q4-shape EXISTS/semi-join aggregate
 register(
     "late_order_priorities",
     _an.late_order_priorities,
     _an.ORACLE_LATE_ORDER_PRIORITIES,
-)
-# NEW (batch 4): DSIR importance weights + A-ES weighted sampling
-register(
-    "dsir_importance_weights",
-    _sel.dsir_importance_weights,
-    _sel.ORACLE_DSIR_IMPORTANCE_WEIGHTS,
-)
-register(
-    "weighted_reservoir_sample",
-    _sel.weighted_reservoir_sample,
-    _sel.ORACLE_WEIGHTED_RESERVOIR_SAMPLE,
 )
 # NEW (batch 4): clustering health report; binary-payload dedup
 register("cluster_quality", _pipe.cluster_quality, _pipe.ORACLE_CLUSTER_QUALITY)
@@ -452,14 +404,10 @@ register("url_dedup", _web.url_dedup, _web.ORACLE_URL_DEDUP)
 register(  # applyInPandas grouped-map face, asserted-identical -> same oracle
     "lang_zscore_pandas", _pipe.lang_zscore_pandas, _pipe.ORACLE_LANG_ZSCORE
 )
-register("corpus_curation", _cur.corpus_curation, _cur.ORACLE_CORPUS_CURATION)
 register("trade_pagerank", _graph.trade_pagerank, _graph.ORACLE_TRADE_PAGERANK)
 # ranks.py offset join-back made null-safe this round — every
 # exact_group_rank / exact_group_cumsum caller re-verifies:
 register("decile_stats", _an.decile_stats, _an.ORACLE_DECILE_STATS)
-register(
-    "quality_topk_filter", _cur.quality_topk_filter, _cur.ORACLE_QUALITY_TOPK_FILTER
-)
 register("seq_pack_bins", _pipe.seq_pack_bins, _pipe.ORACLE_SEQ_PACK_BINS)
 register("seq_pack_concat", _pipe.seq_pack_concat, _pipe.ORACLE_SEQ_PACK_CONCAT)
 register("shard_assign", _pipe.shard_assign, _pipe.ORACLE_SHARD_ASSIGN)
@@ -480,9 +428,6 @@ register(
     _text.ORACLE_LANGUAGE_CONFUSION_MATRIX,
 )
 register("skew_profile", _skew.skew_profile, _skew.ORACLE_SKEW_PROFILE)
-register(
-    "corpus_datacard", _cur.corpus_datacard, _cur.ORACLE_CORPUS_DATACARD
-)
 register("unpivot_agg", _agg.unpivot_agg, _agg.ORACLE_UNPIVOT_AGG)
 register(
     "rolling_distinct_users",
@@ -542,7 +487,7 @@ register(
 )
 # NEW (round 11): the raw-markup contamination gate — per-source
 # HTML/markdown/entity residue the extractor left behind (fix the
-# SOURCE, like near_dup_rate_by_source)
+# SOURCE)
 register(
     "markup_density_report",
     _web.markup_density_report,
@@ -587,11 +532,6 @@ register(
     _pipe.ORACLE_DECONTAMINATE_CORPUS,
 )
 register("kmeans_assign", _pipe.kmeans_assign, _pipe.ORACLE_KMEANS_ASSIGN)
-register(
-    "near_dup_components",
-    _cur.near_dup_components,
-    _cur.ORACLE_NEAR_DUP_COMPONENTS,
-)
 register("tfidf_top_terms", _text.tfidf_top_terms, _text.ORACLE_TFIDF_TOP_TERMS)
 register(
     "frame_sample_stats", _mm.frame_sample_stats, _mm.ORACLE_FRAME_SAMPLE_STATS
@@ -766,23 +706,6 @@ register(
     _agg.ORACLE_GROUPING_SETS_AGG,
 )
 
-# NEW (round 10): per-stratum quality-distribution drift — the
-# t-closeness EMD machinery pointed at the corpus-curation question
-# (does this lang × source stratum's quality mix still look like the
-# corpus?)
-register(
-    "quality_drift_report",
-    _cur.quality_drift_report,
-    _cur.ORACLE_QUALITY_DRIFT_REPORT,
-)
-# NEW (round 12): the drift gate's ACTION face — quarantine every doc
-# in a drifted stratum via one broadcast join of the metadata-sized
-# report onto the corpus (inherits the report's eager checkpoint)
-register(
-    "quarantine_drifting_sources",
-    _cur.quarantine_drifting_sources,
-    _cur.ORACLE_QUARANTINE_DRIFTING_SOURCES,
-)
 # NEW (round 10): driver-visible face of the observe-API guard metrics
 # — proves the zero-extra-scan counters equal a direct aggregation.
 # EAGER by necessity: unlike every other entry, building this frame
@@ -822,17 +745,6 @@ register(
     "winnowing_density_report",
     _dedup.winnowing_density_report,
     _dedup.ORACLE_WINNOWING_DENSITY_REPORT,
-)
-# NEW (round 11): the MOSS ACTION face — winnowing overlap clusters
-# retain their highest-quality member (dedup_priority keeper policy),
-# keeper payload verified bit-for-bit by md5 (the clean_md5 pattern)
-register("winnowing_strip", _cur.winnowing_strip, _cur.ORACLE_WINNOWING_STRIP)
-# NEW (round 11): the crawl-triage funnel — per source, how much of
-# the corpus each dedup screen (exact / MinHash-LSH / winnowing) flags
-register(
-    "screen_funnel_report",
-    _cur.screen_funnel_report,
-    _cur.ORACLE_SCREEN_FUNNEL_REPORT,
 )
 # NEW (round 10): cross-method validation of the two decontamination
 # gates (verbatim n-gram vs paraphrase embedding), the
