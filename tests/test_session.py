@@ -1,7 +1,9 @@
 """The engine session's local filesystem: ``graft.ForklessLocalFileSystem``
 (``udacity_dsnd_projects_spark/jvm``) in place of Hadoop's
 ``LocalFileSystem``, which forks ``chmod`` for every file and directory
-it creates when no native ``libhadoop`` is loaded."""
+it creates when no native ``libhadoop`` is loaded; and its Hadoop conf,
+from which the empty ``jvm/conf/yarn-default.xml`` keeps YARN's
+defaults out."""
 
 from __future__ import annotations
 
@@ -14,7 +16,7 @@ import textwrap
 import zipfile
 from pathlib import Path
 
-from udacity_dsnd_projects_spark.session import FORKLESS_FS, FORKLESS_JAR
+from udacity_dsnd_projects_spark.session import FORKLESS_FS, FORKLESS_JAR, HADOOP_CONF_SHADOW
 
 SOURCE = Path(FORKLESS_JAR).with_name("ForklessLocalFileSystem.java")
 REPO = Path(__file__).resolve().parent.parent
@@ -120,6 +122,25 @@ def test_forkless_rename_refuses_to_replace_a_file(spark, tmp_path):
     assert (tmp_path / "d" / "c").read_text() == "c"
 
 
+def test_local_session_conf_holds_no_yarn_defaults(spark):
+    """The engine's empty ``yarn-default.xml`` shadows Hadoop's, so no
+    key of the session conf comes from it; the core and mapred defaults
+    that the local filesystem and the output committer read keep their
+    stock values."""
+    conf = spark._jsc.hadoopConfiguration()
+    sources = set()
+    entries = conf.iterator()
+    while entries.hasNext():
+        sources.update(conf.getPropertySources(entries.next().getKey()) or [])
+    assert "yarn-default.xml" not in sources
+    assert {"core-default.xml", "mapred-default.xml"} <= sources
+    assert conf.get("yarn.resourcemanager.address") is None
+    assert conf.get("fs.permissions.umask-mode") == "022"
+    assert conf.get("mapreduce.fileoutputcommitter.algorithm.version") == "1"
+    first = conf.getClassLoader().getResources("yarn-default.xml").nextElement()
+    assert (first.getProtocol(), first.getPath()) == ("file", str(Path(HADOOP_CONF_SHADOW, "yarn-default.xml")))
+
+
 _ROUND_TRIP = """
 from pyspark.sql import functions as F
 
@@ -137,10 +158,13 @@ print("FS", fs.getClass().getName())
 """
 
 
-def _run_session_script(tmp_path: Path, body: str) -> str:
+def _run_session_script(tmp_path: Path, body: str, cpus: str | None = "2") -> str:
     script = textwrap.dedent(body) + _ROUND_TRIP + "spark.stop()\n"
-    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=str(REPO))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=str(REPO))
     env.pop("SPARK_MASTER", None)
+    env.pop("SPARK_GRAFT_CPUS", None)
+    if cpus is not None:
+        env["SPARK_GRAFT_CPUS"] = cpus
     proc = subprocess.run(
         [sys.executable, "-c", f"tmp = {str(tmp_path)!r}\n{script}"],
         capture_output=True, text=True, timeout=600, env=env, cwd=REPO,
@@ -150,29 +174,40 @@ def _run_session_script(tmp_path: Path, body: str) -> str:
 
 
 def test_get_spark_on_a_jvm_started_without_the_jar(tmp_path):
-    """A bare session started and stopped leaves a JVM without the jar;
-    ``get_spark`` then keeps Spark's default class, and parquet and a
-    checkpointed stream still work."""
+    """A bare session started and stopped leaves a JVM without the jar
+    and the conf dir; ``get_spark`` then keeps Spark's default class and
+    Hadoop's YARN defaults, and parquet and a checkpointed stream still
+    work."""
     out = _run_session_script(tmp_path, """
         from pyspark.sql import SparkSession
         from udacity_dsnd_projects_spark.session import get_spark
 
         SparkSession.builder.master("local[1]").getOrCreate().stop()
         spark = get_spark("jvm-reuse", shuffle_partitions=2)
+        print("YARN_RM", spark._jsc.hadoopConfiguration().get("yarn.resourcemanager.address"))
     """)
     assert "FS " in out and f"FS {FORKLESS_FS}" not in out
+    assert "YARN_RM " in out and "YARN_RM None" not in out
 
 
 def test_get_spark_keeps_the_callers_class_path(tmp_path):
-    """A caller's ``spark.driver.extraClassPath`` joins the jar on the
-    class path instead of replacing it."""
+    """A caller's ``spark.driver.extraClassPath`` joins the jar and the
+    conf dir on the class path instead of replacing them. Without
+    ``SPARK_GRAFT_CPUS`` or a ``shuffle_partitions`` argument, a local
+    session sizes its shuffle partitions to the cores it may run on."""
     (tmp_path / "cp").mkdir()
     (tmp_path / "cp" / "marker.txt").write_text("on the class path")
     out = _run_session_script(tmp_path, """
+        import os
         from udacity_dsnd_projects_spark.session import get_spark
 
-        spark = get_spark("class-path", shuffle_partitions=2,
-                          extra_conf={"spark.driver.extraClassPath": f"{tmp}/cp"})
+        spark = get_spark("class-path", extra_conf={"spark.driver.extraClassPath": f"{tmp}/cp"})
         assert spark._jvm.java.lang.ClassLoader.getSystemResource("marker.txt") is not None
-    """)
+        class_path = spark._jvm.java.lang.System.getProperty("java.class.path").split(os.pathsep)
+        print("CLASS_PATH", *(os.path.normpath(p) for p in class_path))
+        print("SHUFFLE", spark.conf.get("spark.sql.shuffle.partitions"))
+    """, cpus=None)
     assert f"FS {FORKLESS_FS}" in out
+    class_path = next(line for line in out.splitlines() if line.startswith("CLASS_PATH ")).split()[1:]
+    assert {FORKLESS_JAR, HADOOP_CONF_SHADOW, str(tmp_path / "cp")} <= set(class_path)
+    assert f"SHUFFLE {len(os.sched_getaffinity(0))}" in out

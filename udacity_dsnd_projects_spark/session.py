@@ -4,7 +4,9 @@ Mirrors the reference's session bootstrap
 (``spark-streaming-pipeline/sparkpykafkajoin.py:55-58`` — appName +
 log-level WARN) but with scale-minded defaults: AQE, UTC session
 timezone (for oracle comparability), Arrow enabled, shuffle
-partitions sized to cores rather than the 200 default.
+partitions sized to cores rather than the 200 default: local sessions
+use ``SPARK_GRAFT_CPUS`` or the cores this process may run on, and
+only spark-submit falls back to 32.
 
 Local sessions also write streaming checkpoints through Hadoop's
 ``FileSystem`` instead of Spark's default ``FileContext`` manager. The
@@ -30,6 +32,20 @@ output parquet files and the upsert sink's staging. A JVM that is
 already running without the jar keeps Spark's default class. Under
 spark-submit Spark's defaults stay; ``extra_conf`` can override either
 setting.
+
+Local sessions also shadow Hadoop's ``yarn-default.xml`` with the empty
+file in ``jvm/conf/``, put on the driver class path beside the jar.
+Spark loads ``JobConf`` at startup, and ``JobConf`` registers
+``yarn-default.xml`` as a default resource, so its 520 keys made up
+about half of the session's Hadoop ``Configuration`` (1,077 keys,
+108 KB serialized). Every micro-batch copies that conf for each file
+scan, state-store RDD and write job, and serializes it into broadcasts
+and task closures, all on the stream thread. A ``local[N]`` session
+reads no YARN key, so dropping them is safe there; ``core-default.xml``
+and ``mapred-default.xml`` keep their stock values, since the local
+filesystem and ``FileOutputCommitter`` read them. Like the jar, the
+shadow applies only when ``get_spark`` launches the JVM: a JVM already
+running, and every spark-submit job, keep Hadoop's full defaults.
 """
 
 from __future__ import annotations
@@ -40,10 +56,9 @@ from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 FORKLESS_FS = "graft.ForklessLocalFileSystem"
 FORKLESS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "forkless-localfs.jar")
+HADOOP_CONF_SHADOW = os.path.join(os.path.dirname(__file__), "jvm", "conf")
 _CLASS_PATH = "spark.driver.extraClassPath"
 _FS_IMPL = "spark.hadoop.fs.file.impl"
 
@@ -69,7 +84,9 @@ def get_spark(
     the static shuffle-partition count only needs to be a sane upper
     bound.
     """
-    n_shuffle = str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)
+    local = not os.environ.get("SPARK_MASTER")  # not under spark-submit
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    n_shuffle = str(shuffle_partitions or cpus or (len(os.sched_getaffinity(0)) if local else 32))
     conf = dict(extra_conf or {})
     builder = (
         SparkSession.builder.appName(app_name)
@@ -93,8 +110,8 @@ def get_spark(
         .config("spark.sql.timestampType", "TIMESTAMP_LTZ")
         .config("spark.ui.enabled", "false")
     )
-    if not os.environ.get("SPARK_MASTER"):  # not under spark-submit
-        builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
+    if local:
+        builder = builder.master(f"local[{cpus or '*'}]")
         builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # no libhadoop in pip pyspark: the FileContext path forks readlink and chmod per file
         builder = builder.config(
@@ -105,8 +122,12 @@ def get_spark(
         # directory; only register the forkless class where the JVM loads it
         gateway = SparkContext._gateway
         if gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT"):
-            # getOrCreate launches the JVM: the jar joins the caller's class path
-            conf[_CLASS_PATH] = os.pathsep.join(filter(None, [FORKLESS_JAR, conf.get(_CLASS_PATH)]))
+            # getOrCreate launches the JVM: the jar joins the caller's class path,
+            # with the conf dir whose empty yarn-default.xml halves the Hadoop conf
+            # each micro-batch copies (a local[N] session reads no YARN key)
+            conf[_CLASS_PATH] = os.pathsep.join(
+                filter(None, [FORKLESS_JAR, HADOOP_CONF_SHADOW, conf.get(_CLASS_PATH)])
+            )
             conf.setdefault(_FS_IMPL, FORKLESS_FS)
         elif gateway is not None and _jvm_loads(gateway.jvm, FORKLESS_FS):
             conf.setdefault(_FS_IMPL, FORKLESS_FS)
