@@ -1,6 +1,7 @@
-"""Static import scan of the package source, shared by the tests that
-pin which modules import which. Reads the files with ``ast``, so an
-import inside a function counts as much as one at module level."""
+"""Static scans of the source, shared by the tests that pin which
+modules import which and which names are used. Reads the files with
+``ast``, so an import or a use inside a function counts as much as one
+at module level."""
 
 from __future__ import annotations
 
@@ -40,3 +41,35 @@ def imported_names(path: Path) -> list[tuple[int, str]]:
             continue
         found += [(node.lineno, n) for n in names]
     return found
+
+
+def public_definitions(path: Path) -> dict[str, ast.stmt]:
+    """The public names a file defines at top level (functions, classes
+    and assigned constants), each with the statement that defines it."""
+    found = {}
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            found[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            found.update((t.id, node) for t in targets if isinstance(t, ast.Name))
+    return {name: node for name, node in found.items() if not name.startswith("_")}
+
+
+def name_uses() -> dict[str, list[tuple[Path, int]]]:
+    """Every ``(path, lineno)`` in the package, its tests or the
+    benchmark where a name is read, as ``name`` or as ``obj.name``. An
+    import alone is not a use: a re-export that nothing reads keeps
+    nothing alive."""
+    uses: dict[str, list[tuple[Path, int]]] = {}
+    for d in (PACKAGE_DIR.name, "tests", "perfbench"):
+        for path in (PACKAGE_DIR.parent / d).rglob("*.py"):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                else:
+                    continue
+                uses.setdefault(name, []).append((path, node.lineno))
+    return uses

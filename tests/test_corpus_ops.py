@@ -174,27 +174,6 @@ def test_substring_dedup_catches_boundary_straddling_repeat(spark):
     assert per_doc[2] == 0
 
 
-def test_url_normalize_rules_and_idempotence(spark, sf_dir):
-    """Canonical URLs: no fragments/tracking params/default ports/www/
-    trailing slashes, lowercase authority — and normalizing a second
-    time changes nothing (idempotence, the canonical-form property)."""
-    from udacity_dsnd_projects_spark.functions import web as w
-    from pyspark.sql import functions as F
-
-    out = w.url_normalize(spark, sf_dir)
-    bad = out.filter(
-        F.col("canon_url").rlike(r"#|utm_|[?&]ref=|:80/|:80$|:443/|:443$|//www\.|/$|\?$")
-        | (F.col("canon_url") != w.normalize_url(F.col("canon_url")))
-    )
-    assert bad.count() == 0, bad.limit(5).collect()
-    # the real port survives
-    assert out.filter(F.col("canon_url").contains(":8080")).count() > 0
-    # both default-port rules get REAL corpus coverage (non-vacuous:
-    # raw URLs must actually carry the ports the rules strip)
-    assert out.filter(F.col("url").contains(":80/")).count() > 0
-    assert out.filter(F.col("url").rlike(r"^https://[^/]*:443")).count() > 0
-
-
 def test_seq_pack_bins_contiguous_and_under_budget(spark, sf_dir):
     """Bins are contiguous in doc order within each lang, start at 0,
     and every bin's start offset is a multiple of the budget."""

@@ -115,24 +115,6 @@ def test_exact_rank_and_cumsum_degenerate_inputs(spark):
     assert summed == {i: 2 * (i + 1) for i in range(10)}
 
 
-def test_substring_dedup_and_url_ops_on_tiny_docs(spark, sf_dir):
-    """Docs shorter than the substring window are excluded (not
-    errors); url normalization tolerates fragment-less/query-less
-    inputs."""
-    from pyspark.sql import functions as F
-
-    from udacity_dsnd_projects_spark.functions.web import normalize_url
-
-    tiny = spark.createDataFrame(
-        [("http://a.com", "http://a.com"),
-         ("https://B.com/x#f", "https://b.com/x"),
-         ("http://c.com:8080/p/", "http://c.com:8080/p")],
-        ["url", "want"],
-    )
-    got = tiny.select((normalize_url(F.col("url")) == F.col("want")).alias("ok"))
-    assert all(r["ok"] for r in got.collect())
-
-
 @pytest.mark.slow  # ~14 s adversarial sweep; full-suite only
 def test_exact_rank_property_random_frames(spark):
     """Property check: exact_group_rank / exact_group_cumsum reproduce

@@ -73,68 +73,10 @@ def test_contamination_planted_benchmark_copy(spark):
     assert out == {5: 1.0}
 
 
-def test_resize_media_matches_numpy_downsample(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import multimodal as mm
-
-    media = mm.synthesize_media(spark, sf_dir)
-    src = {r["media_id"]: bytes(r["content"]) for r in media.filter(
-        F.col("modality") == "image").collect()}
-    out = {r["media_id"]: bytes(r["resized"]) for r in mm.resize_media(media).collect()}
-    assert set(out) == set(src)
-    for mid, data in src.items():
-        if len(data) <= mm.RESIZE_TARGET_BYTES:
-            expected = data
-        else:
-            arr = np.frombuffer(data, dtype=np.uint8)
-            pos = (np.arange(mm.RESIZE_TARGET_BYTES) * len(data)) // mm.RESIZE_TARGET_BYTES
-            expected = arr[pos].tobytes()
-        assert out[mid] == expected
-
-
-def test_sample_frames_slices_payload(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import multimodal as mm
-
-    media = mm.synthesize_media(spark, sf_dir)
-    frames = mm.sample_frames(media).collect()
-    assert frames, "no video frames sampled"
-    src = {r["media_id"]: bytes(r["content"]) for r in media.filter(
-        F.col("modality") == "video").collect()}
-    for r in frames:
-        lo = r["frame_idx"] * mm.FRAME_BYTES
-        assert bytes(r["frame"]) == src[r["media_id"]][lo : lo + mm.FRAME_BYTES]
-        assert r["ts_ms"] == r["frame_idx"] * mm.FRAME_EVERY_MS
-
-
 def test_grouped_map_zscore_equals_window_face(spark, sf_dir):
     a = sorted(map(str, p.lang_zscore(spark, sf_dir).collect()))
     b = sorted(map(str, p.lang_zscore_pandas(spark, sf_dir).collect()))
     assert a == b
-
-
-def test_media_feature_summary_matches_python_fold(spark, sf_dir):
-    """The registered scalar projection must equal the Python-side sum
-    of the array face's features, and the corpus must be pure ASCII —
-    the one assumption ORACLE_MEDIA_FEATURE_SUMMARY leans on (it
-    reconstructs byte values from char codepoints)."""
-    from udacity_dsnd_projects_spark.functions import multimodal as mm
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    n_non_ascii = docs.filter(
-        F.octet_length("text") != F.length("text")
-    ).count()
-    assert n_non_ascii == 0, "oracle assumes byte == codepoint (ASCII corpus)"
-
-    arr = {
-        r["media_id"]: r
-        for r in mm.media_feature_pipeline(spark, sf_dir).collect()
-    }
-    summ = mm.media_feature_summary(spark, sf_dir).collect()
-    assert len(summ) == len(arr)
-    for r in summ:
-        expect = round(sum(arr[r["media_id"]]["feature"]), 5)
-        assert r["feature_sum"] == expect, (r, expect)
-        assert r["n_bytes"] == arr[r["media_id"]]["n_bytes"]
 
 
 def test_quantize_embedding_matches_numpy(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Property tests for the training-data pipeline operators beyond the
 oracle equality checks: recall of the LSH candidate generators against
-the exact methods, Pandas-UDF face vs JVM face, multimodal plumbing."""
+the exact methods, Pandas-UDF face vs JVM face."""
 
 from __future__ import annotations
 
@@ -177,49 +177,3 @@ def test_lsh_buckets_group_near_dups(spark, sf_dir):
     pairs = embedding_near_dup(spark, sf_dir).collect()
     assert pairs, "bucketed similar-pair report should be non-empty"
     assert all(r.cosine > NEAR_DUP_COSINE for r in pairs)
-
-
-def test_media_pipeline_plumbing(spark, sf_dir):
-    """Multimodal plumbing: schema contract, Arrow batching, stubbed
-    decode determinism, codec registration."""
-    from udacity_dsnd_projects_spark.functions import multimodal as mm
-
-    media = mm.synthesize_media(spark, sf_dir)
-    assert [f.name for f in media.schema.fields] == [
-        "media_id",
-        "modality",
-        "content",
-        "meta",
-    ]
-    feats = mm.extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == media.count()
-    assert all(len(r.feature) == 8 for r in rows)
-    # deterministic fake decode: feature[0] == n_bytes
-    assert all(r.feature[0] == r.n_bytes for r in rows)
-
-    # registering a codec changes only that modality
-    mm.register_codec("image", lambda content, meta: [1.0])
-    try:
-        rows2 = mm.extract_features(media).collect()
-        img = [r for r in rows2 if r.modality == "image"]
-        other = [r for r in rows2 if r.modality != "image"]
-        assert all(r.feature == [1.0] for r in img)
-        assert all(len(r.feature) == 8 for r in other)
-    finally:
-        mm._CODECS.pop("image", None)
-
-
-def test_media_codec_not_implemented_yields_null(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import multimodal as mm
-
-    def real_decoder_missing(content, meta):
-        raise NotImplementedError("image codec not available in container")
-
-    mm.register_codec("audio", real_decoder_missing)
-    try:
-        rows = mm.extract_features(mm.synthesize_media(spark, sf_dir)).collect()
-        audio = [r for r in rows if r.modality == "audio"]
-        assert audio and all(r.feature is None for r in audio)
-    finally:
-        mm._CODECS.pop("audio", None)

@@ -179,23 +179,3 @@ def test_winnowing_pairs_reuses_hash_exchange(spark, sf_dir):
     assert plan.count("ReusedExchange") >= 2
     assert "Scan ExistingRDD" in plan
     assert plan.count("FileScan") == 0
-
-
-def test_markup_density_prunes_document_scan(spark, sf_dir):
-    """The markup gate reads exactly (doc_id, source, text) — a scan
-    carrying lang/n_chars would ship dead columns through the regex
-    stage at corpus scale."""
-    plan = _plan(spark, sf_dir, "markup_density_report")
-    read = plan.split("ReadSchema")[-1]
-    assert "text" in read and "source" in read
-    assert "lang" not in read and "n_chars" not in read
-
-
-def test_media_mismatch_sniffs_without_exchanging_blobs(spark, sf_dir):
-    """The sniff reduces each payload to 4 bytes row-locally; the only
-    exchange carries the modality-cardinality rollup, never content."""
-    plan = _plan(spark, sf_dir, "media_type_mismatch_report")
-    import re
-
-    for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "content" not in m.group(1)

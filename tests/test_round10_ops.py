@@ -541,7 +541,6 @@ def test_gate_operators_survive_defective_payloads(spark):
         # cleaning/ingest primitives run BEFORE the guards, so they
         # must propagate NULL payloads instead of crashing the worker
         "nfc_normalize",
-        "media_feature_pipeline",
     ]
     docs = [
         (0, "the quick brown fox jumps over the lazy dog", "en", "webA", 43),

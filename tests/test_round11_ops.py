@@ -207,36 +207,8 @@ def test_stateful_state_version_bump_fails_loudly(
 
 
 # --------------------------------------------------------------------------
-# Round-11 new operators: markup gate + k-anonymized release.
+# Round-11 new operators: k-anonymized release.
 # --------------------------------------------------------------------------
-
-
-def test_markup_regexes_count_planted_snippets(spark):
-    """Each planted snippet fires exactly its own regex family: the
-    html snippet is 3 tags, the markdown snippet is 3 markers, the
-    entity snippet is 2 escapes — and clean text fires none."""
-    from udacity_dsnd_projects_spark.functions.web import (
-        RE_ENTITY,
-        RE_HTML_TAG,
-        RE_MARKDOWN,
-    )
-
-    rows = spark.createDataFrame(
-        [
-            (1, ' <div class="x">span</div> <br/>'),
-            (2, " ## head **bold** [link](http://x)"),
-            (3, " &amp; &#39;"),
-            (4, "perfectly clean prose with no markup at all"),
-        ],
-        ["doc_id", "text"],
-    ).select(
-        "doc_id",
-        F.regexp_count("text", F.lit(RE_HTML_TAG)).alias("tags"),
-        F.regexp_count("text", F.lit(RE_MARKDOWN)).alias("md"),
-        F.regexp_count("text", F.lit(RE_ENTITY)).alias("ent"),
-    )
-    got = {r.doc_id: (r.tags, r.md, r.ent) for r in rows.collect()}
-    assert got == {1: (3, 0, 0), 2: (0, 3, 0), 3: (0, 0, 2), 4: (0, 0, 0)}
 
 
 def test_k_anonymize_release_reconciles_and_suppresses(spark, sf_dir):
@@ -302,39 +274,6 @@ def test_cusum_flags_level_shift_not_stationary_series(spark):
     assert got["oneday"].peak_day is None and got["oneday"].is_change == 0
 
 
-def test_media_mismatch_sniff_matches_planting_rule(spark, sf_dir):
-    """Every declared modality's mismatches are exactly the
-    % MISMATCH_MOD planted rows, the top wrong sniff is the rotation
-    target, and clean rows sniff as themselves."""
-    from udacity_dsnd_projects_spark.functions.multimodal import (
-        MISMATCH_MOD,
-        _ROTATE,
-        MAGIC_HEADERS,
-        media_type_mismatch_report,
-        synthesize_media,
-    )
-
-    got = {
-        r.modality: r
-        for r in media_type_mismatch_report(spark, sf_dir).collect()
-    }
-    assert set(got) == {"image", "audio", "video"}
-    media = synthesize_media(spark, sf_dir).select("media_id", "modality").collect()
-    by_mod = {}
-    for r in media:
-        by_mod.setdefault(r.modality, []).append(r.media_id)
-    rev = {v: k for k, v in MAGIC_HEADERS.items()}
-    for mod, ids in by_mod.items():
-        planted = [i for i in ids if i % MISMATCH_MOD == 0]
-        row = got[mod]
-        assert row.n_media == len(ids)
-        assert row.n_mismatch == len(planted)
-        if planted:
-            assert row.top_sniffed_other == rev[_ROTATE[mod]]
-        else:
-            assert row.top_sniffed_other is None
-
-
 def test_ivf_probe_sweep_monotone_and_consistent(spark, sf_dir):
     """Deeper probing can only add candidates, so both the scan cost
     and the recall are non-decreasing in depth; the deepest row must
@@ -360,4 +299,3 @@ def test_ivf_probe_sweep_monotone_and_consistent(spark, sf_dir):
     assert deep.mean_recall == round(
         sum(r.n_hits for r in rec) / (len(rec) * TOP_K), 6
     )
-

@@ -1,60 +1,12 @@
-"""Round-12 tests: the media-type-mismatch full-string tie-break
-(VERDICT r11 task 4), the cached substrate-layout probe (ADVICE r11),
-the closed BPE tokenizer-induction loop (task 2), the markup_strip
-action face (task 3), and the round-12 depth faces:
+"""Round-12 tests: the cached substrate-layout probe (ADVICE r11),
+the closed BPE tokenizer-induction loop (task 2), and the round-12
+depth faces:
 bpe_compression_sweep / bpe_seq_pack_bins / tokenizer_drift_report /
 ann_probe_agreement / bpe_pack_efficiency / bpe_merge_stability."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from udacity_dsnd_projects_spark.functions.multimodal import _mismatch_rollup
-
-
-# --------------------------------------------------------------------------
-# Task 4 — media_type_mismatch_report tie-break: when two WRONG sniffs
-# tie on count and share a FIRST LETTER, the winner must be the full-
-# string lexicographic minimum (the oracle's ORDER BY n DESC, sniffed).
-# The old F.ascii() surrogate ordered by the first character only and
-# would pick either arbitrarily.
-# --------------------------------------------------------------------------
-
-
-def test_mismatch_tiebreak_full_string(spark):
-    # declared 'image'; wrong sniffs 'audio' and 'aiff' tie 2-2 and
-    # share the initial 'a' — full-string order says 'aiff' wins.
-    rows = (
-        [("image", "audio")] * 2
-        + [("image", "aiff")] * 2
-        + [("image", "image")] * 3
-    )
-    s = spark.createDataFrame(rows, ["modality", "sniffed"])
-    out = _mismatch_rollup(s).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["n_media"] == 7 and r["n_mismatch"] == 4
-    assert r["top_sniffed_other"] == "aiff"
-
-
-def test_mismatch_tiebreak_count_still_dominates(spark):
-    # count beats lexicographic order: 'video' x3 beats 'aiff' x2.
-    rows = (
-        [("image", "video")] * 3
-        + [("image", "aiff")] * 2
-        + [("image", "image")] * 1
-    )
-    s = spark.createDataFrame(rows, ["modality", "sniffed"])
-    r = _mismatch_rollup(s).collect()[0]
-    assert r["top_sniffed_other"] == "video"
-    assert r["n_mismatch"] == 5
-
-
-def test_mismatch_all_clean_modality_yields_null_top(spark):
-    rows = [("audio", "audio")] * 4
-    s = spark.createDataFrame(rows, ["modality", "sniffed"])
-    r = _mismatch_rollup(s).collect()[0]
-    assert r["n_mismatch"] == 0 and r["top_sniffed_other"] is None
 
 
 # --------------------------------------------------------------------------
@@ -139,67 +91,6 @@ def test_bpe_step1_equals_pair_counts_rank1(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Round-12 task 3 — markup_strip: the markup action face. Python re is
-# the independent referee for the strip chain (same patterns, same
-# order), and a markup-free document must round-trip bit-for-bit.
-# --------------------------------------------------------------------------
-
-
-def test_markup_strip_chain_matches_reference_regex(spark):
-    import re as pyre
-
-    from udacity_dsnd_projects_spark.functions.web import (
-        RE_ENTITY,
-        RE_HTML_TAG,
-        RE_MD_BOLD_STRIP,
-        RE_MD_HEAD_STRIP,
-        RE_MD_LINK_STRIP,
-        _strip_markup,
-    )
-
-    raw = 'keep <b>x</b> <br/> **strong** [t](http://u) ## h &amp; &#39; tail'
-    got = (
-        spark.createDataFrame([(raw,)], ["text"])
-        .select(_strip_markup(F.col("text")).alias("c"))
-        .collect()[0]["c"]
-    )
-    exp = raw
-    exp = pyre.sub(RE_HTML_TAG, "", exp)
-    exp = pyre.sub(RE_MD_BOLD_STRIP, r"\1", exp)
-    exp = pyre.sub(RE_MD_LINK_STRIP, r"\1", exp)
-    exp = pyre.sub(RE_MD_HEAD_STRIP, r"\1", exp)
-    exp = pyre.sub(RE_ENTITY, "", exp)
-    assert got == exp
-    for residue in ("<b>", "<br/>", "**", "](", "## ", "&amp;", "&#39;"):
-        assert residue not in got, (residue, got)
-    for kept in ("keep", "x", "strong", "t", "h", "tail"):
-        assert kept in got
-
-
-def test_markup_strip_clean_doc_roundtrips(spark):
-    from udacity_dsnd_projects_spark.functions.web import _strip_markup
-
-    raw = "just plain words 123, no markup at all"
-    got = (
-        spark.createDataFrame([(raw,)], ["text"])
-        .select(_strip_markup(F.col("text")).alias("c"))
-        .collect()[0]["c"]
-    )
-    assert got == raw
-
-
-def test_markdown_alternation_composed_from_components():
-    from udacity_dsnd_projects_spark.functions.web import (
-        RE_MARKDOWN,
-        RE_MD_BOLD,
-        RE_MD_HEAD,
-        RE_MD_LINK,
-    )
-
-    assert RE_MARKDOWN == f"{RE_MD_BOLD}|{RE_MD_LINK}|{RE_MD_HEAD}"
-
-
-# --------------------------------------------------------------------------
 # Round-12 task 8 — cross-face identities: the tuning curve and the
 # per-query recall report must agree at the deployed probe depth, and
 # the merge-aware mixture face must reuse bpe_apply_merges' counts
@@ -256,21 +147,19 @@ def test_bpe_mixture_tokens_equal_apply_sums(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Plan shapes — the apply/strip faces must be SHUFFLE-FREE single-scan
-# projections (the learn loop runs at construction; the returned frame
+# Plan shapes — the apply face must be a SHUFFLE-FREE single-scan
+# projection (the learn loop runs at construction; the returned frame
 # is scan + project only), and the mixture face's only exchanges are
 # its source-cardinality rollup.
 # --------------------------------------------------------------------------
 
 
-def test_bpe_apply_and_markup_strip_plans_are_shuffle_free(spark, sf_dir):
+def test_bpe_apply_plan_is_shuffle_free(spark, sf_dir):
     from udacity_dsnd_projects_spark.functions.text import bpe_apply_merges
-    from udacity_dsnd_projects_spark.functions.web import markup_strip
 
-    for df in (bpe_apply_merges(spark, sf_dir), markup_strip(spark, sf_dir)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "BatchScan" in plan or "FileScan" in plan or "Scan parquet" in plan
+    plan = bpe_apply_merges(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "BatchScan" in plan or "FileScan" in plan or "Scan parquet" in plan
 
 
 def test_bpe_vocab_table_total_mass_equals_apply_units(spark, sf_dir):

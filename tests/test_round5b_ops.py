@@ -1,7 +1,6 @@
-"""Behavioral + plan tests for the round-5 second batch: domain-level
-curation, snapshot diff / CDC merge, epoch upsampling, and the kNN
-graph. (Oracle equivalence for every registered face is in
-test_queries.py.)"""
+"""Behavioral + plan tests for the round-5 second batch: epoch
+upsampling and the kNN graph. (Oracle equivalence for every registered
+face is in test_queries.py.)"""
 
 from __future__ import annotations
 
@@ -11,127 +10,10 @@ from pyspark.sql import functions as F
 
 
 # --------------------------------------------------------------------------
-# Domain-level curation
-# --------------------------------------------------------------------------
-def test_domain_filter_consistent_with_stats(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import web as w
-
-    stats = {r["domain"]: r["avg_quality"] for r in w.domain_stats(spark, sf_dir).collect()}
-    kept = w.domain_quality_filter(spark, sf_dir).collect()
-    kept_domains = {r["domain"] for r in kept}
-    expect = {d for d, q in stats.items() if q >= w.DOMAIN_MIN_AVG_QUALITY}
-    assert kept_domains == expect
-    # a real split: the gate must actually drop some domains and keep some
-    assert 0 < len(expect) < len(stats)
-    for r in kept:
-        assert r["avg_quality"] >= w.DOMAIN_MIN_AVG_QUALITY
-
-
-def test_domain_filter_broadcasts_domain_list(spark, sf_dir):
-    """The good-domain list is metadata-sized: the corpus-side join
-    must be a broadcast, never a corpus shuffle."""
-    from udacity_dsnd_projects_spark.functions import web as w
-
-    plan = (
-        w.domain_quality_filter(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_domain_cardinality(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import web as w
-
-    doms = w.doc_domains(spark, sf_dir)
-    n = doms.select("domain").distinct().count()
-    # sources × DOMAIN_MOD residues (every combination present at any sf)
-    n_src = doms.sparkSession.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "source"
-    ).distinct().count()
-    assert n <= n_src * w.DOMAIN_MOD
-    assert n >= n_src  # every source maps to at least one domain
-
-
-# --------------------------------------------------------------------------
-# Snapshot diff
-# --------------------------------------------------------------------------
-def test_snapshot_diff_statuses_line_up_with_residues(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import snapshot as s
-
-    rows = s.snapshot_diff(spark, sf_dir).collect()
-    by_status: dict[str, set[int]] = {}
-    for r in rows:
-        by_status.setdefault(r["status"], set()).add(r["doc_id"])
-        if r["status"] == "added":
-            assert r["old_md5"] is None and r["new_md5"] is not None
-        elif r["status"] == "removed":
-            assert r["new_md5"] is None and r["old_md5"] is not None
-        else:
-            assert r["old_md5"] != r["new_md5"]
-    # removed rows are exactly the offset clones
-    assert all(d >= s.SNAP_ID_OFFSET for d in by_status["removed"])
-    # added rows are exactly the residue class missing from OLD
-    assert all(d % s.SNAP_ADDED_MOD == 3 for d in by_status["added"])
-    # changed rows carry the stale-revision residue and are not "added"
-    assert all(
-        d % s.SNAP_CHANGED_MOD == 2 and d % s.SNAP_ADDED_MOD != 3
-        for d in by_status["changed"]
-    )
-    assert by_status["added"] and by_status["removed"] and by_status["changed"]
-
-
-def test_snapshot_diff_hashes_before_join(spark, sf_dir):
-    """Only (id, md5) may cross the exchange — the full text column
-    must be projected away below the join."""
-    from udacity_dsnd_projects_spark.functions import snapshot as s
-
-    plan = (
-        s.snapshot_diff(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    joins = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln or "ShuffledHashJoin" in ln]
-    assert joins, plan
-    assert all("text" not in ln for ln in joins), joins
-
-
-# --------------------------------------------------------------------------
-# CDC merge
-# --------------------------------------------------------------------------
-def test_cdc_merge_semantics(spark, sf_dir):
-    from udacity_dsnd_projects_spark.functions import snapshot as s
-
-    out = {r["doc_id"]: r for r in s.cdc_merge(spark, sf_dir).collect()}
-    # deletes win (seq 3 is the max everywhere it exists)
-    assert all(d % s.CDC_DELETE_MOD != 2 for d in out)
-    for d, r in out.items():
-        if d % 3 != 0 and d % s.CDC_REVISE_MOD == 1:
-            assert r["last_seq"] == 2  # revision superseded the base row
-        elif d % 3 == 0:
-            assert d % s.CDC_INSERT_MOD == 0 and r["last_seq"] == 2
-        else:
-            assert r["last_seq"] == 1
-    assert out  # non-empty merge result
-
-
-def test_cdc_merge_argmax_not_window(spark, sf_dir):
-    """Latest-wins must be the map-side-combined max(struct), not a
-    row_number window (partial aggregation visible in the plan)."""
-    from udacity_dsnd_projects_spark.functions import snapshot as s
-
-    plan = (
-        s.cdc_merge(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Window" not in plan, plan
-    assert "partial_max" in plan or "HashAggregate" in plan, plan
-
-
-# --------------------------------------------------------------------------
 # Mixture upsampling
 # --------------------------------------------------------------------------
+
+
 def test_mixture_upsample_epoch_counts(spark, sf_dir):
     from udacity_dsnd_projects_spark.functions import pipeline as p
 
@@ -331,40 +213,6 @@ def test_ann_recall_matches_set_intersection(spark, sf_dir):
         assert rep[q]["n_hits"] == n
         assert abs(rep[q]["recall"] - n / sim.TOP_K) < 1e-9
         assert 0.0 <= rep[q]["recall"] <= 1.0
-
-
-def test_merge_changelog_edge_semantics(spark):
-    """Crafted-log MERGE edges the synthesized corpus can't produce:
-    reinsert-after-delete (upsert with HIGHER seq than the tombstone
-    wins), delete-of-absent-key (no-op), and a pure-delete key
-    (absent from output)."""
-    from pyspark.sql import types as T
-
-    from udacity_dsnd_projects_spark.functions.snapshot import merge_changelog
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("seq", T.LongType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("content_md5", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    rows = [
-        (1, 1, "upsert", "a1", 10),  # plain key
-        (2, 1, "upsert", "b1", 11),
-        (2, 2, "delete", None, None),
-        (2, 3, "upsert", "b3", 12),  # reinsert AFTER delete
-        (3, 5, "delete", None, None),  # delete of never-present key
-        (4, 1, "upsert", "d1", 13),
-        (4, 9, "delete", None, None),  # pure delete wins
-    ]
-    out = {
-        r["doc_id"]: (r["last_seq"], r["content_md5"], r["n_chars"])
-        for r in merge_changelog(spark.createDataFrame(rows, schema)).collect()
-    }
-    assert out == {1: (1, "a1", 10), 2: (3, "b3", 12)}
 
 
 def test_late_order_priorities_semi_join_plan(spark, sf_dir):

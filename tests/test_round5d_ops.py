@@ -1,7 +1,6 @@
 """Round-5 fifth batch (training + extras): plan properties and edge
 semantics for the sliding-window chunker, the curriculum scheduler,
-the skew profile, rolling distinct users and
-exact quantiles. Value correctness is covered by
+the skew profile and exact quantiles. Value correctness is covered by
 tests/test_queries.py's oracle replica; these tests pin the SCALE
 properties (single scans, no stray shuffles or global sorts)."""
 
@@ -127,39 +126,6 @@ def test_skew_profile_is_take_ordered_over_key_frame(spark, sf_dir):
     # shares are a probability mass subset; ratios positive
     assert all(0 < r.row_share <= 1 and r.skew_ratio > 0 for r in rows)
     assert sum(r.row_share for r in rows) <= 1.0 + 1e-9
-
-
-def test_rolling_distinct_users_matches_bruteforce_on_sample_days(spark, sf_dir):
-    # spot-check trailing-window semantics directly: for three spine
-    # days, the reported count equals a brute-force distinct over
-    # events in [d-6, d]
-    import datetime as dt
-
-    from udacity_dsnd_projects_spark.operators.timeseries import (
-        ROLLING_WINDOW_DAYS,
-    )
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    df = registry.queries()["rolling_distinct_users"](spark, sf_dir)
-    rows = {r.day: r.active_users_7d for r in df.collect()}
-    days = sorted(rows)
-    assert len(days) >= ROLLING_WINDOW_DAYS
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .select(F.to_date("ts").alias("day"), "user_id")
-        .distinct()
-        .collect()
-    )
-    for probe in (days[0], days[len(days) // 2], days[-1]):
-        lo = probe - dt.timedelta(days=ROLLING_WINDOW_DAYS - 1)
-        expect = len(
-            {
-                r.user_id
-                for r in ev
-                if lo.date() <= r.day <= probe.date()
-            }
-        )
-        assert rows[probe] == expect, probe
 
 
 def test_exact_quantiles_match_bruteforce_rank_definition(spark, sf_dir):

@@ -12,6 +12,7 @@ import pytest
 
 from udacity_dsnd_projects_spark.schemas import (
     STATION,
+    TRANSFORMED_STATION,
     TURNSTILE,
     WEATHER,
     WEATHER_STATUS_DOMAIN,
@@ -943,6 +944,16 @@ def test_compacted_table_upsert_evaluates_each_batch_once(spark, tmp_path):
     assert len(set(persistent)) == 1, persistent
     got = {r["k"]: (r["seq"], r["val"]) for r in spark.read.parquet(table).collect()}
     assert got == {k: (30 + k, f"v3_{k}") for k in range(5)}
+
+
+def test_faust_station_transform_yields_transformed_station(spark):
+    """§3.3 — the Faust transform turns a ``STATION`` record into the
+    reference's ``TransformedStation`` (``faust_stream.py:25-29``):
+    the same field names, in order, with the same types."""
+    out = faust_station_transform(spark.createDataFrame([], STATION)).schema
+    assert [(f.name, f.dataType) for f in out] == [
+        (f.name, f.dataType) for f in TRANSFORMED_STATION
+    ]
 
 
 def test_faust_station_table_stream_equals_batch(spark, tmp_path_factory):

@@ -78,32 +78,13 @@ FROM documents
 """
 
 
-def quality_score_expr(text: Column) -> Column:
-    """The composite [0,1] quality score as a single column expression
-    over ``text``, used by :func:`quality_score` (which also reports the
-    component ratios). Scores land on exact quarter steps (0.25 = 2^-2
-    is binary-exact), so SUMs of this column are order-independent in
-    IEEE double."""
-    toks = tokens_col(text)
-    n_tok = F.size(toks)
-    n_chars = F.length(text)
-    n_punct = F.regexp_count(text, F.lit(r"[^a-zA-Z0-9\s]"))
-    n_digit = F.regexp_count(text, F.lit(r"[0-9]"))
-    en = F.array([F.lit(w) for w in LANG_STOPWORDS["en"]])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(en, t)))
-    return (
-        F.when(n_tok >= 10, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(n_punct / n_chars < 0.1, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(n_digit / n_chars < 0.1, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(n_stop / n_tok > 0.01, F.lit(0.25)).otherwise(F.lit(0.0))
-    )
-
-
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length, punctuation ratio, stopword ratio,
     digit ratio, mean token length, and a composite [0,1] score.
     Ratio weights follow the usual web-corpus heuristics (length in
-    range, low punctuation/digit noise, healthy stopword density)."""
+    range, low punctuation/digit noise, healthy stopword density).
+    Scores land on exact quarter steps (0.25 = 2^-2 is binary-exact),
+    so SUMs of the score are order-independent in IEEE double."""
     docs = load_table(spark, "documents", sf_dir)
     toks = tokens_col(F.col("text"))
     n_tok = F.size(toks)
@@ -116,7 +97,12 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit_ratio = n_digit / n_chars
     stop_ratio = n_stop / n_tok
     mean_tok_len = (n_chars - (n_tok - 1)) / n_tok
-    score = quality_score_expr(F.col("text"))
+    score = (
+        F.when(n_tok >= 10, F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.when(punct_ratio < 0.1, F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.when(digit_ratio < 0.1, F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.when(stop_ratio > 0.01, F.lit(0.25)).otherwise(F.lit(0.0))
+    )
     return docs.select(
         "doc_id",
         F.round(punct_ratio, 5).alias("punct_ratio"),
@@ -129,30 +115,16 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EN = "', '".join(LANG_STOPWORDS["en"])
 
-#: DuckDB twin of :func:`quality_score_expr` over a raw ``text``
-#: column, interpolated into ORACLE_QUALITY_SCORE below, so the two
-#: engines' scoring rules can only change together.
-_ORACLE_QUALITY_EXPR = rf"""(CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 10
-        THEN 0.25 ELSE 0.0 END
-   + CASE WHEN CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS DOUBLE)
-               / CAST(length(text) AS DOUBLE) < 0.1 THEN 0.25 ELSE 0.0 END
-   + CASE WHEN CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-               / CAST(length(text) AS DOUBLE) < 0.1 THEN 0.25 ELSE 0.0 END
-   + CASE WHEN CAST(len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                                    x -> list_contains(['{_EN}'], x))) AS DOUBLE)
-               / CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS DOUBLE)
-               > 0.01 THEN 0.25 ELSE 0.0 END)"""
-
 ORACLE_QUALITY_SCORE = rf"""
 WITH t AS (
-  SELECT doc_id, text,
+  SELECT doc_id,
          regexp_split_to_array(lower(trim(text)), '\s+') AS toks,
          CAST(length(text) AS DOUBLE) AS n_chars,
          CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS DOUBLE) AS n_punct,
          CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) AS n_digit
   FROM documents
 ), s AS (
-  SELECT doc_id, text, n_chars, n_punct, n_digit,
+  SELECT doc_id, n_chars, n_punct, n_digit,
          CAST(len(toks) AS DOUBLE) AS n_tok,
          CAST(len(list_filter(toks, x -> list_contains(['{_EN}'], x))) AS DOUBLE)
            AS n_stop
@@ -163,7 +135,10 @@ SELECT doc_id,
        ROUND(n_digit / n_chars, 5) AS digit_ratio,
        ROUND(n_stop / n_tok, 5) AS stopword_ratio,
        ROUND((n_chars - (n_tok - 1)) / n_tok, 5) AS mean_token_len,
-       {_ORACLE_QUALITY_EXPR} AS quality
+       CASE WHEN n_tok >= 10 THEN 0.25 ELSE 0.0 END
+         + CASE WHEN n_punct / n_chars < 0.1 THEN 0.25 ELSE 0.0 END
+         + CASE WHEN n_digit / n_chars < 0.1 THEN 0.25 ELSE 0.0 END
+         + CASE WHEN n_stop / n_tok > 0.01 THEN 0.25 ELSE 0.0 END AS quality
 FROM s
 """
 

@@ -57,8 +57,7 @@ def redis_envelope_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full chain: synthesize → parse envelope → unbase64 → parse
     customer → null-filter → birthYear (§3.1 steps 3-7)."""
     envelopes = _synthesize_envelopes(spark, sf_dir)
-    customers = parse_redis_envelope(envelopes, compat_first_entry_only=True)
-    return derive_birth_year(customers)
+    return derive_birth_year(parse_redis_envelope(envelopes))
 
 
 ORACLE_REDIS_ENVELOPE_DECODE = """

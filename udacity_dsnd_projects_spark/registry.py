@@ -17,14 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from udacity_dsnd_projects_spark.functions import corpus as _corp
 from udacity_dsnd_projects_spark.functions import dedup as _dedup
 from udacity_dsnd_projects_spark.functions import graph as _graph
-from udacity_dsnd_projects_spark.functions import multimodal as _mm
 from udacity_dsnd_projects_spark.functions import pipeline as _pipe
 from udacity_dsnd_projects_spark.functions import scalar as _scalar
-from udacity_dsnd_projects_spark.functions import snapshot as _snap
 from udacity_dsnd_projects_spark.functions import similarity as _sim
 from udacity_dsnd_projects_spark.functions import text as _text
 from udacity_dsnd_projects_spark.functions import training as _train
-from udacity_dsnd_projects_spark.functions import web as _web
 from udacity_dsnd_projects_spark import metrics as _metrics
 from udacity_dsnd_projects_spark.operators import aggregations as _agg
 from udacity_dsnd_projects_spark.operators import analytics as _an
@@ -32,7 +29,6 @@ from udacity_dsnd_projects_spark.operators import envelope as _env
 from udacity_dsnd_projects_spark.operators import joins as _joins
 from udacity_dsnd_projects_spark.operators import projections as _proj
 from udacity_dsnd_projects_spark.operators import risk_join as _risk
-from udacity_dsnd_projects_spark.operators import timeseries as _ts
 from udacity_dsnd_projects_spark.operators import skew as _skew
 from udacity_dsnd_projects_spark.operators import windows as _win
 
@@ -84,16 +80,6 @@ register(
 register("semantic_dedup", _sim.semantic_dedup, _sim.ORACLE_SEMANTIC_DEDUP)
 # NEW: vocabulary coverage curve on the total-order primitives
 register("vocab_coverage", _text.vocab_coverage, _text.ORACLE_VOCAB_COVERAGE)
-# NEW: per-domain curation rollup + domain-level quality gate
-register("domain_stats", _web.domain_stats, _web.ORACLE_DOMAIN_STATS)
-register(
-    "domain_quality_filter",
-    _web.domain_quality_filter,
-    _web.ORACLE_DOMAIN_QUALITY_FILTER,
-)
-# NEW: snapshot compare + changelog MERGE semantics
-register("snapshot_diff", _snap.snapshot_diff, _snap.ORACLE_SNAPSHOT_DIFF)
-register("cdc_merge", _snap.cdc_merge, _snap.ORACLE_CDC_MERGE)
 # NEW: epoch-repeat upsampling for under-represented sources
 register("mixture_upsample", _pipe.mixture_upsample, _pipe.ORACLE_MIXTURE_UPSAMPLE)
 # NEW: within-cluster top-k cosine neighbor graph
@@ -368,9 +354,8 @@ register(
     _an.late_order_priorities,
     _an.ORACLE_LATE_ORDER_PRIORITIES,
 )
-# NEW (batch 4): clustering health report; binary-payload dedup
+# NEW (batch 4): clustering health report
 register("cluster_quality", _pipe.cluster_quality, _pipe.ORACLE_CLUSTER_QUALITY)
-register("media_dedup", _mm.media_dedup, _mm.ORACLE_MEDIA_DEDUP)
 # NEW (batch 4): asymmetric containment dedup; Gopher rule gate;
 # CCNet head/middle/tail perplexity split
 register(
@@ -388,18 +373,6 @@ register(
     _text.ccnet_perplexity_bucket,
     _text.ORACLE_CCNET_PERPLEXITY_BUCKET,
 )
-# NEW (batch 4): time-series resample/LOCF + native session_window face
-register(
-    "timeseries_gap_fill", _ts.timeseries_gap_fill, _ts.ORACLE_TIMESERIES_GAP_FILL
-)
-register(
-    "session_window_rollup",
-    _ts.session_window_rollup,
-    _ts.ORACLE_SESSION_WINDOW_ROLLUP,
-)
-# synthesize_urls :443 coverage fix changed the raw-URL corpus
-register("url_normalize", _web.url_normalize, _web.ORACLE_URL_NORMALIZE)
-register("url_dedup", _web.url_dedup, _web.ORACLE_URL_DEDUP)
 # stratum-size guard added (grouped-map scale contract now enforced)
 register(  # applyInPandas grouped-map face, asserted-identical -> same oracle
     "lang_zscore_pandas", _pipe.lang_zscore_pandas, _pipe.ORACLE_LANG_ZSCORE
@@ -429,11 +402,6 @@ register(
 )
 register("skew_profile", _skew.skew_profile, _skew.ORACLE_SKEW_PROFILE)
 register("unpivot_agg", _agg.unpivot_agg, _agg.ORACLE_UNPIVOT_AGG)
-register(
-    "rolling_distinct_users",
-    _ts.rolling_distinct_users,
-    _ts.ORACLE_ROLLING_DISTINCT_USERS,
-)
 register("exact_quantiles", _an.exact_quantiles, _an.ORACLE_EXACT_QUANTILES)
 register(
     "grouping_sets_agg", _agg.grouping_sets_agg, _agg.ORACLE_GROUPING_SETS_AGG
@@ -441,9 +409,6 @@ register(
 register("timestamp_convert", _scalar.timestamp_convert, _scalar.ORACLE_TIMESTAMP_CONVERT)
 register("rolling_avg_24h", _an.rolling_avg_24h, _an.ORACLE_ROLLING_AVG_24H)
 register("cosine_scores_pandas", _sim.cosine_scores_pandas, _sim.ORACLE_COSINE_SCORES)
-register(
-    "media_feature_pipeline", _mm.media_feature_summary, _mm.ORACLE_MEDIA_FEATURE_SUMMARY
-)
 register(
     "simhash_fingerprints_pandas",
     _dedup.simhash_fingerprints_pandas,
@@ -485,17 +450,6 @@ register(
     _pipe.pii_prevalence_report,
     _pipe.ORACLE_PII_PREVALENCE_REPORT,
 )
-# NEW (round 11): the raw-markup contamination gate — per-source
-# HTML/markdown/entity residue the extractor left behind (fix the
-# SOURCE)
-register(
-    "markup_density_report",
-    _web.markup_density_report,
-    _web.ORACLE_MARKUP_DENSITY_REPORT,
-)
-# NEW (round 12): the markup ACTION face — strip the residue the
-# report diagnoses (same RE_* component constants, clean_md5-verified)
-register("markup_strip", _web.markup_strip, _web.ORACLE_MARKUP_STRIP)
 # NEW (round 11): the k-anonymity ACTION face — publish the QI count
 # table with small cells suppressed into a reconciling residual row
 register(
@@ -533,12 +487,6 @@ register(
 )
 register("kmeans_assign", _pipe.kmeans_assign, _pipe.ORACLE_KMEANS_ASSIGN)
 register("tfidf_top_terms", _text.tfidf_top_terms, _text.ORACLE_TFIDF_TOP_TERMS)
-register(
-    "frame_sample_stats", _mm.frame_sample_stats, _mm.ORACLE_FRAME_SAMPLE_STATS
-)
-register(
-    "media_resize_stats", _mm.media_resize_stats, _mm.ORACLE_MEDIA_RESIZE_STATS
-)
 register("passage_dedup", _corp.passage_dedup, _corp.ORACLE_PASSAGE_DEDUP)
 # NEW (round 9): CCNet/C4-style within-source boilerplate REMOVAL with
 # verified cleaned-text reconstruction (the action passage_dedup only
@@ -610,17 +558,6 @@ register(
     _sim.ORACLE_EMBEDDING_LSH_BUCKETS,
 )
 register("embedding_near_dup", _sim.embedding_near_dup, _sim.ORACLE_EMBEDDING_NEAR_DUP)
-
-# --- Multimodal — r2/r3 green ------------------------------------------------
-register("media_byte_stats", _mm.media_byte_stats, _mm.ORACLE_MEDIA_BYTE_STATS)
-# NEW (round 11): container-vs-content gate — sniff each payload's
-# magic header against the declared modality (planted mismatches; the
-# oracle recomputes from the planting rule while Spark sniffs bytes)
-register(
-    "media_type_mismatch_report",
-    _mm.media_type_mismatch_report,
-    _mm.ORACLE_MEDIA_TYPE_MISMATCH_REPORT,
-)
 
 # --- Headline analytics (bench workload) — r2/r3 green -----------------------
 register("pricing_summary", _an.pricing_summary, _an.ORACLE_PRICING_SUMMARY)

@@ -65,19 +65,6 @@ STEDI_EVENT = T.StructType(
 # CTA transit pipeline schemas (kafka-streaming-pipeline)
 # ---------------------------------------------------------------------------
 
-#: Station arrival event (producers/models/schemas/arrival_value.json:1-14).
-ARRIVAL = T.StructType(
-    [
-        T.StructField("station_id", T.IntegerType()),
-        T.StructField("train_id", T.StringType()),
-        T.StructField("direction", T.StringType()),
-        T.StructField("line", T.StringType()),
-        T.StructField("train_status", T.StringType()),
-        T.StructField("prev_station_id", T.IntegerType(), True),
-        T.StructField("prev_direction", T.StringType(), True),
-    ]
-)
-
 #: Turnstile event — one row per rider entry
 #: (producers/models/schemas/turnstile_value.json:1-10).
 TURNSTILE = T.StructType(
@@ -131,39 +118,10 @@ TRANSFORMED_STATION = T.StructType(
 # Driver test-corpus schemas (/root/testdata — TESTDATA.md / FIXTURES.md §2)
 # ---------------------------------------------------------------------------
 
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),  # JSON {"k": int}
-    ]
-)
-
 #: Schema of the JSON payload in ``events.props``.
 EVENT_PROPS = T.StructType([T.StructField("k", T.IntegerType())])
 
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-#: All tables in the driver corpus, for the catalog loader.
+#: All tables in the test corpus.
 CORPUS_TABLES = (
     "region",
     "nation",

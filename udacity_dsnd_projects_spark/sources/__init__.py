@@ -5,4 +5,4 @@ Streaming: file-stream + rate + Kafka-gated sources (S1/S5/S6) live in
 :mod:`udacity_dsnd_projects_spark.streaming`.
 """
 
-from udacity_dsnd_projects_spark.sources.catalog import Corpus, load_table  # noqa: F401
+from udacity_dsnd_projects_spark.sources.catalog import load_table  # noqa: F401

@@ -16,8 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from udacity_dsnd_projects_spark.schemas import CORPUS_TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -66,24 +64,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 
 #: Columns known to be nano-precision timestamps in the corpus.
 _NANO_TS_COLUMNS = {"ts"}
-
-
-class Corpus:
-    """All corpus tables as lazily-constructed DataFrames.
-
-    ``Corpus(spark, sf_dir).lineitem`` etc. Also registers temp views on
-    demand via :meth:`register_views` so SQL-face queries can run.
-    """
-
-    def __init__(self, spark: SparkSession, sf_dir: str | None = None):
-        self.spark = spark
-        self.sf_dir = sf_dir or DEFAULT_SF_DIR
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name in CORPUS_TABLES:
-            return load_table(self.spark, name, self.sf_dir)
-        raise AttributeError(name)
-
-    def register_views(self, tables: tuple[str, ...] = CORPUS_TABLES) -> None:
-        for t in tables:
-            load_table(self.spark, t, self.sf_dir).createOrReplaceTempView(t)

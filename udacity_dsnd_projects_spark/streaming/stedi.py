@@ -16,46 +16,33 @@ from pyspark.sql import functions as F
 from udacity_dsnd_projects_spark.schemas import CUSTOMER_RECORD, REDIS_SERVER, STEDI_EVENT
 
 
-def parse_redis_envelope(
-    kv: DataFrame,
-    compat_first_entry_only: bool = True,
-    ts_col: str | None = None,
-) -> DataFrame:
+def parse_redis_envelope(kv: DataFrame, ts_col: str | None = None) -> DataFrame:
     """Steps 3-6 of §3.1: cast → ``from_json`` envelope → star-expand →
     ``zSetEntries[0].element`` → ``unbase64`` → parse customer JSON.
 
     ``kv`` must have a string ``value`` column holding envelope JSON
     (i.e. already cast via ``kafka_bytes_as_strings``).
 
-    ``compat_first_entry_only=True`` preserves the reference's quirk of
-    reading only the first zset entry (``sparkpykafkajoin.py:80-82``);
-    False is the idiomatic mode: explode every entry.
+    Only the first zset entry of each envelope is read, as the
+    reference does (``sparkpykafkajoin.py:80-82``, SURVEY P4): one
+    customer row per envelope.
 
     ``ts_col`` names an event-time column on ``kv`` (the Kafka message
     ``timestamp`` in production) to carry through the projection as
     ``event_ts`` — the handle the watermarked default of
     :func:`join_risk` needs to bound join state."""
     carry = [F.col(ts_col).alias("event_ts")] if ts_col else []
-    envelope = kv.withColumn("v", F.from_json(F.col("value"), REDIS_SERVER)).select(
-        "v.*", *carry
+    kept = ["event_ts"] if ts_col else []
+    return (
+        kv.withColumn("v", F.from_json(F.col("value"), REDIS_SERVER))
+        .select("v.*", *carry)
+        .select(F.col("zSetEntries")[0]["element"].alias("encodedCustomer"), *kept)
+        .withColumn(
+            "customer",
+            F.from_json(F.unbase64("encodedCustomer").cast("string"), CUSTOMER_RECORD),
+        )
+        .select("customer.*", *kept)
     )
-    if compat_first_entry_only:
-        encoded = envelope.select(
-            F.col("zSetEntries")[0]["element"].alias("encodedCustomer"),
-            *(["event_ts"] if ts_col else []),
-        )
-    else:
-        encoded = envelope.select(
-            F.explode("zSetEntries").alias("entry"),
-            *(["event_ts"] if ts_col else []),
-        ).select(
-            F.col("entry.element").alias("encodedCustomer"),
-            *(["event_ts"] if ts_col else []),
-        )
-    return encoded.withColumn(
-        "customer",
-        F.from_json(F.unbase64("encodedCustomer").cast("string"), CUSTOMER_RECORD),
-    ).select("customer.*", *(["event_ts"] if ts_col else []))
 
 
 def derive_birth_year(customers: DataFrame) -> DataFrame:
