@@ -11,7 +11,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from udacity_dsnd_projects_spark.functions import corpus as c
-from udacity_dsnd_projects_spark.operators import analytics as an
 from udacity_dsnd_projects_spark.sources.catalog import load_table
 
 
@@ -75,22 +74,6 @@ def test_embedding_centroids_match_numpy(spark, sf_dir):
             out[out["label"] == label].sort_values("dim")["c"].to_numpy()
         )
         assert np.allclose(got, want, atol=1e-5)
-
-
-def test_decile_sizes_balanced(spark, sf_dir):
-    out = an.decile_stats(spark, sf_dir).toPandas()
-    for flag, grp in out.groupby("l_returnflag"):
-        assert sorted(grp["decile"]) == list(range(1, 11))
-        assert grp["n"].max() - grp["n"].min() <= 1
-        ordered = grp.sort_values("decile")
-        # deciles partition the price axis monotonically
-        assert (ordered["min_price"].diff().dropna() >= 0).all()
-
-
-def test_iqr_outliers_sane(spark, sf_dir):
-    out = an.iqr_outliers(spark, sf_dir).toPandas()
-    assert (out["q1"] <= out["q3"]).all()
-    assert (out["n_outliers"] <= out["n_rows"]).all()
 
 
 def test_perplexity_uniform_text_is_low(spark, sf_dir):

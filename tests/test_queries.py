@@ -55,13 +55,21 @@ def test_registry_consistency():
     assert len(qs) > 0
 
 
+def _batch_queries(monkeypatch) -> tuple[str, ...]:
+    """``perfbench/batch.py`` ``QUERIES``: the queries the batch
+    benchmark times."""
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "perfbench"))
+    from batch import QUERIES
+
+    return QUERIES
+
+
 def test_batch_benchmark_queries_have_oracles(monkeypatch):
     """Every query ``perfbench --workload batch_analytics`` times is
     registered and checked against a DuckDB oracle."""
     from udacity_dsnd_projects_spark import registry
 
-    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "perfbench"))
-    from batch import QUERIES
+    QUERIES = _batch_queries(monkeypatch)
 
     qs, oracles = registry.queries(), registry.oracle_sql()
     assert [n for n in QUERIES if n not in qs] == []
@@ -92,8 +100,7 @@ def test_every_module_is_reached_by_a_pipeline_query_or_face(monkeypatch):
     without the list being updated."""
     from udacity_dsnd_projects_spark import registry
 
-    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "perfbench"))
-    from batch import QUERIES
+    QUERIES = _batch_queries(monkeypatch)
 
     pkg = PACKAGE_DIR.name
     files = {module_name(p): p for p in PACKAGE_DIR.rglob("*.py")}
@@ -121,7 +128,7 @@ def test_every_module_is_reached_by_a_pipeline_query_or_face(monkeypatch):
     assert unreached == sorted(PENDING_DELETION), "unreached: " + ", ".join(unreached)
 
 
-#: the files of the two pipelines, whose every public name must be used
+#: the files of the two pipelines
 PIPELINE_CORE = [
     *sorted((PACKAGE_DIR / "streaming").glob("*.py")),
     PACKAGE_DIR / "schemas.py",
@@ -131,24 +138,63 @@ PIPELINE_CORE = [
     PACKAGE_DIR / "operators" / "risk_join.py",
 ]
 
-#: public pipeline-core names kept although nothing reads them, each
-#: with the reason it stays
+#: modules that still register queries outside the batch benchmark, the
+#: pipeline core and the declared faces; ROADMAP item 1(c) deletes those
+#: registrations slice by slice
+PENDING_REGISTRATIONS = {
+    "functions.corpus",
+    "functions.dedup",
+    "functions.pipeline",
+    "functions.similarity",
+    "functions.text",
+    "functions.training",
+    "operators.aggregations",
+    "operators.joins",
+    "operators.skew",
+    "operators.windows",
+}
+
+
+def test_every_registration_is_benchmarked_core_or_declared(monkeypatch):
+    """A registered query stays only if the batch benchmark runs it, or
+    it lives in a pipeline-core file, a declared face or a module whose
+    registrations are pending deletion. The modules holding the other
+    registrations must be exactly the pending ones, so a new query in
+    any other module fails, and so does a pending module whose last
+    such registration goes without the list being updated."""
+    from udacity_dsnd_projects_spark import registry
+
+    QUERIES = _batch_queries(monkeypatch)
+
+    pkg = PACKAGE_DIR.name
+    kept = {module_name(p) for p in PIPELINE_CORE}
+    kept |= {f"{pkg}.{face}" for face in DECLARED_FACES}
+    pending = {
+        fn.__module__.removeprefix(f"{pkg}.")
+        for name, fn in registry.queries().items()
+        if name not in QUERIES and fn.__module__ not in kept
+    }
+    assert sorted(pending) == sorted(PENDING_REGISTRATIONS), "pending: " + ", ".join(sorted(pending))
+
+
+#: public names kept although nothing reads them, each with the reason
+#: it stays
 DECLARED_NAMES = {
     "streaming.sources.kafka_sink": "the reference's production sink "
     "(sparkpykafkajoin.py:145-152); it cannot run without a broker",
 }
 
 
-def test_every_pipeline_core_name_is_used_or_declared():
-    """A public top-level name in the pipeline core stays only if it is
-    read somewhere outside its own definition (in the package, the tests
-    or the benchmark) or is declared with a reason. The unused set must
-    be exactly the declared one, so a new dead name fails, and so does
-    a declared one that is deleted or put to use."""
+def test_every_package_name_is_used_or_declared():
+    """A public top-level name anywhere in the package stays only if it
+    is read somewhere outside its own definition (in the package, the
+    tests or the benchmark) or is declared with a reason. The unused set
+    must be exactly the declared one, so a new dead name fails, and so
+    does a declared one that is deleted or put to use."""
     pkg = PACKAGE_DIR.name
     uses = name_uses()
     unused = []
-    for path in PIPELINE_CORE:
+    for path in sorted(PACKAGE_DIR.rglob("*.py")):
         for name, node in public_definitions(path).items():
             outside = [
                 (p, line)

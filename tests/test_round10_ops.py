@@ -482,8 +482,8 @@ def test_every_registry_query_survives_a_degenerate_warehouse(
     exist but hold zero rows (the state a 100 TB pipeline hits
     whenever a filter gate, a new shard, or a fresh incremental run
     produces nothing) or exactly one row (the all-identical /
-    no-matching-join-partner / zero-denominator class — how the
-    funnel_conversion divide-by-zero and the m==1 EMD bugs were
+    no-matching-join-partner / zero-denominator class — how a
+    divide-by-zero in a funnel query and the m==1 EMD bug were
     found). No exceptions allowed; results are empty or degenerate but
     always well-typed. Future operators get both checks for free."""
     import tempfile

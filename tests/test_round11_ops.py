@@ -246,34 +246,6 @@ def test_k_anonymize_release_reconciles_and_suppresses(spark, sf_dir):
     assert sum(r.n_rows for r in rel) == cust.count()
 
 
-def test_cusum_flags_level_shift_not_stationary_series(spark):
-    """A planted level shift (10/day for 10 days, then 30/day) must
-    flag with its peak at the shift boundary; a stationary alternating
-    series must not flag; a one-day type emits NULL stat, flag 0."""
-    import datetime as dt
-
-    from udacity_dsnd_projects_spark.operators.analytics import (
-        CUSUM_KS,
-        cusum_changepoints,
-    )
-
-    def day(i):
-        return dt.date(2024, 1, i)
-
-    rows = [("shift", day(i), 10 if i <= 10 else 30) for i in range(1, 21)]
-    rows += [("flat", day(i), 10 + (i % 2)) for i in range(1, 21)]
-    rows += [("oneday", day(1), 7)]
-    daily = spark.createDataFrame(rows, ["event_type", "d", "n_events"])
-    got = {r.event_type: r for r in cusum_changepoints(daily).collect()}
-    assert got["shift"].is_change == 1
-    assert got["shift"].cusum_stat >= CUSUM_KS
-    assert got["shift"].peak_day == "2024-01-10"  # last pre-shift day
-    assert got["flat"].is_change == 0
-    assert got["flat"].cusum_stat < CUSUM_KS
-    assert got["oneday"].cusum_stat is None
-    assert got["oneday"].peak_day is None and got["oneday"].is_change == 0
-
-
 def test_ivf_probe_sweep_monotone_and_consistent(spark, sf_dir):
     """Deeper probing can only add candidates, so both the scan cost
     and the recall are non-decreasing in depth; the deepest row must

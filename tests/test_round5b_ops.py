@@ -107,33 +107,6 @@ def test_knn_graph_window_group_limit_pushdown(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# nation_trade_volume (TPC-H Q7 shape)
-# --------------------------------------------------------------------------
-def test_nation_trade_volume_plan(spark, sf_dir):
-    """Nation dims must broadcast; the shipdate filter must reach the
-    lineitem parquet scan as a pushed filter."""
-    from udacity_dsnd_projects_spark.operators import analytics as an
-
-    q = an.nation_trade_volume(spark, sf_dir)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    scan = q._jdf.queryExecution().sparkPlan().toString()
-    assert "l_shipdate" in scan and "PushedFilters" in scan, scan
-
-
-def test_nation_trade_volume_bounds(spark, sf_dir):
-    from udacity_dsnd_projects_spark.operators import analytics as an
-
-    rows = an.nation_trade_volume(spark, sf_dir).collect()
-    assert rows
-    years = {r["ship_year"] for r in rows}
-    assert years <= {1996, 1997}
-    # output is metadata-sized: nations² × years at most
-    assert len(rows) <= 25 * 25 * 2
-    assert all(r["volume"] > 0 and r["n_lines"] > 0 for r in rows)
-
-
-# --------------------------------------------------------------------------
 # pack_efficiency
 # --------------------------------------------------------------------------
 def test_pack_efficiency_consistent_with_bins(spark, sf_dir):
@@ -213,15 +186,3 @@ def test_ann_recall_matches_set_intersection(spark, sf_dir):
         assert rep[q]["n_hits"] == n
         assert abs(rep[q]["recall"] - n / sim.TOP_K) < 1e-9
         assert 0.0 <= rep[q]["recall"] <= 1.0
-
-
-def test_late_order_priorities_semi_join_plan(spark, sf_dir):
-    """The EXISTS must plan as a LEFT SEMI join (probe side dedups per
-    key inside the join — no distinct-after-join blowup)."""
-    from udacity_dsnd_projects_spark.operators import analytics as an
-
-    q = an.late_order_priorities(spark, sf_dir)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, plan
-    rows = q.collect()
-    assert rows and all(r["n_late_orders"] > 0 for r in rows)

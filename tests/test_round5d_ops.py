@@ -1,6 +1,6 @@
 """Round-5 fifth batch (training + extras): plan properties and edge
-semantics for the sliding-window chunker, the curriculum scheduler,
-the skew profile and exact quantiles. Value correctness is covered by
+semantics for the sliding-window chunker, the curriculum scheduler
+and the skew profile. Value correctness is covered by
 tests/test_queries.py's oracle replica; these tests pin the SCALE
 properties (single scans, no stray shuffles or global sorts)."""
 
@@ -126,32 +126,3 @@ def test_skew_profile_is_take_ordered_over_key_frame(spark, sf_dir):
     # shares are a probability mass subset; ratios positive
     assert all(0 < r.row_share <= 1 and r.skew_ratio > 0 for r in rows)
     assert sum(r.row_share for r in rows) <= 1.0 + 1e-9
-
-
-def test_exact_quantiles_match_bruteforce_rank_definition(spark, sf_dir):
-    import math
-
-    from udacity_dsnd_projects_spark.operators.analytics import QUANTILE_PROBES
-    from udacity_dsnd_projects_spark.sources.catalog import load_table
-
-    got = {
-        r.quantile: r.value
-        for r in registry.queries()["exact_quantiles"](spark, sf_dir).collect()
-    }
-    vals = sorted(
-        (r.l_extendedprice, r.l_orderkey, r.l_linenumber)
-        for r in load_table(spark, "lineitem", sf_dir)
-        .select("l_extendedprice", "l_orderkey", "l_linenumber")
-        .collect()
-    )
-    n = len(vals)
-    for q in QUANTILE_PROBES:
-        assert got[q] == vals[math.ceil(q * n) - 1][0], q
-
-
-def test_exact_quantiles_never_global_sorts(spark, sf_dir):
-    # the rank primitive must keep the total order distributed: a
-    # single-task global sort would appear as a rangepartitioning
-    # exchange — assert it never does
-    plan = _plan(spark, sf_dir, "exact_quantiles")
-    assert "rangepartitioning" not in plan

@@ -1,5 +1,5 @@
 """Round-6 second-wave operators: MinHash calibration, snapshot n-gram
-novelty, tokenizer fertility, market basket, daily volume anomaly.
+novelty, tokenizer fertility.
 
 Oracle equality runs via the registry parameterization in
 tests/test_queries.py; these tests pin the oracle-independent
@@ -17,12 +17,6 @@ from udacity_dsnd_projects_spark.functions.dedup import (
     ngram_novelty,
 )
 from udacity_dsnd_projects_spark.functions.text import tokenizer_fertility
-from udacity_dsnd_projects_spark.operators.analytics import (
-    ANOMALY_Z,
-    BASKET_TOP_K,
-    daily_type_anomaly,
-    market_basket_pairs,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -94,57 +88,3 @@ def test_fertility_invariants(spark):
         assert r.n_bytes >= r.n_chars
         assert r.bytes_per_token >= r.chars_per_token
         assert r.n_docs > 0 and r.n_tokens > 0
-
-
-# --- market_basket_pairs ---------------------------------------------------
-def test_basket_pairs_shape_and_ratios(spark):
-    df = market_basket_pairs(spark, SF)
-    rows = df.collect()
-    assert 0 < len(rows) <= BASKET_TOP_K
-    for r in rows:
-        assert r.part_a < r.part_b
-        assert 0.0 < r.support <= 1.0
-        assert 0.0 < r.conf_a_b <= 1.0
-        assert 0.0 < r.conf_b_a <= 1.0
-        assert r.lift > 0.0
-        # conf = support / P(a): conf >= support always
-        assert r.conf_a_b >= r.support - 1e-9
-        assert r.conf_b_a >= r.support - 1e-9
-
-
-def test_basket_pairs_plan_takeordered_no_pair_selfjoin(spark):
-    """The top-K must lower to TakeOrderedAndProject (no global
-    single-partition window sort) and pair expansion must be the
-    row-local array combinator (no lineitem self-join BEFORE the
-    take: the only joins allowed are the K-row broadcasts after)."""
-    plan = market_basket_pairs(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan  # all joins are K-row broadcasts
-
-
-# --- daily_type_anomaly ----------------------------------------------------
-def test_anomaly_flags_and_null_rule(spark):
-    df = daily_type_anomaly(spark, SF)
-    rows = df.collect()
-    assert rows
-    types = {r.event_type for r in rows}
-    days = {r.day for r in rows}
-    # the (type x day) frame is dense enough to be a real monitor
-    assert len(types) >= 2 and len(days) >= 2
-    for r in rows:
-        assert r.is_anomaly in (0, 1)
-        if r.zscore is None:
-            assert r.is_anomaly == 0
-        elif abs(r.zscore) >= ANOMALY_Z:
-            assert r.is_anomaly == 1
-        else:
-            assert r.is_anomaly == 0
-
-
-def test_anomaly_zscores_center_per_type(spark):
-    """Within each event type the z-scores must average ~0 — the
-    definition of standardization (catches a mean/std mixup)."""
-    df = daily_type_anomaly(spark, SF).filter(F.col("zscore").isNotNull())
-    for r in df.groupBy("event_type").agg(F.avg("zscore").alias("m")).collect():
-        assert abs(r.m) < 0.05

@@ -48,122 +48,6 @@ def test_write_chunks_orders_by_name_and_mtime(spark, sf_dir, tmp_path):
     assert all(hi <= lo for hi, lo in zip(maxes, mins[1:]))
 
 
-# --- exact_multi_rank: fused multi-column ranking --------------------------
-
-
-def test_exact_multi_rank_matches_window_functions(spark):
-    """The fused primitive must reproduce row_number() bit-for-bit on
-    every spec simultaneously — heavy duplicate values, mixed
-    ascending/descending specs, a constant column (ranks fall back to
-    the tiebreak), across bucket counts that force multi-bucket
-    splits — and rank an empty frame cleanly."""
-    import random
-
-    from pyspark.sql import Window
-
-    from udacity_dsnd_projects_spark.operators.ranks import exact_multi_rank
-
-    schema = "a double, b double, c double, id long"
-    assert (
-        exact_multi_rank(
-            spark.createDataFrame([], schema),
-            [("a", False, "ra")],
-            ["id"],
-        ).count()
-        == 0
-    )
-
-    rng = random.Random(20260814)
-    rows = [
-        (
-            float(rng.choice([1, 1, 2, 5, 5, 5, 9, 100])),  # heavy ties
-            float(rng.randint(0, 9)),
-            7.0,  # constant: pure tiebreak ordering
-            i,
-        )
-        for i in range(300)
-    ]
-    df = spark.createDataFrame(rows, schema)
-    specs = [("a", False, "ra"), ("b", True, "rb"), ("c", True, "rc")]
-    for n_buckets in (2, 7, 64):
-        got = exact_multi_rank(
-            df, specs, ["id"], n_buckets=n_buckets, count_col="n"
-        )
-        want = df
-        for col, desc, rk in specs:
-            order = [F.col(col).desc() if desc else F.col(col).asc(), "id"]
-            want = want.withColumn(
-                rk,
-                F.row_number().over(Window.orderBy(*order)).cast("long"),
-            )
-        want = want.withColumn("n", F.lit(300).cast("long"))
-        assert set(map(tuple, got.collect())) == set(
-            map(tuple, want.collect())
-        ), n_buckets
-
-
-def test_exact_multi_rank_rejects_duplicate_specs(spark):
-    """Duplicate order columns (double-registering with Bucketizer) or
-    duplicate rank names (silent overwrite) must fail loudly."""
-    from udacity_dsnd_projects_spark.operators.ranks import exact_multi_rank
-
-    df = spark.createDataFrame([(1.0, 1)], "a double, id long")
-    with pytest.raises(ValueError, match="duplicate order_col"):
-        exact_multi_rank(df, [("a", False, "r1"), ("a", True, "r2")], ["id"])
-    df2 = spark.createDataFrame([(1.0, 2.0, 1)], "a double, b double, id long")
-    with pytest.raises(ValueError, match="duplicate rank_col"):
-        exact_multi_rank(df2, [("a", False, "r"), ("b", True, "r")], ["id"])
-
-
-def test_exact_multi_rank_grouped_matches_window_functions(spark):
-    """The grouped form must reproduce partitioned row_number() on
-    every spec simultaneously — NULL group keys included (the offset
-    join-back is null-safe), with the group count carried once."""
-    import random
-
-    from pyspark.sql import Window
-
-    from udacity_dsnd_projects_spark.operators.ranks import exact_multi_rank
-
-    rng = random.Random(20260814)
-    groups = ["a", "b", None, "c"]
-    rows = [
-        (
-            rng.choice(groups),
-            float(rng.choice([1, 1, 2, 5, 5, 5, 9, 100])),
-            float(rng.randint(0, 9)),
-            i,
-        )
-        for i in range(300)
-    ] + [("solo", 42.0, 1.0, 999)]  # single-element group
-    df = spark.createDataFrame(rows, "g string, v double, u double, id long")
-    specs = [("v", False, "rv"), ("u", True, "ru")]
-    for n_buckets in (2, 7, 64):
-        got = exact_multi_rank(
-            df,
-            specs,
-            ["id"],
-            group_cols=["g"],
-            n_buckets=n_buckets,
-            count_col="n",
-        )
-        want = df
-        for col, desc, rk in specs:
-            order = [F.col(col).desc() if desc else F.col(col).asc(), "id"]
-            want = want.withColumn(
-                rk,
-                F.row_number()
-                .over(Window.partitionBy("g").orderBy(*order))
-                .cast("long"),
-            )
-        want = want.withColumn(
-            "n", F.count(F.lit(1)).over(Window.partitionBy("g")).cast("long")
-        )
-        assert set(map(tuple, got.collect())) == set(
-            map(tuple, want.collect())
-        ), n_buckets
-
-
 # --- observe-based quality metrics -----------------------------------------
 
 

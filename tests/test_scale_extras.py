@@ -124,20 +124,6 @@ def _win_specs(df) -> list[str]:
     return re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
 
 
-def test_decile_stats_windows_are_bucket_partitioned(spark, sf_dir):
-    """decile_stats must not sort the fact table through a window
-    partitioned only by the 3-value return flag (ntile's shape): every
-    window in the plan must partition by (group, __rank_bkt) so the
-    sort spreads over groups x buckets tasks."""
-    from udacity_dsnd_projects_spark.operators import analytics as an
-
-    df = an.decile_stats(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ntile" not in plan, plan
-    specs = _win_specs(df)
-    assert specs and all("__rank_bkt" in s for s in specs), specs
-
-
 def test_lang_zscore_plan_has_no_stratum_window(spark, sf_dir):
     """The moments must come from groupBy + broadcast join, not a
     lang-partitioned window (few strata = few tasks carrying every

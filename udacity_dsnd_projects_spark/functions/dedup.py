@@ -1296,10 +1296,6 @@ WHERE p.common * 1.0 / LEAST(sa.n, sb.n) >= {CONTAINMENT_THRESHOLD}
 # --------------------------------------------------------------------------
 # MinHash calibration + snapshot n-gram novelty (round 6)
 # --------------------------------------------------------------------------
-#: Width of the est_jaccard buckets in the calibration report. est is
-#: a multiple of 1/NUM_PERM (binary-exact in double), so est*10 and
-#: its floor are bit-identical across engines.
-CALIBRATION_BIN = 0.1
 
 
 def minhash_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1347,6 +1343,8 @@ def minhash_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect("sha", "shb"))
     exact = inter / (F.size("sha") + F.size("shb") - inter)
     ex = j.select(
+        # 0.1-wide buckets: est is a multiple of 1/NUM_PERM (binary-exact
+        # in double), so est*10 and its floor agree across engines
         F.round(F.floor(F.col("est_jaccard") * 10) / 10, 1).alias("est_bin"),
         F.col("est_jaccard").cast("decimal(30,10)").alias("e"),
         F.round(exact, 8).cast("decimal(30,10)").alias("x"),

@@ -1400,9 +1400,8 @@ def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts by construction (±1), but training-step wall-clock follows
     TOKEN mass — a shard that drew the long-document tail is the
     epoch's straggler, and this is the gate that catches it before a
-    1000-GPU job does. The companion of :func:`pack_efficiency` (which
-    grades packing within a shard) and ``skew_profile`` (which grades
-    join keys).
+    1000-GPU job does. The companion of :func:`pack_efficiency`, which
+    grades packing within a shard.
 
     Scale shape: ONE documents scan — the token/char payload rides the
     shared :func:`_shard_ranked` derivation (payload columns carry

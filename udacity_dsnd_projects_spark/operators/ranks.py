@@ -44,7 +44,6 @@ def _join_offsets(
     bucketed: DataFrame,
     offsets: DataFrame,
     group_cols: list[str],
-    bkt_col: str = _BKT,
 ) -> DataFrame:
     """Broadcast-join the driver-built offsets frame back onto the
     bucketed rows, null-safely on the group columns: a NULL group-key
@@ -55,13 +54,13 @@ def _join_offsets(
     are untouched."""
     off = offsets.select(
         *[F.col(c).alias(f"__g{i}") for i, c in enumerate(group_cols)],
-        F.col(bkt_col).alias("__obkt"),
-        *[c for c in offsets.columns if c not in (*group_cols, bkt_col)],
+        F.col(_BKT).alias("__obkt"),
+        *[c for c in offsets.columns if c not in (*group_cols, _BKT)],
     )
     cond = functools.reduce(
         operator.and_,
         [bucketed[c].eqNullSafe(off[f"__g{i}"]) for i, c in enumerate(group_cols)]
-        + [bucketed[bkt_col] == off["__obkt"]],
+        + [bucketed[_BKT] == off["__obkt"]],
     )
     return bucketed.join(F.broadcast(off), cond).drop(
         "__obkt", *[f"__g{i}" for i in range(len(group_cols))]
@@ -258,188 +257,6 @@ def exact_group_rank(
     if count_col is not None:
         out = out.withColumn(count_col, F.col("__n"))
     return out.drop(_BKT, "__off", "__n")
-
-
-def exact_multi_rank(
-    df: DataFrame,
-    specs: list[tuple[str, bool, str]],
-    tiebreak_cols: list[str],
-    *,
-    group_cols: list[str] | None = None,
-    n_buckets: int = 64,
-    relative_error: float | None = None,
-    count_col: str | None = None,
-    bounds: dict[str, list[float]] | None = None,
-) -> DataFrame:
-    """``df`` plus one exact rank column PER spec — the fused form of N
-    :func:`exact_group_rank` calls over the SAME frame (``specs`` =
-    [(order_col, descending, rank_col), ...], each ranked within
-    ``group_cols`` under ``(order_col [DESC], *tiebreak_cols ASC)``).
-
-    Why fuse: N separate calls cost N sketch scans + N count scans +
-    N windows, and force the caller to checkpoint between calls
-    because each call re-scans its input (an un-checkpointed pass-1
-    plan re-executes ~3× inside pass 2's scans). Ranking the same
-    frame on N columns needs only:
-
-    1. ONE sketch pass — ``approxQuantile`` accepts a column list and
-       sketches them all in a single scan;
-    2. ONE count pass — ``GROUPING SETS ((*g, b1), ..., (*g, bN))``
-       over the N bucket columns returns every per-spec (group,
-       bucket) histogram in a single scan (groups × N × n_buckets
-       rows to the driver — metadata at any scale);
-    3. N parallel windows in ONE composed plan: ungrouped, each bucket
-       column's start offsets become a 64-entry LITERAL map lookup
-       (pure expression — no join at all); grouped, each spec
-       broadcast-joins its metadata-sized offsets frame back
-       null-safely, exactly like :func:`exact_group_rank`. Either
-       way the windows chain over a single scan of the input with
-       nothing re-executed.
-
-    Exactness is per-spec identical to :func:`exact_group_rank`
-    (bucket boundaries are sketched globally in both; they only
-    affect balance, never order). ``count_col``, if given, carries
-    the group row count (spec-independent). The caller should still
-    persist ``df`` if it is expensive — the fused form scans it three
-    times total (sketch, counts, final) instead of 3N.
-    """
-    group_cols = list(group_cols or [])
-
-    # The scratch columns THIS function creates are __n/__off and the
-    # per-spec bucket columns f"{_BKT}{i}" — guard the actual names
-    # (prefix-matched, so any spec count is covered): a colliding
-    # rank_col would overwrite its own bucket column and then be
-    # dropped with the scratch, silently yielding no rank at all.
-    def _reserved(name: str) -> bool:
-        return name in ("__n", "__off") or name.startswith(_BKT)
-
-    for _, _, rc in specs:
-        if _reserved(rc):
-            raise ValueError(
-                f"rank_col {rc!r} collides with reserved internal names "
-                f"(__n, __off, {_BKT}*)"
-            )
-    if count_col is not None and _reserved(count_col):
-        raise ValueError(
-            f"count_col {count_col!r} collides with reserved internal names "
-            f"(__n, __off, {_BKT}*)"
-        )
-    # contract checks, not debug asserts: a duplicated order column
-    # would double-register with Bucketizer, and a duplicated rank_col
-    # would silently overwrite a prior spec's output
-    if len({c for c, _, _ in specs}) != len(specs):
-        raise ValueError(
-            "duplicate order_col across specs — rank the column once and "
-            "derive the reversed rank as (group count + 1 - rank)"
-        )
-    if len({rc for _, _, rc in specs}) != len(specs):
-        raise ValueError("duplicate rank_col across specs")
-
-    from pyspark.ml.feature import Bucketizer
-
-    order_cols = [c for c, _, _ in specs]
-    if bounds is not None and all(c in bounds for c in order_cols):
-        # precomputed (e.g. checkpoint_with_sketch) — skip the sketch
-        # scan entirely; boundaries only affect balance, never order
-        all_bounds = [bounds[c] for c in order_cols]
-    else:
-        err = (
-            relative_error if relative_error is not None else 1.0 / (4 * n_buckets)
-        )
-        probs = [i / n_buckets for i in range(1, n_buckets)]
-        all_bounds = df.stat.approxQuantile(order_cols, probs, err)  # one scan
-    bkt_cols = [f"{_BKT}{i}" for i in range(len(specs))]
-    bucketed = Bucketizer(
-        splitsArray=[_splits(b) for b in all_bounds],
-        inputCols=order_cols,
-        outputCols=bkt_cols,
-        handleInvalid="error",
-    ).transform(df)
-
-    # every per-spec (group, bucket) histogram in one scan; grouping()
-    # flags say which spec each output row belongs to
-    marginals = (
-        bucketed.groupingSets(
-            [[*group_cols, c] for c in bkt_cols], *group_cols, *bkt_cols
-        )
-        .agg(
-            F.count(F.lit(1)).alias("__c"),
-            *[F.grouping(c).alias(f"__is{i}") for i, c in enumerate(bkt_cols)],
-        )
-        .collect()
-    )
-    # spec index -> group key -> [(bucket, count)]
-    per_spec: dict[int, dict[tuple, list[tuple[float, int]]]] = {
-        i: {} for i in range(len(specs))
-    }
-    for r in marginals:
-        i = next(j for j in range(len(specs)) if r[f"__is{j}"] == 0)
-        key = tuple(r[c] for c in group_cols)
-        per_spec[i].setdefault(key, []).append((r[bkt_cols[i]], r["__c"]))
-
-    out = bucketed
-    total0 = 0  # ungrouped row count, from spec 0's histogram
-    for i, (order_col, descending, rank_col) in enumerate(specs):
-        order = [
-            F.col(order_col).desc() if descending else F.col(order_col).asc()
-        ] + [F.col(c).asc() for c in tiebreak_cols]
-        w = Window.partitionBy(*group_cols, bkt_cols[i]).orderBy(*order)
-        # only spec 0's offsets carry the group count (it is
-        # spec-independent); the column itself is appended AFTER the
-        # loop so count_col lands last, like exact_group_rank's
-        want_n = count_col is not None and i == 0
-        if not group_cols:
-            buckets = sorted(
-                per_spec[i].get((), []), key=lambda t: t[0], reverse=descending
-            )
-            entries: list[F.Column] = []
-            acc = 0
-            for bkt, c in buckets:
-                entries += [F.lit(float(bkt)), F.lit(acc)]
-                acc += c
-            if i == 0:
-                total0 = acc
-            # 64-entry literal map: bucket id -> offset of its 1st row
-            off = (
-                F.create_map(*entries)[F.col(bkt_cols[i])]
-                if entries
-                else F.lit(0)
-            )
-            out = out.withColumn(
-                rank_col, (off + F.row_number().over(w)).cast("long")
-            )
-        else:
-            rows = []
-            for key, buckets in per_spec[i].items():
-                buckets.sort(key=lambda t: t[0], reverse=descending)
-                total = sum(c for _, c in buckets)
-                acc = 0
-                for bkt, c in buckets:
-                    row = (*key, float(bkt), acc) + ((total,) if want_n else ())
-                    rows.append(row)
-                    acc += c
-            schema = T.StructType(
-                [df.schema[c] for c in group_cols]
-                + [
-                    T.StructField(bkt_cols[i], T.DoubleType()),
-                    T.StructField("__off", T.LongType()),
-                ]
-                + ([T.StructField("__n", T.LongType())] if want_n else [])
-            )
-            offsets = local_frame(df.sparkSession, rows, schema)
-            out = _join_offsets(out, offsets, group_cols, bkt_col=bkt_cols[i])
-            out = out.withColumn(
-                rank_col, (F.col("__off") + F.row_number().over(w)).cast("long")
-            ).drop("__off")
-    out = out.drop(*bkt_cols)
-    if count_col is not None:
-        if not group_cols:
-            out = out.withColumn(count_col, F.lit(total0).cast("long"))
-        else:
-            out = out.withColumn(count_col, F.col("__n").cast("long")).drop(
-                "__n"
-            )
-    return out
 
 
 def exact_group_cumsum(

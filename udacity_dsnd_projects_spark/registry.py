@@ -94,13 +94,8 @@ register(
     _sim.ORACLE_IVF_STALENESS_REPORT,
 )
 # NEW (round 6): the exported char-bigram LM (train/score
-# decomposition of perplexity_score); Markov event-transition rollup
+# decomposition of perplexity_score)
 register("char_bigram_lm", _text.char_bigram_lm, _text.ORACLE_CHAR_BIGRAM_LM)
-register(
-    "event_transition_matrix",
-    _an.event_transition_matrix,
-    _an.ORACLE_EVENT_TRANSITION_MATRIX,
-)
 # NEW (round 6): tokenizer-induction pair counts; split-contamination
 # report over the LSH pair substrate
 register("bpe_pair_counts", _text.bpe_pair_counts, _text.ORACLE_BPE_PAIR_COUNTS)
@@ -261,46 +256,12 @@ register(
     _text.tokenizer_fertility,
     _text.ORACLE_TOKENIZER_FERTILITY,
 )
-register(
-    "market_basket_pairs",
-    _an.market_basket_pairs,
-    _an.ORACLE_MARKET_BASKET_PAIRS,
-)
-register(
-    "daily_type_anomaly",
-    _an.daily_type_anomaly,
-    _an.ORACLE_DAILY_TYPE_ANOMALY,
-)
 # NEW (round 11): the probe-depth tuning curve over the IVF index —
 # recall vs candidate-scan cost at hamming depth 0..PROBE_HAMMING
 register(
     "ivf_probe_sweep",
     _sim.ivf_probe_sweep,
     _sim.ORACLE_IVF_PROBE_SWEEP,
-)
-# NEW (round 11): the sequential companion — CUSUM level-shift screen
-# per event type (exact-integer S_t numerator; KS-scaled flag)
-register(
-    "cusum_changepoint_report",
-    _an.cusum_changepoint_report,
-    _an.ORACLE_CUSUM_CHANGEPOINT_REPORT,
-)
-# NEW (round 6, third wave): per-type OLS trend
-register(
-    "value_trend_by_type",
-    _an.value_trend_by_type,
-    _an.ORACLE_VALUE_TREND_BY_TYPE,
-)
-register(
-    "session_path_topk",
-    _an.session_path_topk,
-    _an.ORACLE_SESSION_PATH_TOPK,
-)
-register("customer_rfm", _an.customer_rfm, _an.ORACLE_CUSTOMER_RFM)
-register(
-    "ship_latency_quantiles",
-    _an.ship_latency_quantiles,
-    _an.ORACLE_SHIP_LATENCY_QUANTILES,
 )
 register(
     "label_separation_report",
@@ -313,22 +274,9 @@ register(
     _dedup.ORACLE_DEDUP_METHOD_AGREEMENT,
 )
 register(
-    "nation_supplier_hhi",
-    _an.nation_supplier_hhi,
-    _an.ORACLE_NATION_SUPPLIER_HHI,
-)
-register("dow_seasonality", _an.dow_seasonality, _an.ORACLE_DOW_SEASONALITY)
-register(
-    "user_type_entropy", _an.user_type_entropy, _an.ORACLE_USER_TYPE_ENTROPY
-)
-register(
     "quantization_error_report",
     _sim.quantization_error_report,
     _sim.ORACLE_QUANTIZATION_ERROR_REPORT,
-)
-# NEW: TPC-H Q7-shape bilateral trade rollup (widest relational join tree)
-register(
-    "nation_trade_volume", _an.nation_trade_volume, _an.ORACLE_NATION_TRADE_VOLUME
 )
 # NEW: packing-budget fill/overflow accounting
 register("pack_efficiency", _pipe.pack_efficiency, _pipe.ORACLE_PACK_EFFICIENCY)
@@ -347,12 +295,6 @@ register(
     "ann_probe_agreement",
     _sim.ann_probe_agreement,
     _sim.ORACLE_ANN_PROBE_AGREEMENT,
-)
-# NEW: TPC-H Q4-shape EXISTS/semi-join aggregate
-register(
-    "late_order_priorities",
-    _an.late_order_priorities,
-    _an.ORACLE_LATE_ORDER_PRIORITIES,
 )
 # NEW (batch 4): clustering health report
 register("cluster_quality", _pipe.cluster_quality, _pipe.ORACLE_CLUSTER_QUALITY)
@@ -380,7 +322,6 @@ register(  # applyInPandas grouped-map face, asserted-identical -> same oracle
 register("trade_pagerank", _graph.trade_pagerank, _graph.ORACLE_TRADE_PAGERANK)
 # ranks.py offset join-back made null-safe this round — every
 # exact_group_rank / exact_group_cumsum caller re-verifies:
-register("decile_stats", _an.decile_stats, _an.ORACLE_DECILE_STATS)
 register("seq_pack_bins", _pipe.seq_pack_bins, _pipe.ORACLE_SEQ_PACK_BINS)
 register("seq_pack_concat", _pipe.seq_pack_concat, _pipe.ORACLE_SEQ_PACK_CONCAT)
 register("shard_assign", _pipe.shard_assign, _pipe.ORACLE_SHARD_ASSIGN)
@@ -402,12 +343,10 @@ register(
 )
 register("skew_profile", _skew.skew_profile, _skew.ORACLE_SKEW_PROFILE)
 register("unpivot_agg", _agg.unpivot_agg, _agg.ORACLE_UNPIVOT_AGG)
-register("exact_quantiles", _an.exact_quantiles, _an.ORACLE_EXACT_QUANTILES)
 register(
     "grouping_sets_agg", _agg.grouping_sets_agg, _agg.ORACLE_GROUPING_SETS_AGG
 )
 register("timestamp_convert", _scalar.timestamp_convert, _scalar.ORACLE_TIMESTAMP_CONVERT)
-register("rolling_avg_24h", _an.rolling_avg_24h, _an.ORACLE_ROLLING_AVG_24H)
 register("cosine_scores_pandas", _sim.cosine_scores_pandas, _sim.ORACLE_COSINE_SCORES)
 register(
     "simhash_fingerprints_pandas",
@@ -424,13 +363,8 @@ register("embedding_quantize", _sim.embedding_quantize, _sim.ORACLE_EMBEDDING_QU
 register(
     "salted_supplier_rollup", _skew.salted_supplier_rollup, _skew.ORACLE_SALTED_SUPPLIER_ROLLUP
 )
-register(
-    "decayed_user_score", _an.decayed_user_score, _an.ORACLE_DECAYED_USER_SCORE
-)
 register("hourly_event_rollup", _an.hourly_event_rollup, _an.ORACLE_HOURLY_EVENT_ROLLUP)
 register("sessionize", _win.sessionize, _win.ORACLE_SESSIONIZE)
-register("funnel_conversion", _an.funnel_conversion, _an.ORACLE_FUNNEL_CONVERSION)
-register("weekly_retention", _an.weekly_retention, _an.ORACLE_WEEKLY_RETENTION)
 register("repetition_score", _pipe.repetition_score, _pipe.ORACLE_REPETITION_SCORE)
 
 register(
@@ -513,7 +447,6 @@ register(
     _joins.ORACLE_INTERVAL_COUNT_JOIN,
 )
 register("risk_join", _risk.risk_join, _risk.ORACLE_RISK_JOIN)
-register("iqr_outliers", _an.iqr_outliers, _an.ORACLE_IQR_OUTLIERS)
 register("price_histogram", _agg.price_histogram, _agg.ORACLE_PRICE_HISTOGRAM)
 register("corr_panel", _agg.corr_panel, _agg.ORACLE_CORR_PANEL)
 register("scd2_history", _win.scd2_history, _win.ORACLE_SCD2_HISTORY)

@@ -4,10 +4,12 @@ The reference subscribes to Kafka topics with earliest offsets
 (``sparkpykafkajoin.py:61-67``: ``readStream.format("kafka")
 .option("subscribe", t).option("startingOffsets", "earliest")``) and
 fans in per-station topics by regex (``consumers/server.py:76-80``).
-Here the Kafka path is real code but optional (no broker in the test
-env — SURVEY.md §7 phase 2); file streams with explicit schemas are the
-test-time source, semantically equivalent w.r.t. T1 replay (a file
-stream always starts from the beginning, which IS earliest offsets).
+Here the Kafka path is real code, gated by :func:`have_kafka`
+(SURVEY.md §7 phase 2). Where no broker answers, file streams with
+explicit schemas stand in for it: the tests and ``perfbench`` run both
+pipelines on :func:`file_stream`, which is equivalent for T1 replay (a
+file stream always starts from the beginning, which IS earliest
+offsets).
 """
 
 from __future__ import annotations

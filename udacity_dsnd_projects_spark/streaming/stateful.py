@@ -312,9 +312,9 @@ def gap_fill_stateful(events: DataFrame) -> DataFrame:
 
 
 def transition_stateful(events: DataFrame) -> DataFrame:
-    """Streaming face of
-    :func:`~udacity_dsnd_projects_spark.operators.analytics.event_transition_matrix`:
-    per-user (prev_type → next_type) transitions as incremental state.
+    """Streaming per-user event-transition extraction: the
+    (prev_type → next_type) pairs a batch ``lag(event_type)`` over
+    ``(ts, event_id)`` per user yields, as incremental state.
     Per key the state is (last_ts, last_type, late_count) — the
     frontier event time and type plus the cumulative dropped-late-row
     counter; each micro-batch sorts its rows once by (ts, event_id),
